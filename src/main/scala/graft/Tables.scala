@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
 /** Parquet table catalog over a scale-factor directory (TESTDATA.md).
   *
-  * All readers are plain `spark.read.parquet` so Catalyst's vectorized
-  * Parquet scan, predicate pushdown, and column pruning apply. At 100 TB
+  * Every parquet read in the engine goes through [[parquet]]: a plain
+  * parquet scan (vectorized reader, predicate pushdown, column pruning)
+  * whose schema comes from one footer read on the driver. At 100 TB
   * the same code path works: Parquet footers give row-group stats, and
   * `spark.sql.files.maxPartitionBytes` controls split granularity — no
   * code change needed between local[32] and a 1000-executor cluster.
@@ -41,9 +44,64 @@ object Tables {
       jdbcRead(spark, url, name)
     } else {
       logSourceOnce(s"parquet under scale-factor dirs (e.g. $dir)")
-      spark.read.parquet(s"$dir/$name.parquet")
+      parquet(spark, s"$dir/$name.parquet")
     }
   }
+
+  /** `spark.read.parquet(paths: _*)` without the schema-inference job.
+    * Spark infers a non-merged parquet schema from one footer, but reads
+    * it inside a `parallelize(...).collect()` job — a fixed ~100 ms
+    * driver round-trip on every read. Here the paths (globs allowed)
+    * are listed only up to the first data file, skipping `_*`/`.*`
+    * names as Spark's file index does; that file's footer is read on
+    * the driver and converted by Spark's own footer conversion, and the
+    * read is handed that schema. Spark, too, assumes every file of a
+    * non-merged read shares the first one's schema. Partition columns
+    * are not in the footer, so the read infers them from the directory
+    * names as before. The plain read runs when no data file is found,
+    * so Spark's own error for a missing or empty path is unchanged, and
+    * in a session that merges parquet schemas, where one footer is not
+    * what Spark would infer. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None
+      else paths.iterator.flatMap { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        Option(fs.globStatus(path)).iterator.flatten
+          .flatMap(firstDataFile(fs, _))
+      }.nextOption()
+    first match {
+      case Some(f) =>
+        spark.read.schema(GraftParquetBridge.footerSchema(spark, f, conf))
+          .parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  // Depth-first walk that stops at the first data file: a streaming
+  // listing (never a full `listStatus`), so an object-store prefix with
+  // many files costs one listing page, not a second full listing.
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (!st.isDirectory) Some(st)
+    else {
+      val it = fs.listStatusIterator(st.getPath)
+      var found: Option[FileStatus] = None
+      while (found.isEmpty && it.hasNext) {
+        val c = it.next()
+        if (!hiddenName(c.getPath.getName)) found = firstDataFile(fs, c)
+      }
+      found
+    }
+
+  // the names Spark's file index leaves out of a read (its
+  // `shouldFilterOutPathName`), summary files included: `_SUCCESS`,
+  // `_metadata`, `.crc` sidecars, in-flight `._COPYING_` files; a
+  // `_col=value` partition dir stays
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Partitioned JDBC scan (the reference reads live PG through a
     * connection pool — 03_build_market_price_daily.js:65-68; the Spark

@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
 private[graft] object BestAgg {
 
   /** The single LARGEST value of `ordered` in the group — `max(ordered)`
-    * with an ObjectHashAggregate plan when `graft_topk` is installed. */
+    * with an ObjectHashAggregate plan when `graft_topk` is installed.
+    * A group with no non-null value yields NULL, as `max` does: `get`
+    * reads past the end of the empty top-k as NULL, where `element_at`
+    * throws under `spark.sql.ansi.enabled`. */
   def largest1(spark: SparkSession, ordered: Column): Column =
     if (spark.catalog.functionExists("graft_topk"))
-      element_at(call_function("graft_topk", ordered, lit(1)), 1)
+      get(call_function("graft_topk", ordered, lit(1)), lit(0))
     else max(ordered)
 }

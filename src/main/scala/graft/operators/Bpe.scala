@@ -293,12 +293,48 @@ object Bpe {
     * 1-row `TakeOrderedAndProject`, the winning pair re-enters the
     * plan via a broadcast cross join (1 row — never a collected
     * data-scaled value), and each round's vocab is checkpointed so
-    * round r+1's lineage starts flat. */
+    * round r+1's lineage starts flat. Kept as the reference BpeSpec
+    * pins [[trainBatched]] against; the store builds with the batched
+    * form, which costs 3 jobs per round where this costs 5 per merge. */
   def train(docs: DataFrame, numMerges: Int = NumMerges): DataFrame = {
-    val (m, v) = trainWithVocab(docs, numMerges)
-    SessionCache.releaseFrame(v)
-    m
+    var vocab = wordFreqs(docs)
+      .withColumn("syms", initSyms(col("w")))
+      .select(col("w"), col("freq"), col("syms"))
+      .localCheckpoint()
+    var merges: Option[DataFrame] = None
+    var r = 1
+    var exhausted = false
+    while (r <= numMerges && !exhausted) {
+      val best = pairCounts(vocab)
+        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
+        .select(lit(r).cast("int").as("merge_rank"),
+          col("a").as("left_sym"), col("b").as("right_sym"),
+          col("cnt").as("pair_count"))
+        .localCheckpoint()
+      if (best.isEmpty) exhausted = true
+      else {
+        merges = Some(merges.fold(best)(_.union(best)))
+        val old = vocab
+        vocab = vocab
+          .crossJoin(broadcast(
+            best.select(col("left_sym"), col("right_sym"))))
+          .withColumn("syms",
+            mergePair(col("syms"), col("left_sym"), col("right_sym")))
+          .select(col("w"), col("freq"), col("syms"))
+          .localCheckpoint()
+        SessionCache.releaseFrame(old)
+        r += 1
+      }
+    }
+    SessionCache.releaseFrame(vocab)
+    merges.getOrElse(emptyMerges(vocab.sparkSession))
   }
+
+  private def emptyMerges(spark: SparkSession): DataFrame =
+    spark.emptyDataFrame
+      .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
+        lit("").as("right_sym"), lit(0L).as("pair_count"))
+      .limit(0)
 
   /** BATCHED induction — the production job-cadence fix for the
     * driver-steered round loop (a real tokenizer is 30k–100k merges;
@@ -341,6 +377,20 @@ object Bpe {
   def trainBatched(docs: DataFrame, numMerges: Int = NumMerges,
       batch: Int = 32,
       onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
+    val (m, v) = trainBatchedWithVocab(docs, numMerges, batch, onRound)
+    SessionCache.releaseFrame(v)
+    m
+  }
+
+  /** [[trainBatched]] plus the FINAL segmented vocab (w, freq, syms) —
+    * the other half of the tokenizer artifact (merges drive encoding of
+    * unseen text; the segmented vocab is the subword inventory and the
+    * fast path for seen types). Both frames are checkpointed; the
+    * caller owns their blocks. */
+  def trainBatchedWithVocab(docs: DataFrame, numMerges: Int = NumMerges,
+      batch: Int = 32,
+      onRound: (Int, Int) => Unit = (_, _) => ())
+      : (DataFrame, DataFrame) = {
     var vocab = wordFreqs(docs)
       .withColumn("syms", initSyms(col("w")))
       .select(col("w"), col("freq"), col("syms"))
@@ -412,13 +462,8 @@ object Bpe {
         onRound(round, accepted.size)
       }
     }
-    val out = merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)).localCheckpoint()
-    SessionCache.releaseFrame(vocab)
-    out
+    (merges.getOrElse(emptyMerges(vocab.sparkSession)).localCheckpoint(),
+      vocab)
   }
 
   /** FULL-BATCH induction — the APPROXIMATE production cadence
@@ -508,56 +553,10 @@ object Bpe {
         onRound(round, accepted.size)
       }
     }
-    val out = merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)).localCheckpoint()
+    val out = merges.getOrElse(emptyMerges(vocab.sparkSession))
+      .localCheckpoint()
     SessionCache.releaseFrame(vocab)
     out
-  }
-
-  /** [[train]] plus the FINAL segmented vocab (w, freq, syms) — the
-    * other half of the tokenizer artifact (merges drive encoding of
-    * unseen text; the segmented vocab is the subword inventory and the
-    * fast path for seen types). Caller owns the vocab frame's
-    * checkpoint blocks. */
-  def trainWithVocab(docs: DataFrame, numMerges: Int = NumMerges)
-      : (DataFrame, DataFrame) = {
-    var vocab = wordFreqs(docs)
-      .withColumn("syms", initSyms(col("w")))
-      .select(col("w"), col("freq"), col("syms"))
-      .localCheckpoint()
-    var merges: Option[DataFrame] = None
-    var r = 1
-    var exhausted = false
-    while (r <= numMerges && !exhausted) {
-      val best = pairCounts(vocab)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
-        .select(lit(r).cast("int").as("merge_rank"),
-          col("a").as("left_sym"), col("b").as("right_sym"),
-          col("cnt").as("pair_count"))
-        .localCheckpoint()
-      if (best.isEmpty) exhausted = true
-      else {
-        merges = Some(merges.fold(best)(_.union(best)))
-        val old = vocab
-        vocab = vocab
-          .crossJoin(broadcast(
-            best.select(col("left_sym"), col("right_sym"))))
-          .withColumn("syms",
-            mergePair(col("syms"), col("left_sym"), col("right_sym")))
-          .select(col("w"), col("freq"), col("syms"))
-          .localCheckpoint()
-        SessionCache.releaseFrame(old)
-        r += 1
-      }
-    }
-    (merges.getOrElse(
-      vocab.sparkSession.emptyDataFrame
-        .select(lit(0).as("merge_rank"), lit("").as("left_sym"),
-          lit("").as("right_sym"), lit(0L).as("pair_count"))
-        .limit(0)), vocab)
   }
 
   private val mergesCache = SessionCache.mkFrames()
@@ -572,10 +571,13 @@ object Bpe {
   private def ensureStore(spark: SparkSession, dir: String): String =
     PersistedStore.ensure(spark, dir, "documents.parquet",
       "bpe_merges", "v3") { root => // v3: widened TokenRe surface + ' ' marker
-      val (m, v) = trainWithVocab(Tables.documents(spark, dir)
-        .filter(col("doc_id") % Dedup.IncrementalDeltaMod =!= 0))
+      // batch = NumMerges: merge-for-merge the sequential table
+      val (m, v) = trainBatchedWithVocab(Tables.documents(spark, dir)
+        .filter(col("doc_id") % Dedup.IncrementalDeltaMod =!= 0),
+        NumMerges, batch = NumMerges)
       m.write.mode("overwrite").parquet(s"$root/merges")
       v.write.mode("overwrite").parquet(s"$root/vocab")
+      SessionCache.releaseFrame(m)
       SessionCache.releaseFrame(v)
     }
 
@@ -587,7 +589,7 @@ object Bpe {
   private[graft] def standingMerges(spark: SparkSession, dir: String)
       : DataFrame =
     mergesCache.getOrBuild(spark, dir, "documents.parquet") {
-      spark.read.parquet(s"${ensureStore(spark, dir)}/merges")
+      Tables.parquet(spark, s"${ensureStore(spark, dir)}/merges")
         .localCheckpoint()
     }
 
@@ -596,7 +598,7 @@ object Bpe {
   private[graft] def standingVocab(spark: SparkSession, dir: String)
       : DataFrame =
     vocabCache.getOrBuild(spark, dir, "documents.parquet") {
-      spark.read.parquet(s"${ensureStore(spark, dir)}/vocab")
+      Tables.parquet(spark, s"${ensureStore(spark, dir)}/vocab")
         .localCheckpoint()
     }
 
@@ -673,7 +675,7 @@ object Bpe {
           DeepMerges, batch = 32)
           .write.mode("overwrite").parquet(s"$root/merges")
       }
-      spark.read.parquet(s"$store/merges").localCheckpoint()
+      Tables.parquet(spark, s"$store/merges").localCheckpoint()
     }
 
   /** The batched trainer at NON-TOY depth as a registered op — the

@@ -1110,7 +1110,7 @@ object Curation {
             count(lit(1)).as("standing_docs"))
           .write.mode("overwrite").parquet(s"$root/hwm")
       }
-      spark.read.parquet(s"$store/hwm").localCheckpoint()
+      Tables.parquet(spark, s"$store/hwm").localCheckpoint()
     }
 
   private val packIncrCache = SessionCache.mkFrames()

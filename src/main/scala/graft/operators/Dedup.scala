@@ -237,7 +237,7 @@ object Dedup {
           "key_a", "key_b")
           .write.mode("overwrite").parquet(s"$root/labels")
       }
-      spark.read.parquet(s"$store/labels")
+      Tables.parquet(spark, s"$store/labels")
     }
 
   /** Sparse-output sibling of [[fuzzyMatch]] — canonical best-match
@@ -411,7 +411,7 @@ object Dedup {
         GraphOps.connectedComponents(edges, "key", "best_key")
           .write.mode("overwrite").parquet(s"$root/labels")
       }
-      spark.read.parquet(s"$store/labels")
+      Tables.parquet(spark, s"$store/labels")
     }
 
   /** The residual tier's candidate stage of [[fuzzyBest]] (post cheap
@@ -1142,7 +1142,7 @@ object Dedup {
         minhashLshPairs(spark, dir, bucketCap = None)
           .write.mode("overwrite").parquet(s"$root/pairs")
       }
-      spark.read.parquet(s"$store/pairs")
+      Tables.parquet(spark, s"$store/pairs")
     }
 
   /** MinHash banding geometry shared by every LSH path below: k = 32
@@ -1216,8 +1216,8 @@ object Dedup {
             .agg(count(lit(1)).as("n_sh"))
             .write.mode("overwrite").parquet(s"$root/sizes")
         }
-        (spark.read.parquet(s"$store/banded").localCheckpoint(),
-          spark.read.parquet(s"$store/sizes").localCheckpoint())
+        (Tables.parquet(spark, s"$store/banded").localCheckpoint(),
+          Tables.parquet(spark, s"$store/sizes").localCheckpoint())
       }
 
   /** The banded-bucket candidate stage of [[minhashLsh]] alone
@@ -1343,7 +1343,7 @@ object Dedup {
           shingleArrays(spark, dir), Seq.empty)
           .write.mode("overwrite").parquet(s"$root/matches")
       }
-      spark.read.parquet(s"$store/matches").localCheckpoint()
+      Tables.parquet(spark, s"$store/matches").localCheckpoint()
     }
 
   /** The band-probe candidate stage of [[dedupIncremental]] alone

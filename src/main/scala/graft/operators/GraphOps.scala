@@ -273,7 +273,7 @@ object GraphOps {
           "doc_id_a", "doc_id_b")
           .write.mode("overwrite").parquet(s"$root/labels")
       }
-      spark.read.parquet(s"$store/labels")
+      graft.Tables.parquet(spark, s"$store/labels")
     }
 
   /** The WHOLE corpus' (node, lbl) near-dup cluster table assembled
@@ -664,7 +664,7 @@ object GraphOps {
         copurchasePlan(spark, dir)
           .write.mode("overwrite").parquet(s"$root/edges")
       }
-      spark.read.parquet(s"$store/edges")
+      graft.Tables.parquet(spark, s"$store/edges")
     }
 
   /** Fresh (un-persisted) construction — the parity reference. */

@@ -237,7 +237,7 @@ object Imi {
           .repartition(col("cell"))
           .write.mode("overwrite").parquet(s"$root/cells")
       }
-      spark.read.parquet(s"$store/cells")
+      graft.Tables.parquet(spark, s"$store/cells")
     }
 
   /** Label-blind co-cell candidate pairs (src < dst, distinct) — the
@@ -290,12 +290,12 @@ object Imi {
           val cb = codebook(spark, h, k1, LloydSteps)
           cb.write.mode("overwrite").parquet(s"$root/codebook")
           cellsWithCodebook(spark, standing,
-            spark.read.parquet(s"$root/codebook"), NProbeHalf)
+            graft.Tables.parquet(spark, s"$root/codebook"), NProbeHalf)
             .repartition(col("cell"))
             .write.mode("overwrite").parquet(s"$root/cells")
       }
-      (spark.read.parquet(s"$store/codebook"),
-        spark.read.parquet(s"$store/cells"))
+      (graft.Tables.parquet(spark, s"$store/codebook"),
+        graft.Tables.parquet(spark, s"$store/cells"))
     }
 
   /** [[cellsOf]]'s assignment stage against a PRE-TRAINED codebook —
@@ -687,7 +687,7 @@ object Imi {
           expectRetrain = Some(false))
           .write.mode("overwrite").parquet(s"$root/cells")
       }
-      spark.read.parquet(s"$store/cells").localCheckpoint()
+      graft.Tables.parquet(spark, s"$store/cells").localCheckpoint()
     }
 
   val imiCompact: Op = Op(
@@ -741,7 +741,7 @@ object Imi {
             deltaMod = RetrainDeltaMod, expectRetrain = Some(true))
             .write.mode("overwrite").parquet(s"$root/cells")
       }
-      spark.read.parquet(s"$store/cells").localCheckpoint()
+      graft.Tables.parquet(spark, s"$store/cells").localCheckpoint()
     }.select(col("vec_id"), col("cell"),
       when(col("vec_id") % RetrainDeltaMod === 0, 1L).otherwise(0L)
         .as("is_delta"))

@@ -68,7 +68,7 @@ object IncrementalAgg {
       try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    spark.read.parquet(store)
+    Tables.parquet(spark, store)
   }
 
   /** The refresh kernel: merge a standing (day, n, sum) view with a
@@ -117,7 +117,7 @@ object IncrementalAgg {
       try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    spark.read.parquet(store)
+    Tables.parquet(spark, store)
   }
 
   /** Per-day HLL sketch of the frame's users. */

@@ -116,7 +116,7 @@ object Layout {
        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
        |FROM n
        |GROUP BY 1""".stripMargin) { (spark, dir) =>
-    val laid = spark.read.parquet(layoutDir(spark, dir))
+    val laid = Tables.parquet(spark, layoutDir(spark, dir))
     laid
       .groupBy((col("z") / ZBucketWidth).cast("long").as("zbucket"))
       .agg(

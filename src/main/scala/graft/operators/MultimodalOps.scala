@@ -212,14 +212,14 @@ object MultimodalOps {
     // documents table): touching one .bmp invalidates this cache and,
     // below, the persisted store — real bytes drive the signature
     phashCache.getOrBuild(spark, adir, "*.bmp", extra = s"$dir@hashes") {
-      spark.read.parquet(s"${mediaStore(spark, dir)}/hashes")
+      Tables.parquet(spark, s"${mediaStore(spark, dir)}/hashes")
     }
   }
 
   private[graft] def ingestStore(spark: SparkSession, dir: String): DataFrame = {
     val adir = assetDir(spark, dir)
     phashCache.getOrBuild(spark, adir, "*.bmp", extra = s"$dir@ingest") {
-      spark.read.parquet(s"${mediaStore(spark, dir)}/ingest")
+      Tables.parquet(spark, s"${mediaStore(spark, dir)}/ingest")
     }
   }
 

@@ -128,9 +128,14 @@ object Normalize {
     // state returned lazily (no post-action release point exists here),
     // so the PREVIOUS run's blocks are dropped when the next run
     // re-checkpoints — repeated runs hold ONE live copy instead of
-    // accumulating until driver GC + ContextCleaner catch up
+    // accumulating until driver GC + ContextCleaner catch up. Only a
+    // predecessor of this same session is released: another session's
+    // frame may still be unread, and a stopped context's blocks are
+    // gone with it (unpersisting them there throws).
     Normalize.synchronized {
-      if (lastAntiJoinKeyed != null) SessionCache.releaseFrame(lastAntiJoinKeyed)
+      val prev = lastAntiJoinKeyed
+      if (prev != null && (prev.sparkSession eq spark))
+        SessionCache.releaseFrame(prev)
       lastAntiJoinKeyed = keyed
     }
     def side(flag: String) = keyed.filter(col(flag) === 1)

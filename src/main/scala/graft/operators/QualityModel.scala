@@ -183,7 +183,7 @@ object QualityModel {
         trainWeights(spark, dir).write.mode("overwrite")
           .parquet(s"$root/w")
       }
-      spark.read.parquet(s"$store/w").localCheckpoint()
+      Tables.parquet(spark, s"$store/w").localCheckpoint()
     }
 
   /** Score any (doc_id, …features-derivable) corpus against a weight

@@ -412,7 +412,7 @@ object Similarity {
           carryVec = true, stride = 10)
           .write.mode("overwrite").parquet(s"$root/cells")
       }
-      spark.read.parquet(s"$store/cells")
+      Tables.parquet(spark, s"$store/cells")
     }
 
   /** Shared body: `allPairs = true` is the exact blocked kernel (the
@@ -1297,12 +1297,12 @@ object Similarity {
           val cb = pqTrainedCodebook(q, steps, nc)
           cb.write.mode("overwrite").parquet(s"$root/codebook")
           pqSubspaceAssign(pqSubspaces(q),
-              spark.read.parquet(s"$root/codebook"), nc)
+              Tables.parquet(spark, s"$root/codebook"), nc)
             .select(col("vec_id"), col("m"), expr(s"k % $nc").as("cid"))
             .write.mode("overwrite").parquet(s"$root/codes")
         }
-        (spark.read.parquet(s"$store/codebook"),
-          spark.read.parquet(s"$store/codes"))
+        (Tables.parquet(spark, s"$store/codebook"),
+          Tables.parquet(spark, s"$store/codes"))
       }
 
   /** [[adcRefined]] over a TRAINED per-subspace codebook: the full

@@ -436,7 +436,7 @@ object SinkOps {
     val digestAgg = digests.agg(
       (count(lit(1)) >= 1 && min(length(col("file_sha256"))) === 64 &&
         min(col("file_bytes")) > 0).as("digests_ok"))
-    val logAgg = spark.read.parquet(logDir)
+    val logAgg = Tables.parquet(spark, logDir)
       .agg(max(col("row_count")).as("logged_count"),
         count(lit(1)).as("n_log_rows"))
     feedAgg.crossJoin(digestAgg).crossJoin(logAgg)

@@ -23,7 +23,7 @@ object StreamingOps {
     val root = SinkOps.stagingDir(dir,
       s"stream_dedup_${SessionCache.sessionId(spark).take(8)}")
     EventStream.runDedupToParquet(spark, dir, root)
-    spark.read.parquet(s"$root/out")
+    graft.Tables.parquet(spark, s"$root/out")
   }
 
   /** The flagship pipeline run incrementally: per-micro-batch day-merge
@@ -102,7 +102,7 @@ object StreamingOps {
     val root = SinkOps.stagingDir(dir,
       s"stream_sess_${SessionCache.sessionId(spark).take(8)}")
     EventStream.runSessionizeToParquet(spark, dir, root)
-    spark.read.parquet(s"$root/out")
+    graft.Tables.parquet(spark, s"$root/out")
       .select("user_id", "start_us", "end_us", "n_events", "value_cents")
   }
 
@@ -243,7 +243,7 @@ object StreamingOps {
           .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
           .write.mode("overwrite").parquet(s"$root/model")
       }
-      spark.read.parquet(s"$store/model").localCheckpoint()
+      graft.Tables.parquet(spark, s"$store/model").localCheckpoint()
     }
 
   /** CONTINUOUS cluster maintenance ≡ the full batch recompute: delta
@@ -322,7 +322,7 @@ object StreamingOps {
     val root = SinkOps.stagingDir(dir,
       s"stream_ann_tr_${SessionCache.sessionId(spark).take(8)}")
     EventStream.runImiProbeToParquet(spark, dir, root)
-    spark.read.parquet(s"$root/topk-*")
+    graft.Tables.parquet(spark, s"$root/topk-*")
       .select("vec_id", "rank", "nn_id", "cos")
   }
 
@@ -399,8 +399,8 @@ object StreamingOps {
         nLang.join(cuts, Seq("lang"), "left")
           .write.mode("overwrite").parquet(s"$root/meta")
       }
-      (spark.read.parquet(s"$store/model").localCheckpoint(),
-        spark.read.parquet(s"$store/meta").localCheckpoint())
+      (graft.Tables.parquet(spark, s"$store/model").localCheckpoint(),
+        graft.Tables.parquet(spark, s"$store/meta").localCheckpoint())
     }
 
   /** Streaming perplexity-bucket assignment — the arrival-time leg of
@@ -544,7 +544,7 @@ object StreamingOps {
     val root = SinkOps.stagingDir(dir,
       s"stream_pack_${SessionCache.sessionId(spark).take(8)}")
     EventStream.runStreamPack(spark, dir, root)
-    spark.read.parquet(s"$root/packs-*")
+    graft.Tables.parquet(spark, s"$root/packs-*")
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("pack_id"))
   }
@@ -563,7 +563,7 @@ object StreamingOps {
     val root = SinkOps.stagingDir(dir,
       s"stream_bm25_${SessionCache.sessionId(spark).take(8)}")
     EventStream.runBm25Probe(spark, dir, root)
-    spark.read.parquet(s"$root/topk-*")
+    graft.Tables.parquet(spark, s"$root/topk-*")
       .select("qid", "doc_id", "score", "rnk")
   }
 

@@ -327,7 +327,7 @@ object TextOps {
           .filter(col("doc_id") % Dedup.IncrementalDeltaMod =!= 0)))
           .write.mode("overwrite").parquet(s"$root/keepers")
       }
-      spark.read.parquet(s"$store/keepers")
+      Tables.parquet(spark, s"$store/keepers")
     }
 
   /** [[chunkDedupIncr]]'s kernel over any delta chunk frame + standing
@@ -1267,7 +1267,7 @@ object TextOps {
           .agg(count(lit(1)).as("tf"))
           .write.mode("overwrite").parquet(s"$root/tf")
       }
-      spark.read.parquet(s"$store/tf")
+      Tables.parquet(spark, s"$store/tf")
     }
 
   private val bm25StatsCache = SessionCache.mkScalarPairs()

@@ -131,7 +131,7 @@ object TxCommit {
     val m = latest(spark, root)
     val path = m.getOrElse(output, throw new IllegalArgumentException(
       s"output '$output' not in latest manifest (has: ${m.keys.mkString(",")})"))
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
   }
 
   /** Time travel: read a named output AS OF a specific committed
@@ -143,7 +143,7 @@ object TxCommit {
     val m = manifest(spark, root, version)
     val path = m.getOrElse(output, throw new IllegalArgumentException(
       s"output '$output' not in manifest v$version (has: ${m.keys.mkString(",")})"))
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
   }
 
   /** Union a named output across EVERY committed version — the log-of-

@@ -106,7 +106,7 @@ object TxStore {
       incoming: DataFrame, keyCols: Seq[String]): Map[String, String] = {
     val merged = TxCommit.latest(spark, txn.root).get(output) match {
       case Some(path) =>
-        Sinks.upsertByKey(spark.read.parquet(path), incoming, keyCols)
+        Sinks.upsertByKey(graft.Tables.parquet(spark, path), incoming, keyCols)
       case None => incoming
     }
     stageFull(txn, output, merged)
@@ -126,7 +126,7 @@ object TxStore {
     val paths = TxCommit.latest(spark, root)
       .collect { case (k, v) if k.startsWith(s"$prefix/") => v }.toSeq
     require(paths.nonEmpty, s"no committed '$prefix/*' outputs at $root")
-    spark.read.parquet(paths: _*)
+    graft.Tables.parquet(spark, paths: _*)
   }
 
   /** Exactly-once micro-batch commit: publish `batch` as the delta of

@@ -402,7 +402,7 @@ object EventStream {
     val baseValid =
       fs.exists(new org.apache.hadoop.fs.Path(s"$basePath/_SUCCESS")) &&
         fs.exists(new org.apache.hadoop.fs.Path(bodMetaPath(basePath))) && {
-          val meta = spark.read.parquet(bodMetaPath(basePath))
+          val meta = graft.Tables.parquet(spark, bodMetaPath(basePath))
           meta.columns.contains("src_sig") && {
             val consumed = meta.select(col("src_sig")).head().getString(0)
             consumed.split(",").forall(current.contains)
@@ -414,7 +414,7 @@ object EventStream {
         fs.delete(new org.apache.hadoop.fs.Path(p), true)
       bootstrapBestOfDay(spark, srcDir, glob, basePath)
     }
-    val meta = spark.read.parquet(bodMetaPath(basePath))
+    val meta = graft.Tables.parquet(spark, bodMetaPath(basePath))
     val splitDay = meta.agg(max(col("split_day"))).head().getDate(0)
     val bootFiles = meta.select(col("file_name"))
     // one file per micro-batch: the multi-batch merge path actually
@@ -481,7 +481,7 @@ object EventStream {
     // explicit-path read works on BOTH layouts (single file or part-file
     // directory); the glob-filtered dir read returned EMPTY on directory
     // tables, which bootstrapped an empty base (r13 soak catch)
-    val src = spark.read.parquet(s"$srcDir/$glob")
+    val src = graft.Tables.parquet(spark, s"$srcDir/$glob")
     val snaps = graft.operators.Pricing.snapsOf(src)
     val maxDay = snaps.agg(max(col("as_of_date"))).head().getDate(0)
     val splitDay = java.sql.Date.valueOf(
@@ -503,13 +503,13 @@ object EventStream {
     * writing), so it replaces the base's day outright. */
   def readBestOfDayStore(
       spark: SparkSession, basePath: String, hotPath: String): DataFrame = {
-    val base = spark.read.parquet(basePath)
+    val base = graft.Tables.parquet(spark, basePath)
     val hotP = new org.apache.hadoop.fs.Path(hotPath)
     val fs = hotP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hotP)) base
     else {
       val cols = base.columns.map(col).toIndexedSeq
-      val hot = spark.read.parquet(hotPath).select(cols: _*)
+      val hot = graft.Tables.parquet(spark, hotPath).select(cols: _*)
       val hotDays = hot.select(col("as_of_date")).distinct()
       base.join(broadcast(hotDays), Seq("as_of_date"), "left_anti")
         .select(cols: _*)
@@ -591,7 +591,7 @@ object EventStream {
   private[graft] def tableStream(
       spark: SparkSession, dir: String, table: String,
       maxFilesPerTrigger: Int = 0): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$table").schema
+    val schema = graft.Tables.parquet(spark, s"$dir/$table").schema
     val (path, filt) = resolveTable(spark, dir, table)
     val r0 = spark.readStream.schema(schema)
     val r1 = filt.fold(r0)(g => r0.option("pathGlobFilter", g))
@@ -607,9 +607,10 @@ object EventStream {
     * handling as `Tables.events`). */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    // the stream carries the file schema as read, so its `ts` type is
+    // the stored encoding
     val raw = tableStream(spark, dir, "events.parquet")
-    fileSchema("ts").dataType match {
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampType => raw
@@ -947,12 +948,12 @@ object EventStream {
               if (!fs.exists(committed)) {
                 val prev =
                   if (b == 0) s"$root/hwm-seed" else s"$root/hwm-${b - 1}"
-                val hwm = sb.read.parquet(prev)
+                val hwm = graft.Tables.parquet(sb, prev)
                 graft.operators.Curation.packContinuing(batch, hwm)
                   .write.mode("overwrite").parquet(s"$root/packs-$b")
                 // advance from the AT-REST packs (one compute per batch)
                 graft.operators.Curation.advancePackHwm(
-                    hwm, sb.read.parquet(s"$root/packs-$b"))
+                    hwm, graft.Tables.parquet(sb, s"$root/packs-$b"))
                   .write.mode("overwrite").parquet(s"$root/hwm-$b")
               }
             }

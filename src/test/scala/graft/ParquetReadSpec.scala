@@ -1,0 +1,129 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+
+/** [[Tables.parquet]] — the one parquet read path: its footer schema
+  * equals Spark's inferred schema on every layout the engine reads, it
+  * runs no Spark job to get it, and a path with no data file fails
+  * exactly as a plain read does. */
+class ParquetReadSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val sf = Paths.get(sf001).resolveSibling("sf0.01").toString
+  private lazy val tmp: Path = Files.createTempDirectory("graft-parquet-read")
+
+  private def sameSchema(paths: String*): Unit =
+    assert(Tables.parquet(spark, paths: _*).schema ===
+      spark.read.parquet(paths: _*).schema, paths.mkString(","))
+
+  /** Jobs `body` starts on this thread (they carry its job group, so
+    * background jobs of other suites' streams are not counted). A
+    * fence job in its own group is awaited after `body`: listener
+    * events arrive in order, so every job `body` started is seen. */
+  private def jobsOf(body: => Unit): Int = {
+    val seen = new AtomicInteger()
+    val fence = new CountDownLatch(1)
+    val sc = spark.sparkContext
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case "parquet-read-probe" => seen.incrementAndGet()
+          case "parquet-read-fence" => fence.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("parquet-read-probe", "probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("parquet-read-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fence.await(60, TimeUnit.SECONDS), "fence job never seen")
+      seen.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("footer schema equals the inferred schema on every sf0.01 table") {
+    val before = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+    try {
+      // events is read with nanos-as-long (Tables.events sets it)
+      for (nanos <- Seq("false", "true");
+           t <- Tables.AllTables if nanos == "false" || t == "events") {
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", nanos)
+        sameSchema(s"$sf/$t.parquet")
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
+      case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    }
+  }
+
+  test("partitionBy dir, glob path and multi-path read") {
+    val df = Seq((1L, "a", 10), (2L, "b", 20), (3L, "a", 30))
+      .toDF("id", "part", "v")
+    val parted = tmp.resolve("parted").toString
+    df.write.mode("overwrite").partitionBy("part").parquet(parted)
+    sameSchema(parted)
+    assert(Tables.parquet(spark, parted).schema.fieldNames.toSeq ===
+      Seq("id", "v", "part"))
+    for (i <- 1 to 2)
+      df.write.mode("overwrite").parquet(tmp.resolve(s"multi-$i").toString)
+    sameSchema(tmp.resolve("multi-*").toString)
+    sameSchema(tmp.resolve("multi-1").toString, tmp.resolve("multi-2").toString)
+    assert(Tables.parquet(spark, tmp.resolve("multi-*").toString).count() === 6)
+  }
+
+  test("_SUCCESS, .crc and other hidden names are never taken for data") {
+    val dir = tmp.resolve("hidden")
+    Seq((1L, "x")).toDF("id", "s").write.mode("overwrite").parquet(dir.toString)
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    // non-parquet bytes under hidden names: reading any of them as a
+    // footer would throw
+    for (n <- Seq("_a", ".a", "_temporary"))
+      Files.write(dir.resolve(n), "not parquet".getBytes)
+    sameSchema(dir.toString)
+  }
+
+  test("a table read runs no Spark job") {
+    assert(jobsOf { Tables.lineitem(spark, sf).schema } === 0)
+    // the probe does see jobs: the plain read's inference job
+    assert(jobsOf { spark.read.parquet(s"$sf/lineitem.parquet").schema } > 0)
+  }
+
+  test("an empty dir fails as a plain read does") {
+    val empty = Files.createDirectories(tmp.resolve("empty")).toString
+    def err(read: => DataFrame) = intercept[AnalysisException](read)
+    val plain = err(spark.read.parquet(empty))
+    val ours = err(Tables.parquet(spark, empty))
+    assert(ours.getCondition === plain.getCondition)
+    assert(ours.getMessage === plain.getMessage)
+  }
+
+  test("engine sources read parquet only through Tables.parquet") {
+    // anchored on the source tree wherever the forked JVM's working
+    // directory lands; the helper's own fallback read must be found, so
+    // an empty scan cannot pass
+    val rel = Paths.get("src", "main", "scala", "graft")
+    val root = Iterator.iterate(Paths.get(sys.props("user.dir"))
+        .toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).map(_.resolve(rel)).find(Files.isDirectory(_))
+      .getOrElse(fail(s"$rel not found above ${sys.props("user.dir")}"))
+    val readParquet = """\.read\s*\.parquet\(""".r
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(root.resolve("tools")))
+      .filter(p => readParquet.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(root.relativize(_).toString).toSeq
+    assert(hits.contains("Tables.scala"), "the scan found no reader at all")
+    assert(hits.filterNot(_ == "Tables.scala").isEmpty,
+      s"read parquet through Tables.parquet, not spark.read.parquet: $hits")
+  }
+}

@@ -66,4 +66,20 @@ class BestOfDaySpec extends SparkSpec {
       .select(Ladders.confidenceGrade($"n")).collect().map(_.getString(0))
     assert(got.toSeq === Seq("A", "B", "B", "C", "C", "D"))
   }
+
+  test("largest1 on an all-null group is NULL under ANSI, as max is") {
+    val before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val df = Seq((1L, None), (1L, None), (2L, Some(5L)), (2L, Some(7L)))
+        .toDF("g", "v")
+        .select(col("g"), when(col("v").isNotNull,
+          struct(col("v").as("v"))).as("s"))
+      val got = df.groupBy("g").agg(BestAgg.largest1(spark, col("s")).as("b"))
+      val want = df.groupBy("g").agg(max(col("s")).as("b"))
+      val rows = got.orderBy("g").collect().toSeq
+      assert(rows === want.orderBy("g").collect().toSeq)
+      assert(rows.head.isNullAt(1) && rows(1).getStruct(1).getLong(0) === 7L)
+    } finally spark.conf.set("spark.sql.ansi.enabled", before)
+  }
 }
