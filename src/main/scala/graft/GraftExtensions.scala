@@ -1,23 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{CellTopK, LongArrayDot, PackedBagDistance, PackedLetterBag, RandProjExpr, StringRollingHash, TopKAgg, UriEncode}
 
-/** Engine extension point, installed the documented production way:
+/** Engine extension point: the native functions, optimizer rules and
+  * planner strategy every operator plans with. Two ways in, one set of
+  * kernels:
   *
   * {{{
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * Registers the engine's native expressions into the session's
-  * function registry so they are callable from BOTH the DataFrame API
-  * (`call_function("graft_dot", a, b)`) and plain SQL. Operators probe
-  * `spark.catalog.functionExists` and fall back to the equivalent
-  * built-in higher-order-function form when the extension is not
-  * installed, so nothing breaks in a vanilla session.
+  * at session build, or [[GraftExtensions.install]] on a live session,
+  * which every registered op calls before it builds. The functions are
+  * callable from BOTH the DataFrame API
+  * (`call_function("graft_dot", a, b)`) and plain SQL. Operators call
+  * them unconditionally: there is no second, extension-free plan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -133,5 +134,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         RandProjExpr(children.head, k)
       }))
+  }
+}
+
+object GraftExtensions {
+
+  /** Installs [[GraftExtensions]] on a live session: the same injector
+    * is applied to a fresh `SparkSessionExtensions`, and what it builds
+    * goes into the session's function registry and its
+    * `experimental` optimizer rules and planner strategies. A no-op
+    * once `graft_topk` is in the session's function registry, which
+    * covers a session built with `spark.sql.extensions` and a second
+    * call alike, so the rules are never appended twice. Streams
+    * started afterwards clone the registry and the experimental
+    * methods with the session. */
+  def install(spark: SparkSession): Unit = spark.synchronized {
+    if (!GraftSqlBridge.hasFunction(spark, "graft_topk"))
+      GraftSqlBridge.inject(spark, new GraftExtensions)
   }
 }

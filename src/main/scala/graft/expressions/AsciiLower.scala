@@ -25,9 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Installed by [[graft.plans.FoldAsciiTranslate]], which rewrites the
   * declarative pattern wherever it appears — call sites keep the
-  * vanilla-safe `translate` form and any session without the engine
-  * extensions still computes the identical law, interpretively.
-  * Equivalence is property-tested over unicode inputs (AsciiLowerSpec).
+  * `translate` form, which computes the identical law interpretively
+  * wherever the rule does not run. Equivalence is property-tested over unicode inputs (AsciiLowerSpec).
   */
 case class AsciiLower(child: Expression) extends UnaryExpression {
 
@@ -58,8 +57,8 @@ object AsciiLower {
     * MALFORMED UTF-8 takes the slow path: `StringTranslate` evaluates
     * through `toString`, which substitutes U+FFFD for invalid
     * sequences — the byte loop would instead copy the garbage bytes
-    * verbatim, and an extensions-on session would then disagree with
-    * a vanilla session on e.g. `cast(binary as string)` inputs. The
+    * verbatim, and the rewrite would then change the answer of the
+    * `translate` it replaces on e.g. `cast(binary as string)` inputs. The
     * validity check is a single vectorizable scan; valid strings (all
     * engine-law inputs — parquet strings are validated on read) never
     * leave the fast path. */

@@ -19,9 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Works byte-wise, so it is exact on arbitrary valid UTF-8 with no
   * decode step; malformed UTF-8 routes through `toString` (U+FFFD
-  * substitution) like [[AsciiLower.fold]] so an extensions-on session
-  * agrees with the vanilla higher-order-function fallback
-  * ([[graft.operators.Feeds.uriEncode]]) on garbage bytes too.
+  * substitution) like [[AsciiLower.fold]], so garbage bytes encode as
+  * the replacement character's UTF-8.
   */
 case class UriEncode(child: Expression) extends UnaryExpression {
 

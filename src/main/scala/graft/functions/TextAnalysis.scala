@@ -75,32 +75,16 @@ object TextAnalysis {
 
   /** Deterministic rolling-hash document fingerprint:
     * fold over code points of `(acc*31 + ascii(c)) % 1000000007`, acc₀=0.
-    * Integer-only → identical in any engine. Uses the native codegen'd
-    * [[graft.expressions.StringRollingHash]] when the engine extension
-    * is installed (a tight primitive loop — the built-in fold below
-    * costs a per-character array element plus two interpreted closure
-    * dispatches); falls back to the equivalent built-in form in a
-    * vanilla session. */
+    * Integer-only → identical in any engine. The native codegen'd
+    * [[graft.expressions.StringRollingHash]]: a tight primitive loop,
+    * where [[fingerprintHof]] costs a per-character array element plus
+    * two interpreted closure dispatches. */
   def fingerprint(text: Column): Column =
-    fingerprint(text, org.apache.spark.sql.SparkSession.getActiveSession)
-
-  /** [[fingerprint]] with the probed session made explicit: the column
-    * must be analyzed by a session where `graft_fingerprint` resolves,
-    * and `call_function` resolves against the session that ANALYZES the
-    * plan — not necessarily the thread-active one the parameterless
-    * overload probes. Multi-session callers (e.g. a conf-scoped
-    * `newSession` child next to a vanilla session) pass the session the
-    * frame belongs to; a `None`/absent session falls back to the
-    * built-in fold, which resolves anywhere. */
-  def fingerprint(text: Column,
-      session: Option[org.apache.spark.sql.SparkSession]): Column =
-    if (session.exists(_.catalog.functionExists("graft_fingerprint")))
-      call_function("graft_fingerprint", text)
-    else fingerprintHof(text)
+    call_function("graft_fingerprint", text)
 
   /** Built-in higher-order-function form of [[fingerprint]] — the
-    * vanilla-session fallback and the equivalence baseline the native
-    * expression is property-tested against. */
+    * equivalence baseline the native expression is property-tested
+    * against. */
   def fingerprintHof(text: Column): Column =
     aggregate(
       transform(split(text, ""), c => ascii(c).cast("long")),

@@ -344,22 +344,15 @@ object Analytics {
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(sum(centsOf(col("l_extendedprice"))).as("revenue_cents"))
-    if (!spark.catalog.functionExists("graft_topk")) {
-      // vanilla session: same contract through the window form
-      val w = Window.partitionBy(col("p_brand"))
-        .orderBy(col("revenue_cents").desc, col("p_partkey").asc)
-      partrev.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-    } else {
-      partrev.groupBy(col("p_brand"))
-        .agg(call_function("graft_topk",
-          struct(col("revenue_cents"), (-col("p_partkey")).as("neg_pk")),
-          lit(3)).as("top"))
-        .select(col("p_brand"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("p_brand"),
-          (-col("t.neg_pk")).as("p_partkey"),
-          col("t.revenue_cents").as("revenue_cents"),
-          (col("pos") + 1).as("rk"))
-    }
+    partrev.groupBy(col("p_brand"))
+      .agg(call_function("graft_topk",
+        struct(col("revenue_cents"), (-col("p_partkey")).as("neg_pk")),
+        lit(3)).as("top"))
+      .select(col("p_brand"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("p_brand"),
+        (-col("t.neg_pk")).as("p_partkey"),
+        col("t.revenue_cents").as("revenue_cents"),
+        (col("pos") + 1).as("rk"))
   }
 
   /** S5/P9/F23: schema-on-read JSON — key-existence filter + typed

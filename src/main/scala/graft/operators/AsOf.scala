@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.{AsOfJoinPlan, GraftAsOfStrategy}
+import graft.plans.AsOfJoinPlan
 import graft.functions.Money.centsOf
 
 /** As-of (point-in-time) join and range (interval) join — operators
@@ -157,13 +157,8 @@ object AsOf {
       tieBreak: Seq[String],
       forward: Boolean = false): DataFrame = {
     val spark = probe.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // vanilla-session fallback; the documented install path is
-    // spark.sql.extensions=graft.GraftExtensions (idempotent with it:
-    // the planner takes the first candidate plan)
-    if (!spark.experimental.extraStrategies.exists(_ eq GraftAsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftAsOfStrategy
+    // the planner strategy for AsOfJoinPlan ships with the extension
+    graft.GraftExtensions.install(spark)
     val lp = probe.queryExecution.analyzed
     val rp = state.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The argmin/argmax aggregation device (r15): `max(struct(...))` /
@@ -17,19 +17,14 @@ import org.apache.spark.sql.functions._
   * `largest1(s) ≡ max(s)` row-for-row; argmin callers negate the
   * ordering fields (strictly order-reversing on the integer ranges in
   * use) and un-negate on unpack.
-  *
-  * Falls back to the declarative form when the session lacks the
-  * extension (vanilla sessions keep the previous plan).
   */
 private[graft] object BestAgg {
 
   /** The single LARGEST value of `ordered` in the group — `max(ordered)`
-    * with an ObjectHashAggregate plan when `graft_topk` is installed.
-    * A group with no non-null value yields NULL, as `max` does: `get`
-    * reads past the end of the empty top-k as NULL, where `element_at`
-    * throws under `spark.sql.ansi.enabled`. */
-  def largest1(spark: SparkSession, ordered: Column): Column =
-    if (spark.catalog.functionExists("graft_topk"))
-      get(call_function("graft_topk", ordered, lit(1)), lit(0))
-    else max(ordered)
+    * with an ObjectHashAggregate plan. A group with no non-null value
+    * yields NULL, as `max` does: `get` reads past the end of the empty
+    * top-k as NULL, where `element_at` throws under
+    * `spark.sql.ansi.enabled`. */
+  def largest1(ordered: Column): Column =
+    get(call_function("graft_topk", ordered, lit(1)), lit(0))
 }

@@ -318,14 +318,14 @@ object Dedup {
     // residual tier: brand-unique names probe the fused-cut block join
     val uniq = gs.filter(col("grp_n") === 1)
       .select(col("brand"), col("key"), col("name"))
-    val nearBest = fuzzyBlockJoin(spark, uniq, parts,
+    val nearBest = fuzzyBlockJoin(uniq, parts,
         (a, b) => a =!= b, withDp = true)
       .select(col("brand"), col("key_a").as("key"), col("key_b"),
         levenshtein(col("name_a"), col("name_b")).as("dist"))
       .groupBy(col("brand"), col("key"))
       // bounded-heap argmin via sign-flipped argmax (BestAgg r15):
       // largest (−dist, −key_b) ≡ smallest (dist, key_b)
-      .agg(BestAgg.largest1(spark,
+      .agg(BestAgg.largest1(
         struct((-col("dist")).as("nd"), (-col("key_b")).as("nk"))).as("best"))
       .select(col("brand"), col("key"),
         (-col("best.nk")).as("best_key"), (-col("best.nd")).as("best_dist"))
@@ -424,7 +424,7 @@ object Dedup {
     val uniq = parts.withColumn("grp_n", count(lit(1)).over(w))
       .filter(col("grp_n") === 1)
       .select(col("brand"), col("key"), col("name"))
-    fuzzyBlockJoin(spark, uniq, parts, (a, b) => a =!= b, withDp = false)
+    fuzzyBlockJoin(uniq, parts, (a, b) => a =!= b, withDp = false)
   }
 
   /** The blocked fuzzy join with every cut FUSED into the join
@@ -440,45 +440,35 @@ object Dedup {
     * PlanQualitySpec.)
     *
     * The bag cut uses the native [[graft.expressions.PackedBagDistance]]
-    * over per-ROW packed histograms when the session has the engine
-    * extensions installed (measured 22× pair reduction past the length
-    * band at sf0.1); in a vanilla session it degrades to the two
-    * original cuts (never to a higher-order-function form — the
-    * interpreted bag was measured 6× slower than the DP it gates,
-    * PERF.md round 3). */
+    * over per-ROW packed histograms (measured 22× pair reduction past
+    * the length band at sf0.1; an interpreted higher-order-function bag
+    * was measured 6× slower than the DP it gates, PERF.md round 3). */
   private[graft] def fuzzyJoin(spark: SparkSession, dir: String,
       withDp: Boolean): DataFrame = {
     val p = Tables.part(spark, dir).select(col("p_brand").as("brand"),
       col("p_partkey").as("key"), col("p_name").as("name"))
-    fuzzyBlockJoin(spark, p, p, (a, b) => a < b, withDp)
+    fuzzyBlockJoin(p, p, (a, b) => a < b, withDp)
   }
 
   /** The blocked fuzzy join generalized over probe/build frames (both
     * with columns brand, key, name) and the key predicate — `<` for the
     * unordered pair contract, `=!=` for directed best-match probes. */
-  private def fuzzyBlockJoin(spark: SparkSession,
-      probe: DataFrame, build: DataFrame,
+  private def fuzzyBlockJoin(probe: DataFrame, build: DataFrame,
       keyCond: (Column, Column) => Column, withDp: Boolean): DataFrame = {
-    val hasBag = spark.catalog.functionExists("graft_bag_dist") &&
-      spark.catalog.functionExists("graft_letter_bag")
-    // lengths (and bags) are per-ROW projections, never recomputed per
+    // lengths and bags are per-ROW projections, never recomputed per
     // pair inside the join loop
     def side(df: DataFrame, key: String, name: String, len: String,
-        bag: String) = {
-      val base = df.select(col("brand"),
-        col("key").as(key), col("name").as(name),
-        length(col("name")).as(len))
-      if (hasBag) base.withColumn(bag, call_function("graft_letter_bag", col(name)))
-      else base
-    }
+        bag: String) =
+      df.select(col("brand"),
+          col("key").as(key), col("name").as(name),
+          length(col("name")).as(len))
+        .withColumn(bag, call_function("graft_letter_bag", col(name)))
     val a = side(probe, "key_a", "name_a", "len_a", "bag_a")
     val b = side(build, "key_b", "name_b", "len_b", "bag_b")
     var cond = a("brand") === b("brand") &&
       keyCond(col("key_a"), col("key_b")) &&
-      abs(col("len_a") - col("len_b")) <= FuzzyMaxDist
-    if (hasBag)
-      cond = cond &&
-        call_function("graft_bag_dist", col("bag_a"), col("bag_b")) <= FuzzyMaxDist
+      abs(col("len_a") - col("len_b")) <= FuzzyMaxDist &&
+      call_function("graft_bag_dist", col("bag_a"), col("bag_b")) <= FuzzyMaxDist
     if (withDp)
       cond = cond && levenshtein(col("name_a"), col("name_b"), FuzzyMaxDist) =!= -1
     a.join(b, cond)
@@ -1512,7 +1502,7 @@ object Dedup {
     * The default is the scale geometry, 4×16/radius-3 (the Manku
     * WWW'07 operating point): measured candidate exponent 1.49 across
     * the sf0.01→sf0.1 10× step vs 1.95 for 8×8/radius-7. Round-5
-    * measurement (tools/SimhashGeom) pinned down WHY the 8×8 geometry
+    * measurement (PERF.md) pinned down WHY the 8×8 geometry
     * is quadratic — and why no bucket-widening fixes it at radius 7:
     * the corpus' Hamming≤7 pair set is ITSELF quadratic (topic clusters
     * put ~40k doc pairs of 5k docs within signature Hamming 7 at sf0.1;
@@ -1542,7 +1532,7 @@ object Dedup {
     // raising it past the guarantee admits pairs whose band collision is
     // probabilistic rather than guaranteed (recall for those must be
     // established by measurement on the target corpus, as the registered
-    // op does via tools/SimhashGeom).
+    // op did, PERF.md round 5).
     val radius = cutRadius.getOrElse(bands - 1)
     require(radius >= bands - 1,
       s"cutRadius ($radius) below the pigeonhole guarantee (${bands - 1}) " +
@@ -1699,7 +1689,7 @@ object Dedup {
     *     measured-recall basis as the three green minhash oracles);
     *     candidate exponent 1.01 measured.
     *
-    * Why not one tier? Round-5 measurement (tools/SimhashGeom, PERF.md):
+    * Why not one tier? Round-5 measurement (PERF.md):
     * in-scope true pairs (all at J≥0.9) reach signature Hamming 7 — the
     * per-bit flip rate of a J≈0.9 pair is ≈0.1 regardless of doc length
     * in the 30-100-shingle range where this corpus' near-dups live, so

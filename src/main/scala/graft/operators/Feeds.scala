@@ -22,31 +22,6 @@ import graft.functions.TextAnalysis.asciiLower
   */
 object Feeds {
 
-  /** encodeURIComponent over a string column (F15, ref feeds:117).
-    * Extensions-on sessions run the native byte-looping
-    * [[graft.expressions.UriEncode]]; a vanilla session computes the
-    * identical law through built-in higher-order functions over the
-    * UTF-8 hex pairs (slower, but the fallback is off the hot path —
-    * SURVEY §2.9 preference order). NULL propagates; '' encodes to ''. */
-  private[operators] def uriEncode(
-      spark: org.apache.spark.sql.SparkSession,
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    if (spark.catalog.functionExists("graft_uri_encode"))
-      call_function("graft_uri_encode", c)
-    else {
-      val bytes = encode(c, "UTF-8")
-      val hx = upper(hex(bytes))
-      val pairs = transform(sequence(lit(1), octet_length(bytes)),
-        i => hx.substr(i * 2 - 1, lit(2)))
-      val enc = array_join(transform(pairs, p =>
-        when(p.between("30", "39") || p.between("41", "5A") ||
-            p.between("61", "7A") ||
-            p.isin("2D", "5F", "2E", "21", "7E", "2A", "27", "28", "29"),
-          decode(unhex(p), "UTF-8")).otherwise(concat(lit("%"), p))), "")
-      // sequence(1, 0) descends — gate the empty string explicitly
-      when(octet_length(bytes) === 0, lit("")).otherwise(enc)
-    }
-
   val feedExport: Op = Op(
     "q_feed_export",
     """WITH products AS (
@@ -121,9 +96,10 @@ object Feeds {
       // F15 url-encode (ref feeds:117 encodeURIComponent) — r12 verdict:
       // without it a slug carrying a reserved character emits a
       // malformed feed URL; exercised by the adversarial part names
-      // (quotes/commas/tabs/newlines/non-ASCII)
+      // (quotes/commas/tabs/newlines/non-ASCII); the native
+      // byte-looping graft.expressions.UriEncode, NULL propagates
       concat(lit("https://shop.example/products/"),
-        uriEncode(spark, col("slug"))).as("link"),
+        call_function("graft_uri_encode", col("slug"))).as("link"),
       // F18 sale-price swap (ref feeds:323-338)
       when(onSale, usd(col("compare_at_cents")))
         .otherwise(usd(col("price_cents"))).as("price"),

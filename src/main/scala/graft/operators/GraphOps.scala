@@ -411,7 +411,7 @@ object GraphOps {
     // drag the whole aggregate to a SortAggregate plan
     val best = lab.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
-        BestAgg.largest1(spark,
+        BestAgg.largest1(
           struct(col("qp").cast("int").as("q"), col("n_ws").as("n"),
             negate(col("doc_id")).as("nid"))).as("b"))
       .select(col("cluster_id"), col("cluster_size"),
@@ -983,7 +983,7 @@ object GraphOps {
       // bounded-heap argmax (BestAgg r15): largest (c, −lbl) ≡ the
       // mode with smallest-label tiebreak the min(struct) computed —
       // without the SortAggregate plan the struct buffer forced
-      .agg(BestAgg.largest1(ed.sparkSession,
+      .agg(BestAgg.largest1(
         struct(col("c"), (-col("lbl")).as("nlbl"))).as("b"))
       .select(col("dst").as("node"), (-col("b.nlbl")).as("lbl"))
 

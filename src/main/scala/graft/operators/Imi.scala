@@ -92,14 +92,14 @@ object Imi {
     * (vec_id, half, h, hn2) with hn2 > 0 — a vector with an all-zero
     * half drops out of THAT half (and, via the inner cell join, out of
     * the trained canopy entirely); both engines apply the same rule. */
-  def halves(spark: SparkSession, e: DataFrame): DataFrame =
+  def halves(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
         explode(array(
           struct(lit(0).as("half"), slice(col("v"), 1, 32).as("h")),
           struct(lit(1).as("half"), slice(col("v"), 33, 32).as("h"))))
           .as("hs"))
       .select(col("vec_id"), col("hs.half").as("half"), col("hs.h").as("h"))
-      .withColumn("hn2", inorm2(spark, col("h")))
+      .withColumn("hn2", inorm2(col("h")))
       .filter(col("hn2") > 0)
 
   /** Seed codebook per half — the first `k1` qualifying vectors
@@ -119,15 +119,15 @@ object Imi {
     * scale-invariant, so the sum ≡ the mean direction and everything
     * stays exact int64, which is what keeps the training
     * DuckDB-replayable). Cells that lose all members drop out. */
-  def lloydStep(spark: SparkSession, h: DataFrame, cb: DataFrame): DataFrame = {
+  def lloydStep(h: DataFrame, cb: DataFrame): DataFrame = {
     // argmax WITHOUT the vector in the aggregation buffer: carrying
     // `h` through min(struct(…)) made every partial-agg entry ~300 B
     // and the spill corpus-sized (the 10M soak filled the disk with
     // it); the winning half-vector is re-joined by its unique
     // (vec_id, half) key — one extra skinny shuffle, identical result
     // (the argmax and its tie-break (cos DESC, cent_id) are
-    // unchanged). The argmax itself rides graft_topk(k=1) when the
-    // session has the extension: min(struct) is a DECLARATIVE
+    // unchanged). The argmax itself rides graft_topk(k=1):
+    // min(struct) is a DECLARATIVE
     // aggregate with a struct buffer, which HashAggregateExec cannot
     // hold — the plan degrades to SortAggregate and SORTS the whole
     // N·k1 scored stream (the soak's measured terabyte spill at 10M),
@@ -136,42 +136,23 @@ object Imi {
     // smallest (−cos, cent_id).
     val scored = h.join(broadcast(cb), Seq("half"))
       .select(col("vec_id"), col("half"), col("cent_id"),
-        cosine(idot(spark, col("h"), col("cv")), col("hn2"), col("cn"))
+        cosine(idot(col("h"), col("cv")), col("hn2"), col("cn"))
           .as("cos"))
-    val best =
-      (if (spark.catalog.functionExists("graft_topk"))
-        scored.groupBy(col("vec_id"), col("half"))
-          .agg(element_at(call_function("graft_topk",
-            struct(col("cos"), negate(col("cent_id")).as("negc")),
-            lit(1)), 1).as("b"))
-          .select(col("vec_id"), col("half"),
-            negate(col("b.negc")).as("cell"))
-      else
-        scored.groupBy(col("vec_id"), col("half"))
-          .agg(min(struct(negate(col("cos")).as("nc"),
-            col("cent_id").as("cell"))).as("b"))
-          .select(col("vec_id"), col("half"), col("b.cell").as("cell")))
+    val best = scored.groupBy(col("vec_id"), col("half"))
+      .agg(element_at(call_function("graft_topk",
+        struct(col("cos"), negate(col("cent_id")).as("negc")),
+        lit(1)), 1).as("b"))
+      .select(col("vec_id"), col("half"), negate(col("b.negc")).as("cell"))
     val assigned = best
       .join(h.select(col("vec_id"), col("half"), col("h")),
         Seq("vec_id", "half"))
       .select(col("half"), col("cell"), col("h"))
     // element-wise vector-sum aggregate (the ivfUpdate r15 device):
-    // one exchange, map-side partial aggregation, bit-identical sums;
-    // the posexplode → per-(half, cell, dim) SUM → re-collect fallback
-    // stays for vanilla sessions
-    (if (spark.catalog.functionExists("graft_vecsum"))
-      assigned.groupBy(col("half"), col("cell"))
-        .agg(call_function("graft_vecsum", col("h")).as("cv"))
-    else
-      assigned
-        .select(col("half"), col("cell"), posexplode(col("h")).as(Seq("pos", "x")))
-        .groupBy(col("half"), col("cell"), col("pos"))
-        .agg(sum(col("x")).as("s"))
-        .groupBy(col("half"), col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
-          e => e.getField("s")).as("cv")))
+    // one exchange, map-side partial aggregation, bit-identical sums
+    assigned.groupBy(col("half"), col("cell"))
+      .agg(call_function("graft_vecsum", col("h")).as("cv"))
       .select(col("half"), col("cell").as("cent_id"), col("cv"))
-      .withColumn("cn", inorm2(spark, col("cv")))
+      .withColumn("cn", inorm2(col("cv")))
       .filter(col("cn") > 0)
   }
 
@@ -190,11 +171,10 @@ object Imi {
     * tie-break (`ORDER BY cos DESC, cent_id`) orders exactly as
     * before; the oracle prefixes apply the identical re-rank (`cbr`
     * CTE). Codebook-sized window — metadata, never data-scaled. */
-  def codebook(spark: SparkSession, h: DataFrame, k1: Int,
-      steps: Int): DataFrame = {
+  def codebook(h: DataFrame, k1: Int, steps: Int): DataFrame = {
     require(k1 < CellBase, s"k1 $k1 must stay below CellBase $CellBase")
     val cb = (1 to steps).foldLeft(seedCodebook(h, k1))((c, _) =>
-      lloydStep(spark, h, c))
+      lloydStep(h, c))
     val w = Window.partitionBy(col("half")).orderBy(col("cent_id"))
     cb.withColumn("cent_id", row_number().over(w).cast("long"))
   }
@@ -204,10 +184,8 @@ object Imi {
     * rows per vector. Per-half rank and integer dot ride along so
     * consumers can reconstruct the top-1 cell and the
     * concatenated-centroid cosine without re-scoring. */
-  def cellsOf(spark: SparkSession, e: DataFrame, k1: Int, steps: Int,
-      nprobe: Int): DataFrame =
-    cellsWithCodebook(spark, e,
-      codebook(spark, halves(spark, e), k1, steps), nprobe)
+  def cellsOf(e: DataFrame, k1: Int, steps: Int, nprobe: Int): DataFrame =
+    cellsWithCodebook(e, codebook(halves(e), k1, steps), nprobe)
 
   private val imiCache = SessionCache.mkFrames()
 
@@ -233,7 +211,7 @@ object Imi {
       // partition pruning at 100 TB.
       val store = PersistedStore.ensure(spark, dir, "embeddings.parquet",
         "imi_canopy", s"v3:k$k1:s$LloydSteps:p$NProbeHalf") { root =>
-        cellsOf(spark, e, k1, LloydSteps, NProbeHalf)
+        cellsOf(e, k1, LloydSteps, NProbeHalf)
           .repartition(col("cell"))
           .write.mode("overwrite").parquet(s"$root/cells")
       }
@@ -242,9 +220,8 @@ object Imi {
 
   /** Label-blind co-cell candidate pairs (src < dst, distinct) — the
     * soak's measured volume for the trained families. */
-  def trainedCandidates(spark: SparkSession, e: DataFrame, k1: Int,
-      nprobe: Int): DataFrame = {
-    val cells = cellsOf(spark, e, k1, LloydSteps, nprobe)
+  def trainedCandidates(e: DataFrame, k1: Int, nprobe: Int): DataFrame = {
+    val cells = cellsOf(e, k1, LloydSteps, nprobe)
       .select(col("cell"), col("vec_id"))
     val a = cells.alias("ca")
     val b = cells.alias("cb")
@@ -286,10 +263,10 @@ object Imi {
         "imi_standing", s"v3:k$k1:s$LloydSteps:p$NProbeHalf:d$DeltaMod") {
         root =>
           val standing = standing0
-          val h = halves(spark, standing)
-          val cb = codebook(spark, h, k1, LloydSteps)
+          val h = halves(standing)
+          val cb = codebook(h, k1, LloydSteps)
           cb.write.mode("overwrite").parquet(s"$root/codebook")
-          cellsWithCodebook(spark, standing,
+          cellsWithCodebook(standing,
             graft.Tables.parquet(spark, s"$root/codebook"), NProbeHalf)
             .repartition(col("cell"))
             .write.mode("overwrite").parquet(s"$root/cells")
@@ -302,16 +279,16 @@ object Imi {
     * the shared tail of index build (standing slice) and delta
     * assignment (arriving slice): no training, just 2·k1 broadcast
     * centroid scores per vector and the per-half top-nprobe slice. */
-  def cellsWithCodebook(spark: SparkSession, e: DataFrame, cb: DataFrame,
-      nprobe: Int): DataFrame = {
-    val h = halves(spark, e)
+  def cellsWithCodebook(e: DataFrame, cb: DataFrame, nprobe: Int)
+      : DataFrame = {
+    val h = halves(e)
     val scored = h.join(broadcast(cb), Seq("half"))
-      .withColumn("dot", idot(spark, col("h"), col("cv")))
+      .withColumn("dot", idot(col("h"), col("cv")))
       .select(col("vec_id"), col("half"), col("cent_id"), col("cn"),
         col("dot"),
         cosine(col("dot"), col("hn2"), col("cn")).as("cos"))
-    // top-nprobe per (vec, half): the bounded-heap aggregate when the
-    // session has the extension — collect_list buffers ALL k1 scored
+    // top-nprobe per (vec, half): the bounded-heap aggregate —
+    // collect_list buffers ALL k1 scored
     // centroids per group (k1·40 B per group, corpus-sized spill at
     // soak scale: the full lists ride the shuffle because collect_list
     // has no partial reduction), while graft_topk's partial heaps keep
@@ -329,20 +306,11 @@ object Imi {
     // reuse) and paid a SortMergeJoin to re-pair them. The nprobe²
     // cell cross-product is the same pairs, now built in-row.
     def halfTop(half: Int): Column =
-      if (spark.catalog.functionExists("graft_topk"))
-        call_function("graft_topk",
-          when(col("half") === half, struct(
-            col("cos"), negate(col("cent_id")).as("negc"),
-            col("dot").as("dot"), col("cn").as("cn"))), lit(nprobe))
-      else
-        slice(array_sort(collect_list(
-          when(col("half") === half, struct(
-            negate(col("cos")).as("ncos"), col("cent_id").as("c"),
-            col("dot").as("dot"), col("cn").as("cn"))))), 1, nprobe)
-    def centOf(s: Column): Column =
-      if (spark.catalog.functionExists("graft_topk"))
-        negate(s.getField("negc"))
-      else s.getField("c")
+      call_function("graft_topk",
+        when(col("half") === half, struct(
+          col("cos"), negate(col("cent_id")).as("negc"),
+          col("dot").as("dot"), col("cn").as("cn"))), lit(nprobe))
+    def centOf(s: Column): Column = negate(s.getField("negc"))
     val both = scored.groupBy(col("vec_id"))
       .agg(halfTop(0).as("cs0"), halfTop(1).as("cs1"))
       // inner-join semantics of the previous h0⋈h1 pairing: a vector
@@ -397,7 +365,7 @@ object Imi {
   private[graft] def deltaProbeOf(spark: SparkSession, dir: String,
       delta: DataFrame): DataFrame = {
     val (cb, standingCells) = standingIndex(spark, dir)
-    val deltaCells = cellsWithCodebook(spark, delta, cb, NProbeHalf)
+    val deltaCells = cellsWithCodebook(delta, cb, NProbeHalf)
     val pa = deltaCells.select(col("cell"), col("vec_id").as("src"),
       col("v").as("vs"), col("n2").as("ns"))
     val pb = standingCells.select(col("cell"), col("vec_id").as("dst"),
@@ -412,31 +380,23 @@ object Imi {
     // then riding the index scan's (single-file) parallelism.
     val scoredPairs = broadcast(pa).join(pb, Seq("cell"))
       .select(col("cell"), col("src"), col("dst"),
-        cosine(idot(spark, col("vs"), col("vd")),
+        cosine(idot(col("vs"), col("vd")),
           col("ns"), col("nd")).as("cos"))
-    // bounded-heap per-(cell, src) top-k when the extension is
-    // installed (r14): collect_list buffers every co-cell candidate
+    // bounded-heap per-(cell, src) top-k (r14): collect_list buffers
+    // every co-cell candidate
     // per group before truncating, while graft_topk's partial heaps
     // carry at most k rows per (mapper, group) across the exchange.
     // Element order/type is re-shaped to the exact (ncos, nn_id, cos)
     // structs the downstream flatten∘distinct∘sort merge consumes:
     // top-k LARGEST (cos, −nn_id) ≡ ascending (ncos, nn_id).
-    val perCell = (if (spark.catalog.functionExists("graft_topk"))
-      scoredPairs
-        .groupBy(col("cell"), col("src"))
-        .agg(transform(call_function("graft_topk", struct(
-          col("cos"), negate(col("dst")).as("nid"),
-          col("dst").as("nn_id")), lit(k)),
-          e => struct(negate(e.getField("cos")).as("ncos"),
-            e.getField("nn_id").as("nn_id"),
-            e.getField("cos").as("cos"))).as("t"))
-    else
-      scoredPairs
-        .groupBy(col("cell"), col("src"))
-        .agg(slice(array_sort(collect_list(struct(
-          negate(col("cos")).as("ncos"),
-          col("dst").as("nn_id"),
-          col("cos").as("cos")))), 1, k).as("t")))
+    val perCell = scoredPairs
+      .groupBy(col("cell"), col("src"))
+      .agg(transform(call_function("graft_topk", struct(
+        col("cos"), negate(col("dst")).as("nid"),
+        col("dst").as("nn_id")), lit(k)),
+        e => struct(negate(e.getField("cos")).as("ncos"),
+          e.getField("nn_id").as("nn_id"),
+          e.getField("cos").as("cos"))).as("t"))
     perCell
       .groupBy(col("src"))
       .agg(slice(array_distinct(array_sort(flatten(collect_list(col("t"))))),
@@ -489,9 +449,9 @@ object Imi {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
       .withColumn("q0", slice(col("qv"), 1, 32))
       .withColumn("q1", slice(col("qv"), 33, 32))
-      .withColumn("qn", inorm2(spark, col("qv")))
-      .withColumn("hn0", inorm2(spark, col("q0")))
-      .withColumn("hn1", inorm2(spark, col("q1")))
+      .withColumn("qn", inorm2(col("qv")))
+      .withColumn("hn0", inorm2(col("q0")))
+      .withColumn("hn1", inorm2(col("q1")))
       // same qualification as the batch side: whole vector AND both
       // halves nonzero (a zero half has no cells in the join form)
       .filter(col("qn") > 0 && col("hn0") > 0 && col("hn1") > 0)
@@ -500,7 +460,7 @@ object Imi {
       .crossJoin(broadcast(cellMap))
     def topCells(qh: Column, qhn: Column, cents: Column) =
       slice(array_sort(transform(cents, c =>
-        struct(negate(cosine(idot(spark, qh, c.getField("cv")),
+        struct(negate(cosine(idot(qh, c.getField("cv")),
           qhn, c.getField("cn"))).as("ncos"),
           c.getField("cent_id").as("c")))), 1, NProbeHalf)
     val myCells = flatten(transform(
@@ -513,7 +473,7 @@ object Imi {
       transform(myCells, c => element_at(col("cmap"), c)),
       m => m.isNotNull))
     val cos = (m: Column) =>
-      cosine(idot(spark, col("qv"), m.getField("v")),
+      cosine(idot(col("qv"), m.getField("v")),
         col("qn"), m.getField("n2"))
     // one dot per candidate: the sort key carries -cos, the output
     // column recovers cos by exact IEEE negation
@@ -593,7 +553,7 @@ object Imi {
       else Some {
         val (cb, standingCells) = standingIndex(spark, dir)
         standingCells.unionByName(
-          cellsWithCodebook(spark, delta, cb, NProbeHalf))
+          cellsWithCodebook(delta, cb, NProbeHalf))
       }
     // decision-time sampling mod SCALES with the corpus so the
     // measurement's brute-force ground truth stays Q·N ≈ GapQueries·N
@@ -618,7 +578,7 @@ object Imi {
           "for this corpus shape")
     }
     if (retrain)
-      cellsOf(spark, all, lawK1(nAll), LloydSteps, NProbeHalf)
+      cellsOf(all, lawK1(nAll), LloydSteps, NProbeHalf)
     else mergedOpt.get
   }
 
@@ -935,7 +895,7 @@ object Imi {
        |  SELECT vec_id, nn_id, cos,
        |         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, nn_id) AS rank
        |  FROM sc) WHERE rank <= 5""".stripMargin) { (spark, dir) =>
-    Similarity.knnTopKFromCells(spark, trainedCanopy(spark, dir), 5)
+    Similarity.knnTopKFromCells(trainedCanopy(spark, dir), 5)
   }
 
   /** Sampled-query cadence of [[imiRecall]]: every mod-th vector. */
@@ -1009,7 +969,7 @@ object Imi {
     * Shared by both recall ops. */
   private def recallFromCells(spark: SparkSession, dir: String,
       cellsV: DataFrame, mod: Int = RecallQueryMod): DataFrame = {
-    val probed = Similarity.knnTopKFromCells(spark, cellsV, RecallK,
+    val probed = Similarity.knnTopKFromCells(cellsV, RecallK,
         srcPred = v => v % mod === 0)
       .select(col("vec_id"), col("nn_id"))
     val e = Similarity.quantized(spark, dir)
@@ -1018,7 +978,7 @@ object Imi {
         col("n2").as("qn"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        cosine(idot(spark, col("qv"), col("v")), col("qn"), col("n2"))
+        cosine(idot(col("qv"), col("v")), col("qn"), col("n2"))
           .as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id").asc)
@@ -1088,7 +1048,7 @@ object Imi {
           cosine(col("dot0") + col("dot1"), col("n2"),
             col("cn0") + col("cn1")).as("cos_cent"),
           col("v"), col("n2"))
-      Similarity.semdedupFrom(spark, asg)
+      Similarity.semdedupFrom(asg)
   }
 
   /** Hard-negative mining over the TRAINED canopy — the fourth canopy
@@ -1116,7 +1076,7 @@ object Imi {
        |  SELECT vec_id, label, neg_id, neg_label, cos,
        |         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, neg_id) AS rank
        |  FROM sc) WHERE rank <= 3""".stripMargin) { (spark, dir) =>
-    Similarity.hardNegTopKFromCells(spark, trainedCanopy(spark, dir), 3)
+    Similarity.hardNegTopKFromCells(trainedCanopy(spark, dir), 3)
   }
 
   /** Embedding near-dup ANN over the TRAINED canopy — same contract
@@ -1151,7 +1111,7 @@ object Imi {
       a.join(b, Seq("cell", "label"))
         .filter(col("id_a") < col("id_b"))
         .select(col("label"), col("id_a"), col("id_b"),
-          cosine(idot(spark, col("va"), col("vb")),
+          cosine(idot(col("va"), col("vb")),
             col("na"), col("nb")).as("cos"))
         .distinct()
         .filter(col("cos") >= 0.35)

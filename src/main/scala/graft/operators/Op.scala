@@ -37,8 +37,16 @@ final class Op private (
 object Op {
   def apply(name: String, oracle: => String)(
       build: (SparkSession, String) => DataFrame): Op =
-    new Op(name, build, Some(() => oracle))
+    new Op(name, installing(build), Some(() => oracle))
 
   def noOracle(name: String)(build: (SparkSession, String) => DataFrame): Op =
-    new Op(name, build, None)
+    new Op(name, installing(build), None)
+
+  /** `build` on a session that carries [[graft.GraftExtensions]]: every
+    * op plans its native kernels whatever session it is handed. */
+  private def installing(build: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (spark, dir) =>
+    graft.GraftExtensions.install(spark)
+    build(spark, dir)
+  }
 }

@@ -55,7 +55,7 @@ object Pricing {
     // payload columns never participate in a comparison
     snaps
       .groupBy(col("market_item_id"), col("as_of_date"))
-      .agg(BestAgg.largest1(snaps.sparkSession, struct(
+      .agg(BestAgg.largest1(struct(
         (-srcPrio).as("nsp"), (-typePrio).as("ntp"),
         col("value_cents").as("v"),
         (-col("l_orderkey")).as("nok"), (-col("l_linenumber")).as("nln"),

@@ -52,7 +52,7 @@ object Retrieval {
     val scored = e.join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("doc_id"),
         Similarity.cosine(
-          Similarity.idot(spark, col("qv"), col("v")),
+          Similarity.idot(col("qv"), col("v")),
           col("qn"), col("n2")).as("cos"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("doc_id").asc)

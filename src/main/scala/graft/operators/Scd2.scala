@@ -141,7 +141,7 @@ object Scd2 {
         // bounded-heap argmax (BestAgg r15) — same struct ordering,
         // ObjectHashAggregate plan instead of the SortAggregate the
         // declarative max(struct) forced
-        BestAgg.largest1(log.sparkSession,
+        BestAgg.largest1(
           struct(col("us"), col("event_id"), col("op"), col("value")))
           .as("last"),
         count(lit(1)).as("n_ops"))

@@ -28,16 +28,10 @@ object Similarity {
     transform(emb, x => round(x.cast("double") * 1000000).cast("long"))
 
   /** Exact integer dot product of two quantized vectors: the native
-    * codegen'd [[graft.expressions.LongArrayDot]] when the session has
-    * `graft.GraftExtensions` installed (Verify/Bench/tests do), else
-    * the equivalent — but interpreted — higher-order-function form. */
-  def idot(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_dot"))
-      call_function("graft_dot", a, b)
-    else
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+    * codegen'd [[graft.expressions.LongArrayDot]]. */
+  def idot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  def inorm2(spark: SparkSession, a: Column): Column = idot(spark, a, a)
+  def inorm2(a: Column): Column = idot(a, a)
 
   def cosine(dot: Column, n1: Column, n2: Column): Column =
     dot.cast("double") / (sqrt(n1.cast("double")) * sqrt(n2.cast("double")))
@@ -49,14 +43,14 @@ object Similarity {
   def quantizedLabeled(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), quantize(col("embedding")).as("v"))
-      .withColumn("n2", inorm2(spark, col("v")))
+      .withColumn("n2", inorm2(col("v")))
       .filter(col("n2") > 0)
 
   /** Quantized embeddings with positive integer norms: (vec_id, v, n2). */
   def quantized(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
-      .withColumn("n2", inorm2(spark, col("v")))
+      .withColumn("n2", inorm2(col("v")))
       .filter(col("n2") > 0)
 
   /** Seed coarse-quantizer codebook: every `stride`-th vector.
@@ -92,12 +86,12 @@ object Similarity {
     * (BestAgg r15 — the former min(struct) planned as SortAggregate
     * over the whole N×K scored stream). Ordering identical: largest
     * (cos, −cent_id) ≡ smallest (−cos, cent_id). */
-  def ivfAssign(spark: SparkSession, n: DataFrame, cents: DataFrame): DataFrame =
+  def ivfAssign(n: DataFrame, cents: DataFrame): DataFrame =
     n.join(broadcast(cents))
       .select(col("vec_id"), col("v"), col("cent_id"),
-        cosine(idot(spark, col("v"), col("cv")), col("n2"), col("cn")).as("cos"))
+        cosine(idot(col("v"), col("cv")), col("n2"), col("cn")).as("cos"))
       .groupBy(col("vec_id"))
-      .agg(BestAgg.largest1(spark, struct(col("cos"),
+      .agg(BestAgg.largest1(struct(col("cos"),
         negate(col("cent_id")).as("ncell"), col("v").as("v"))).as("best"))
       .select(negate(col("best.ncell")).as("cell"), col("best.v").as("v"),
         col("best.cos").as("cos"))
@@ -108,38 +102,26 @@ object Similarity {
     * division): that is what keeps the refinement DuckDB-oracle-able.
     * One element-wise vector-sum aggregate per cell (`graft_vecsum`,
     * r15): ONE exchange with map-side partial aggregation, one
-    * dims-long buffer per (mapper, cell). The posexplode → SUM per
-    * (cell, dim) → ordered re-collect fallback (kept for vanilla
-    * sessions) multiplied the update stream ×dims through TWO
-    * exchanges — same integers either way (long addition is
-    * commutative/associative, so the per-dim sums are bit-identical).
-    * Cells that lose all members drop out. */
-  def ivfUpdate(spark: SparkSession, assigned: DataFrame): DataFrame = {
-    val summed =
-      if (spark.catalog.functionExists("graft_vecsum"))
-        assigned.groupBy(col("cell"))
-          .agg(call_function("graft_vecsum", col("v")).as("cv"))
-      else
-        assigned
-          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("cell"), col("pos")).agg(sum(col("x")).as("s"))
-          .groupBy(col("cell"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
-            e => e.getField("s")).as("cv"))
-    summed
+    * dims-long buffer per (mapper, cell), where the former posexplode
+    * → SUM per (cell, dim) → ordered re-collect multiplied the update
+    * stream ×dims through TWO exchanges — same integers either way
+    * (long addition is commutative/associative, so the per-dim sums
+    * are bit-identical). Cells that lose all members drop out. */
+  def ivfUpdate(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("cell"))
+      .agg(call_function("graft_vecsum", col("v")).as("cv"))
       .select(col("cell").as("cent_id"), col("cv"))
-      .withColumn("cn", inorm2(spark, col("cv")))
+      .withColumn("cn", inorm2(col("cv")))
       .filter(col("cn") > 0)
-  }
 
   /** Seed codebook refined by ONE Lloyd iteration — the deterministic
     * iteration count the q_ann_ivf oracle replays; more rounds are the
     * same job repeated ([[ivfLloydTrain]]). Seeded at [[ivfLawStride]]
     * (one scalar count of the qualifying population — bounded
     * metadata, the IMI-law pattern). */
-  def ivfLloydCodebook(spark: SparkSession, n: DataFrame,
-      nQualifying: Option[Long] = None): DataFrame =
-    ivfUpdate(spark, ivfAssign(spark, n,
+  def ivfLloydCodebook(n: DataFrame, nQualifying: Option[Long] = None)
+      : DataFrame =
+    ivfUpdate(ivfAssign(n,
       ivfSeedCodebook(n, ivfLawStride(nQualifying.getOrElse(n.count())))))
 
   private val qualCountCache = SessionCache.mkScalars()
@@ -158,8 +140,8 @@ object Similarity {
 
   /** Spherical-k-means objective under a codebook: Σ best-cos (higher
     * is better). One scalar to the driver — metadata-sized. */
-  def ivfObjective(spark: SparkSession, n: DataFrame, cents: DataFrame): Double =
-    ivfAssign(spark, n, cents).agg(sum(col("cos"))).head.getDouble(0)
+  def ivfObjective(n: DataFrame, cents: DataFrame): Double =
+    ivfAssign(n, cents).agg(sum(col("cos"))).head.getDouble(0)
 
   /** Iterated spherical Lloyd with a convergence stop: run assign →
     * update until the objective's relative gain drops below `tol` (or
@@ -171,20 +153,19 @@ object Similarity {
     * round is the same linear assign/update job — at 100 TB you pay
     * iterations × one pass, nothing super-linear).
     */
-  def ivfLloydTrain(
-      spark: SparkSession, n: DataFrame, maxIters: Int,
+  def ivfLloydTrain(n: DataFrame, maxIters: Int,
       tol: Double = 1e-4): (DataFrame, Seq[Double]) = {
     var cents = ivfSeedCodebook(n, ivfLawStride(n.count())).localCheckpoint()
     val trace = scala.collection.mutable.ArrayBuffer(
-      ivfObjective(spark, n, cents))
+      ivfObjective(n, cents))
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
       // codebooks are tiny (≈ √N rows under the law stride) —
       // checkpoint truncates the
       // per-round lineage growth that would otherwise replan k rounds deep
-      val next = ivfUpdate(spark, ivfAssign(spark, n, cents)).localCheckpoint()
-      val obj = ivfObjective(spark, n, next)
+      val next = ivfUpdate(ivfAssign(n, cents)).localCheckpoint()
+      val obj = ivfObjective(n, next)
       val gain = obj - trace.last
       if (gain > 0) { cents = next; trace += obj }
       if (gain <= math.abs(trace.last) * tol) converged = true
@@ -215,13 +196,13 @@ object Similarity {
        |  FROM scored) WHERE rk <= 5""".stripMargin) { (spark, dir) =>
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
-      .withColumn("n2", inorm2(spark, col("v")))
+      .withColumn("n2", inorm2(col("v")))
     val q = e.filter(col("vec_id") < 10).select(
       col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
     val scored = e.join(broadcast(q),
         col("vec_id") =!= col("q_id") && col("qn") > 0 && col("n2") > 0)
       .select(col("q_id"), col("vec_id").as("c_id"),
-        cosine(idot(spark, col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
+        cosine(idot(col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
@@ -343,9 +324,8 @@ object Similarity {
     * sub-quadraticity of the candidate volume is measurable (and
     * spec-pinned) independently of the verify stage. */
 
-  def cellCanopyCandidates(spark: SparkSession, e: DataFrame,
-      nprobe: Int): DataFrame = {
-    val cells = canopyCells(spark, e, nprobe)
+  def cellCanopyCandidates(e: DataFrame, nprobe: Int): DataFrame = {
+    val cells = canopyCells(e, nprobe)
     val ca = cells.alias("ca")
     val cb = cells.alias("cb")
     ca.join(cb,
@@ -366,13 +346,12 @@ object Similarity {
     * sort by (-cos, cent_id) — same total order as annIvf / DuckDB's
     * `ROW_NUMBER() OVER (ORDER BY cos DESC, cent_id)` — and slice
     * the top nprobe. */
-  def canopyCells(spark: SparkSession, e: DataFrame,
-      nprobe: Int, carryVec: Boolean = false,
+  def canopyCells(e: DataFrame, nprobe: Int, carryVec: Boolean = false,
       stride: Int = 50): DataFrame = {
     val cents = ivfSeedCodebook(e, stride)
     val scored = e.join(broadcast(cents))
       .select(col("vec_id"), col("label"), col("v"), col("n2"),
-        struct(negate(cosine(idot(spark, col("v"), col("cv")),
+        struct(negate(cosine(idot(col("v"), col("cv")),
           col("n2"), col("cn"))).as("ncos"), col("cent_id").as("cell"))
           .as("sc"))
     val top = slice(array_sort(collect_list(col("sc"))), 1, nprobe).as("cs")
@@ -408,7 +387,7 @@ object Similarity {
     canopyCache.getOrBuild(spark, dir, "embeddings.parquet") {
       val store = PersistedStore.ensure(spark, dir, "embeddings.parquet",
         "graph_canopy", "v1") { root =>
-        canopyCells(spark, quantizedLabeled(spark, dir), nprobe = 8,
+        canopyCells(quantizedLabeled(spark, dir), nprobe = 8,
           carryVec = true, stride = 10)
           .write.mode("overwrite").parquet(s"$root/cells")
       }
@@ -430,14 +409,14 @@ object Similarity {
             col("ea.vec_id") < col("eb.vec_id"))
           .select(col("ea.label").as("label"),
             col("ea.vec_id").as("id_a"), col("eb.vec_id").as("id_b"))
-      } else cellCanopyCandidates(spark, e, nprobe)
+      } else cellCanopyCandidates(e, nprobe)
     candIds
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va"),
         col("n2").as("na")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"),
         col("n2").as("nb")), Seq("id_b"))
       .select(col("label"), col("id_a"), col("id_b"),
-        cosine(idot(spark, col("va"), col("vb")), col("na"), col("nb")).as("cos"))
+        cosine(idot(col("va"), col("vb")), col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= 0.35)
   }
 
@@ -526,17 +505,16 @@ object Similarity {
        |  FROM pairs) WHERE rk <= 5""".stripMargin) { (spark, dir) =>
     val nprobe = 2
     val n = quantized(spark, dir)
-    val cents1 = ivfLloydCodebook(spark, n,
-      Some(qualifyingCount(spark, dir)))
+    val cents1 = ivfLloydCodebook(n, Some(qualifyingCount(spark, dir)))
     val scored = n.join(broadcast(cents1))
       .select(col("vec_id"), col("v"), col("n2"), col("cent_id"),
-        cosine(idot(spark, col("v"), col("cv")), col("n2"), col("cn")).as("cos"))
+        cosine(idot(col("v"), col("cv")), col("n2"), col("cn")).as("cos"))
     // nearest centroid per vector as an aggregate (not a window),
     // through the bounded-heap argmax (BestAgg r15 — min(struct)
     // planned as SortAggregate over the rescored stream)
     val assign = scored
       .groupBy(col("vec_id"))
-      .agg(BestAgg.largest1(spark, struct(col("cos"),
+      .agg(BestAgg.largest1(struct(col("cos"),
         negate(col("cent_id")).as("ncell"),
         col("v").as("v"), col("n2").as("n2"))).as("best"))
       .select(col("vec_id"), negate(col("best.ncell")).as("cell"),
@@ -554,7 +532,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .join(broadcast(queries), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        cosine(idot(spark, col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
+        cosine(idot(col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
     pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
@@ -602,22 +580,22 @@ object Similarity {
     // cost) and projected with the native dot product
     def coef(p: Int): Column = array((0 until 64).map(i =>
       lit((p * 2654435761L + i * 40503L) % 1000003L - 501501L)): _*)
-    def bucketOf(spark: SparkSession, v: Column): Column =
+    def bucketOf(v: Column): Column =
       (0 until planes).map { p =>
-        when(idot(spark, v, coef(p)) > 0, 1L << p).otherwise(0L)
+        when(idot(v, coef(p)) > 0, 1L << p).otherwise(0L)
       }.reduce(_ + _)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
-      .withColumn("n2", inorm2(spark, col("v")))
+      .withColumn("n2", inorm2(col("v")))
       .filter(col("n2") > 0)
-      .withColumn("bucket", bucketOf(spark, col("v")))
+      .withColumn("bucket", bucketOf(col("v")))
     val q = e.filter(col("vec_id") < 10).select(
       col("vec_id").as("q_id"), col("v").as("qv"),
       col("n2").as("qn"), col("bucket"))
     val scored = e.join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"), col("bucket"),
-        cosine(idot(spark, col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
+        cosine(idot(col("qv"), col("v")), col("qn"), col("n2")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
@@ -625,22 +603,13 @@ object Similarity {
 
   /** Per-label integer sum-centroid (cosine is scale-invariant, so the
     * element-wise SUM ≡ the mean direction and stays exact int64 — the
-    * same trick as [[ivfLloydCodebook]]): (label, cv, cn). The
-    * posexplode → SUM(dim) → ordered re-collect is one linear N×64-row
-    * shuffle producing a label-count-sized table. */
-  def labelCentroids(spark: SparkSession, n: DataFrame): DataFrame =
-    // element-wise vector-sum aggregate (the ivfUpdate r15 device):
-    // one exchange instead of explode + two; bit-identical sums
-    (if (spark.catalog.functionExists("graft_vecsum"))
-      n.groupBy(col("label"))
-        .agg(call_function("graft_vecsum", col("v")).as("cv"))
-    else
-      n.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("label"), col("pos")).agg(sum(col("x")).as("s"))
-        .groupBy(col("label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
-          e => e.getField("s")).as("cv")))
-      .withColumn("cn", inorm2(spark, col("cv")))
+    * same trick as [[ivfLloydCodebook]]): (label, cv, cn). One
+    * element-wise vector-sum aggregate (the [[ivfUpdate]] r15 device):
+    * one exchange producing a label-count-sized table. */
+  def labelCentroids(n: DataFrame): DataFrame =
+    n.groupBy(col("label"))
+      .agg(call_function("graft_vecsum", col("v")).as("cv"))
+      .withColumn("cn", inorm2(col("cv")))
       .filter(col("cn") > 0)
 
   /** Embedding-space outlier detection (the SemDeDup/CCNet-style
@@ -676,18 +645,18 @@ object Similarity {
        |       CAST(list_sum(list_transform(range(1, len(n.v)+1), i -> n.v[i]*cn.cv[i])) AS DOUBLE)
        |         / (sqrt(CAST(n.n2 AS DOUBLE)) * sqrt(CAST(cn.cn2 AS DOUBLE))) < -0.05 AS is_outlier
        |FROM n JOIN cn ON n.label = cn.label""".stripMargin) { (spark, dir) =>
-    outlierScores(spark, Tables.embeddings(spark, dir)
+    outlierScores(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), quantize(col("embedding")).as("v"))
-      .withColumn("n2", inorm2(spark, col("v")))
+      .withColumn("n2", inorm2(col("v")))
       .filter(col("n2") > 0))
   }
 
   /** [[embedOutlier]] kernel over (vec_id, label, v, n2) rows. */
-  def outlierScores(spark: SparkSession, n: DataFrame): DataFrame = {
-    val cents = labelCentroids(spark, n)
+  def outlierScores(n: DataFrame): DataFrame = {
+    val cents = labelCentroids(n)
     n.join(broadcast(cents), Seq("label"))
       .select(col("vec_id"), col("label"),
-        cosine(idot(spark, col("v"), col("cv")), col("n2"), col("cn"))
+        cosine(idot(col("v"), col("cv")), col("n2"), col("cn"))
           .as("cos_centroid"))
       .withColumn("is_outlier", col("cos_centroid") < -0.05)
   }
@@ -832,35 +801,28 @@ object Similarity {
 
   /** [[randProj]] kernel over any (vec_id, embedding) rows: the
     * projected BIGINT vector per row — the native codegen'd
-    * [[graft.expressions.RandProjExpr]] when the session has
-    * `graft.GraftExtensions` installed (one primitive d·k loop inside
-    * whole-stage codegen), else [[randProjFold]].
-    *
-    * Evaluation shape is load-bearing in the fallback too: a
-    * `transform(dims, j => aggregate(qv …))` form references
-    * `qv`/`scale` once each, so CollapseProject INLINES them into the
-    * lambda bodies — `qv` recomputes per output dim and `scale` per
-    * element, O(d²·k) interpreted evals per row (measured 22 s at
-    * sf0.1, vs 3.1 s for the single-fold form, vs 0.1 s native).
-    * The fold pins ONE scale eval per row via `array_repeat` and
-    * accumulates all k output dims in ONE pass over the zipped (q, i)
-    * pairs — the irreducible d·k multiply-adds no matter what the
-    * optimizer inlines. */
-  def randProjVectors(e: DataFrame): DataFrame = {
-    val pv =
-      if (e.sparkSession.catalog.functionExists("graft_randproj"))
-        call_function("graft_randproj", col("embedding"), lit(RandProjDim))
-      else randProjFold(col("embedding"))
-    e.withColumn("pv", pv).select(col("vec_id"), col("pv"))
-  }
+    * [[graft.expressions.RandProjExpr]], one primitive d·k loop inside
+    * whole-stage codegen. */
+  def randProjVectors(e: DataFrame): DataFrame =
+    e.withColumn("pv",
+        call_function("graft_randproj", col("embedding"), lit(RandProjDim)))
+      .select(col("vec_id"), col("pv"))
 
-  /** The built-in HOF form of the projection — the vanilla-session
-    * fallback and the parity reference for the native expression
-    * (RandProjSpec pins fold ≡ native element-wise, including null
-    * elements: a null cell quantizes to 0 — the `coalesce` below —
-    * exactly as the native expression's `isNullAt` branch contributes
-    * 0, so a vanilla session and an extended one agree on any
-    * input). */
+  /** The built-in HOF form of the projection — the parity reference
+    * for the native expression (RandProjSpec pins fold ≡ native
+    * element-wise, including null elements: a null cell quantizes to
+    * 0 — the `coalesce` below — exactly as the native expression's
+    * `isNullAt` branch contributes 0).
+    *
+    * Evaluation shape is load-bearing: a `transform(dims, j =>
+    * aggregate(qv …))` form references `qv`/`scale` once each, so
+    * CollapseProject INLINES them into the lambda bodies — `qv`
+    * recomputes per output dim and `scale` per element, O(d²·k)
+    * interpreted evals per row (measured 22 s at sf0.1, vs 3.1 s for
+    * the single-fold form, vs 0.1 s native). The fold pins ONE scale
+    * eval per row via `array_repeat` and accumulates all k output dims
+    * in ONE pass over the zipped (q, i) pairs — the irreducible d·k
+    * multiply-adds no matter what the optimizer inlines. */
   private[graft] def randProjFold(emb: Column): Column = {
     val dims = sequence(lit(0), lit(RandProjDim - 1))
     val qv = zip_with(emb,
@@ -932,39 +894,17 @@ object Similarity {
       lit(0L), (acc, x) => acc + x)
 
   /** PQ assignment stage: (vec_id, m, k) where k = d2·16 + cid packs
-    * (distance, winning centroid) per subspace. Pre-slices both sides
-    * per subspace and scores via the native dot (the
-    * [[pqSubspaceAssign]] r15 device — the former per-scored-row
+    * (distance, winning centroid) per subspace: the shared codebook
+    * (cid, cv) pre-sliced per subspace and scored by
+    * [[pqSubspaceAssign]] (the r15 device — the former per-scored-row
     * [[subDist2]] re-sliced the full vectors AND ran interpreted
-    * lambdas across the whole N·8·16 fan-out); the lambda form stays
-    * for vanilla sessions. */
+    * lambdas across the whole N·8·16 fan-out). */
   def pqAssign(q: DataFrame, codebook: DataFrame): DataFrame =
-    if (spark_functionExists(q, "graft_dot")) {
-      val subs = pqSubspaces(q)
-        .withColumn("nx",
-          call_function("graft_dot", col("sub8"), col("sub8")))
-      val cb8 = codebook
-        .select(col("cid"), explode(sequence(lit(0), lit(7))).as("m"),
-          col("cv"))
-        .select(col("m"), col("cid"),
-          slice(col("cv"), col("m") * 8 + 1, lit(8)).as("cv8"))
-        .withColumn("ny",
-          call_function("graft_dot", col("cv8"), col("cv8")))
-      subs.join(broadcast(cb8), Seq("m"))
-        .select(col("vec_id"), col("m"), col("cid"),
-          (col("nx") + col("ny") -
-            lit(2L) * call_function("graft_dot", col("sub8"), col("cv8")))
-            .as("d2"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(col("d2") * 16 + col("cid")).as("k"))
-    } else
-      q.select(col("vec_id"), col("v"),
-          explode(sequence(lit(0), lit(7))).as("m"))
-        .join(broadcast(codebook))
-        .select(col("vec_id"), col("m"), col("cid"),
-          subDist2(col("v"), col("cv"), col("m")).as("d2"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(col("d2") * 16 + col("cid")).as("k"))
+    pqSubspaceAssign(pqSubspaces(q), codebook
+      .select(col("cid"), explode(sequence(lit(0), lit(7))).as("m"),
+        col("cv"))
+      .select(col("m"), col("cid"),
+        slice(col("cv"), col("m") * 8 + 1, lit(8)).as("cv8")))
 
   /** Pack per-subspace assignments (vec_id, m, k) into the final code
     * row — THE one definition of the nibble layout, shared by the seed
@@ -1005,27 +945,13 @@ object Similarity {
     // (subvector, centroid) joined row (the whole N·8·16 fan-out;
     // measured as the op's single 1 s job), while the norms hoist to
     // one evaluation per row per side and the cross term is ONE
-    // LongArrayDot call. Lambda form stays as the vanilla-session
-    // fallback.
-    val scored =
-      if (spark_functionExists(subs, "graft_dot")) {
-        val s2 = subs.withColumn("nx",
-          call_function("graft_dot", col("sub8"), col("sub8")))
-        val c2 = cb.withColumn("ny",
-          call_function("graft_dot", col("cv8"), col("cv8")))
-        s2.join(broadcast(c2), Seq("m"))
-          .select(col("vec_id"), col("m"), col("cid"),
-            (col("nx") + col("ny") -
-              lit(2L) * call_function("graft_dot", col("sub8"), col("cv8")))
-              .as("d2"))
-      } else {
-        val d2 = aggregate(
-          zip_with(col("sub8"), col("cv8"), (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, x) => acc + x)
-        subs.join(broadcast(cb), Seq("m"))
-          .select(col("vec_id"), col("m"), col("cid"), d2.as("d2"))
-      }
-    scored
+    // LongArrayDot call.
+    val s2 = subs.withColumn("nx", idot(col("sub8"), col("sub8")))
+    val c2 = cb.withColumn("ny", idot(col("cv8"), col("cv8")))
+    s2.join(broadcast(c2), Seq("m"))
+      .select(col("vec_id"), col("m"), col("cid"),
+        (col("nx") + col("ny") - lit(2L) * idot(col("sub8"), col("cv8")))
+          .as("d2"))
       .groupBy(col("vec_id"), col("m"))
       .agg(min(col("d2") * nc + col("cid")).as("k"))
   }
@@ -1153,30 +1079,14 @@ object Similarity {
     // per-(m, cid, pos) count the explode form carried is constant
     // across pos (every member contributes all 8 dims), so the
     // per-(m, cid) count divides identically
-    if (spark_functionExists(subs, "graft_vecsum"))
-      members.groupBy(col("m"), col("cid"))
-        .agg(call_function("graft_vecsum", col("sub8")).as("sm"),
-          count(lit(1)).as("n"))
-        .select(col("m"), col("cid"),
-          transform(col("sm"), s =>
-            floor(s.cast("double") / col("n").cast("double")).cast("long"))
-            .as("cv8"))
-    else
-      members
-        .select(col("m"), col("cid"), posexplode(col("sub8")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("cid"), col("pos"))
-        .agg(sum(col("x")).as("sm"), count(lit(1)).as("n"))
-        .withColumn("c",
-          floor(col("sm").cast("double") / col("n").cast("double")).cast("long"))
-        .groupBy(col("m"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          e => e.getField("c")).as("cv8"))
+    members.groupBy(col("m"), col("cid"))
+      .agg(call_function("graft_vecsum", col("sub8")).as("sm"),
+        count(lit(1)).as("n"))
+      .select(col("m"), col("cid"),
+        transform(col("sm"), s =>
+          floor(s.cast("double") / col("n").cast("double")).cast("long"))
+          .as("cv8"))
   }
-
-  /** Function-registry probe off a frame's own session (pqLloydCodebook
-    * has no SparkSession parameter to thread). */
-  private def spark_functionExists(df: DataFrame, name: String): Boolean =
-    df.sparkSession.catalog.functionExists(name)
 
   /** ADC (asymmetric distance computation) search over the PQ codes —
     * how a PQ index is actually queried at scale: the query stays
@@ -1258,10 +1168,9 @@ object Similarity {
     * integer math, so the DuckDB oracle replays it bit-for-bit
     * (q_pq_adc_refine); the recall gain over raw ADC is pinned in
     * DedupSimilaritySpec. */
-  def adcRefined(
-      spark: SparkSession, q: DataFrame, codebook: DataFrame,
+  def adcRefined(q: DataFrame, codebook: DataFrame,
       queries: DataFrame, shortlist: Int, k: Int): DataFrame =
-    refineShortlist(spark, q, queries, adcScores(q, codebook, queries),
+    refineShortlist(q, queries, adcScores(q, codebook, queries),
       shortlist, k)
 
   /** Cache of trained PQ indexes: (codebook, codes). Training the
@@ -1313,7 +1222,7 @@ object Similarity {
       spark: SparkSession, q: DataFrame, queries: DataFrame, dir: String,
       steps: Int, shortlist: Int, k: Int, nc: Int = 16): DataFrame = {
     val (cb, codes) = pqTrainedIndex(spark, q, dir, steps, nc)
-    refineShortlist(spark, q, queries,
+    refineShortlist(q, queries,
       adcScoresFromCodes(codes, cb, queries), shortlist, k)
   }
 
@@ -1368,7 +1277,7 @@ object Similarity {
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     val queries = q.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    refineShortlist(spark, q, queries,
+    refineShortlist(q, queries,
       adcScoresAssigned(seedPqCodes(spark, dir), codebook, queries),
       shortlist = 25, k = 5)
       .select(col("q_id"), col("c_id"), col("d2"), col("rk"))
@@ -1555,7 +1464,7 @@ object Similarity {
     * the trained path): point-lookup join of shortlisted (q_id, vec_id)
     * pairs against the raw quantized vectors, exact int64 L2² through
     * the codegen'd dot, top-`k` per query. */
-  def refineShortlist(spark: SparkSession, q: DataFrame, queries: DataFrame,
+  def refineShortlist(q: DataFrame, queries: DataFrame,
       scores: DataFrame, shortlist: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
@@ -1563,13 +1472,13 @@ object Similarity {
       .withColumn("srk", row_number().over(wAdc))
       .filter(col("srk") <= shortlist)
       .select(col("q_id"), col("vec_id"))
-    val qn = queries.withColumn("qn", inorm2(spark, col("qv")))
-    val cn = q.withColumn("cn", inorm2(spark, col("v")))
+    val qn = queries.withColumn("qn", inorm2(col("qv")))
+    val cn = q.withColumn("cn", inorm2(col("v")))
     val wExact = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
     cand.join(cn, Seq("vec_id"))
       .join(broadcast(qn), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        (col("qn") + col("cn") - idot(spark, col("qv"), col("v")) * 2).as("d2"))
+        (col("qn") + col("cn") - idot(col("qv"), col("v")) * 2).as("d2"))
       .withColumn("rk", row_number().over(wExact))
       .filter(col("rk") <= k)
   }
@@ -1667,7 +1576,7 @@ object Similarity {
     // near-dup geometry: 1.08M vs 1.40M candidates AND rank-1 recall
     // 0.80 vs 0.75 — small cells bound the per-cell quadratic term,
     // extra probes buy the recall back. Recall floor pinned in spec.
-    knnTopKFromCells(spark, graphCanopy(spark, dir), k)
+    knnTopKFromCells(graphCanopy(spark, dir), k)
   }
 
   /** The kNN-graph scoring tail over ANY (cell, vec_id, v, n2) canopy
@@ -1677,20 +1586,18 @@ object Similarity {
     * telemetry's sampled queries) while every member still serves as a
     * candidate — the filter applies inside the grouped row, before the
     * per-source scoring work, so unsampled members cost nothing. */
-  private[graft] def knnTopKFromCells(
-      spark: SparkSession, cellsV: DataFrame, k: Int,
+  private[graft] def knnTopKFromCells(cellsV: DataFrame, k: Int,
       srcPred: Column => Column = _ => lit(true)): DataFrame = {
     // ROW-LOCAL per-cell all-pairs (the arrival-time probe's device,
     // distributed one row per cell): ONE exchange groups members per
     // cell — each vector moves once per probed cell, instead of riding
     // the cell self-join where every co-cell pair copies BOTH vectors
     // (occupancy× the bytes; measured 6.8 s → 1.8 s at sf0.1 on the
-    // trained canopy, ImiTailProbe). A grouped row holds one cell's
+    // trained canopy, PERF.md). A grouped row holds one cell's
     // members — bounded by the occupancy law (canopy stride / IMI
     // k1-sizing keep per-cell membership ~occ·nprobe, corpus-
     // independent), the same bound that makes the candidate volume
-    // linear. Per-cell top-k computes inside the row via HOFs; the
-    // global merge then moves only ≤ nprobe·k skinny structs per
+    // linear. Per-cell top-k computes inside the row; the global merge then moves only ≤ nprobe·k skinny structs per
     // vector. Union-of-per-cell-top-k ⊇ global top-k because every
     // candidate appears in some cell's list; a dst reached via several
     // cells yields byte-identical structs, removed by array_distinct.
@@ -1698,28 +1605,15 @@ object Similarity {
       .groupBy(col("cell"))
       .agg(collect_list(struct(col("vec_id"), col("v"), col("n2")))
         .as("ms"))
-    // native per-cell kernel when the extension is installed (r14):
-    // the HOF form below evaluates every candidate pair through
-    // interpreted lambdas (closure dispatch + boxed struct per pair) —
-    // graft_cell_topk runs the identical computation (same IEEE
-    // expression order, same (ncos, id) insertion order) as one tight
-    // loop per cell row; outputs are bit-identical (ExpressionsSpec).
-    val perCell = (if (spark.catalog.functionExists("graft_cell_topk"))
-      ms.select(explode(call_function("graft_cell_topk",
+    // native per-cell kernel (r14): graft_cell_topk runs the per-pair
+    // cosine and top-k (same IEEE expression order, same (ncos, id)
+    // insertion order as the HOF form CellTopKSpec compares it with)
+    // as one tight loop per cell row, where interpreted lambdas paid a
+    // closure dispatch and a boxed struct per candidate pair
+    val perCell = ms
+      .select(explode(call_function("graft_cell_topk",
         filter(col("ms"), s => srcPred(s.getField("vec_id"))),
         col("ms"), lit(k), lit(false))).as("e"))
-    else
-      ms.select(explode(transform(
-        filter(col("ms"), s => srcPred(s.getField("vec_id"))),
-        s => struct(s.getField("vec_id").as("src"),
-          slice(array_sort(transform(
-            filter(col("ms"),
-              m => m.getField("vec_id") =!= s.getField("vec_id")),
-            m => {
-              val c = cosine(idot(spark, s.getField("v"), m.getField("v")),
-                s.getField("n2"), m.getField("n2"))
-              struct(negate(c).as("ncos"), m.getField("vec_id").as("nn_id"))
-            })), 1, k).as("t")))).as("e")))
       .select(col("e.src").as("src"), col("e.t").as("t"))
     perCell
       .groupBy(col("src"))
@@ -1779,14 +1673,14 @@ object Similarity {
        |  SELECT vec_id, label, neg_id, neg_label, cos,
        |         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, neg_id) AS rank
        |  FROM sc) WHERE rank <= 3""".stripMargin) { (spark, dir) =>
-    hardNegTopKFromCells(spark, graphCanopy(spark, dir), 3)
+    hardNegTopKFromCells(graphCanopy(spark, dir), 3)
   }
 
   /** The hard-negative scoring tail over ANY (cell, vec_id, label, v,
     * n2) canopy frame — shared by [[hardNegatives]] and the
     * trained-index sibling ([[Imi.hardNegativesTrained]]). */
   private[operators] def hardNegTopKFromCells(
-      spark: SparkSession, cellsV: DataFrame, k: Int): DataFrame = {
+      cellsV: DataFrame, k: Int): DataFrame = {
     // same ROW-LOCAL per-cell device as [[knnTopKFromCells]] (one
     // member-grouping exchange, occupancy-law-bounded rows); the label
     // mismatch is the in-row candidate filter
@@ -1794,26 +1688,11 @@ object Similarity {
       .groupBy(col("cell"))
       .agg(collect_list(struct(col("vec_id"), col("label"), col("v"),
         col("n2"))).as("ms"))
-    // native per-cell kernel when installed (the [[knnTopKFromCells]]
-    // r14 device, label-exclusion mode) — bit-identical output, one
-    // tight loop per cell instead of interpreted per-pair lambdas
-    val perCell = (if (spark.catalog.functionExists("graft_cell_topk"))
-      ms.select(explode(call_function("graft_cell_topk",
+    // native per-cell kernel (the [[knnTopKFromCells]] r14 device,
+    // label-exclusion mode): one tight loop per cell row
+    val perCell = ms
+      .select(explode(call_function("graft_cell_topk",
         col("ms"), col("ms"), lit(k), lit(true))).as("e"))
-    else
-      ms.select(explode(transform(col("ms"),
-        s => struct(s.getField("vec_id").as("src"),
-          s.getField("label").as("la"),
-          slice(array_sort(transform(
-            filter(col("ms"),
-              m => m.getField("label") =!= s.getField("label")),
-            m => {
-              val c = cosine(idot(spark, s.getField("v"), m.getField("v")),
-                s.getField("n2"), m.getField("n2"))
-              struct(negate(c).as("ncos"),
-                m.getField("vec_id").as("neg_id"),
-                m.getField("label").as("neg_label"))
-            })), 1, k).as("t")))).as("e")))
       .select(col("e.src").as("src"), col("e.la").as("la"),
         col("e.t").as("t"))
     perCell
@@ -1831,8 +1710,8 @@ object Similarity {
   /** Candidate edge set of [[knnGraph]] (pre-scoring): distinct ordered
     * (src, dst) pairs sharing a canopy cell. Exposed so the soak can
     * measure its growth exponent directly. */
-  def knnCandidates(spark: SparkSession, e: DataFrame): DataFrame = {
-    val cells = canopyCells(spark, e, nprobe = 8, stride = 10)
+  def knnCandidates(e: DataFrame): DataFrame = {
+    val cells = canopyCells(e, nprobe = 8, stride = 10)
       .select("vec_id", "cell")
     val ka = cells.alias("ka")
     val kb = cells.alias("kb")
@@ -1899,17 +1778,16 @@ object Similarity {
        |)
        |SELECT vec_id, label, cell, cos_cent FROM asg
        |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""".stripMargin) {
-    (spark, dir) => semdedupFrom(spark, semdedupAssign(spark, dir))
+    (spark, dir) => semdedupFrom(semdedupAssign(spark, dir))
   }
 
   /** The SemDeDup pruning tail over ANY (vec_id, label, cell, cos_cent,
     * v, n2) cluster assignment — shared by [[semdedup]] (seed-cell
     * clusters) and the trained-index sibling ([[Imi.semdedupTrained]]):
     * drop b iff a keep-order-earlier cluster-mate scores cos ≥ 0.35. */
-  private[operators] def semdedupFrom(
-      spark: SparkSession, asg: DataFrame): DataFrame = {
+  private[operators] def semdedupFrom(asg: DataFrame): DataFrame = {
     val dropped = semdedupOrderedPairs(asg)
-      .filter(cosine(idot(spark, col("va"), col("vb")),
+      .filter(cosine(idot(col("va"), col("vb")),
         col("na"), col("nb")) >= 0.35)
       .select(col("b_id").as("vec_id"))
       .distinct()
@@ -1993,12 +1871,12 @@ object Similarity {
     (spark, dir) =>
       val asg = semdedupAssign(spark, dir)
       val dropped = semdedupOrderedPairs(asg)
-        .filter(cosine(idot(spark, col("va"), col("vb")),
+        .filter(cosine(idot(col("va"), col("vb")),
           col("na"), col("nb")) >= 0.35)
         .select(col("b_id").as("vec_id"))
         .distinct()
         .withColumn("is_dup", lit(true))
-      val osc = outlierScores(spark, quantizedLabeled(spark, dir))
+      val osc = outlierScores(quantizedLabeled(spark, dir))
         .select(col("vec_id"), col("cos_centroid"))
       asg
         .join(dropped, Seq("vec_id"), "left")
@@ -2046,7 +1924,7 @@ object Similarity {
       "q_stream_ann (Similarity.annProbeRows)",
       "q_stream_ann_trained (join-form probe of the trained IMI index)",
       e.count() * nprobe, graft.EngineConf.broadcastIndexBudget(spark))
-    val cells = canopyCells(spark, e, nprobe, carryVec = true, stride = 10)
+    val cells = canopyCells(e, nprobe, carryVec = true, stride = 10)
     val cellMap = cells.groupBy(col("cell"))
       .agg(collect_list(struct(col("vec_id"), col("v"), col("n2")))
         .as("members"))
@@ -2057,12 +1935,12 @@ object Similarity {
         .as("cents"))
     val q = queries
       .select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", inorm2(spark, col("qv")))
+      .withColumn("qn", inorm2(col("qv")))
       .filter(col("qn") > 0)
       .crossJoin(broadcast(centArr))
       .crossJoin(broadcast(cellMap))
     val myCells = slice(array_sort(transform(col("cents"), c =>
-      struct(negate(cosine(idot(spark, col("qv"), c.getField("cv")),
+      struct(negate(cosine(idot(col("qv"), c.getField("cv")),
         col("qn"), c.getField("cn"))).as("ncos"),
         c.getField("cent_id").as("cell")))), 1, nprobe)
     // every probed cell exists in the map: probed cells are centroid
@@ -2072,7 +1950,7 @@ object Similarity {
         element_at(col("cmap"), mc.getField("cell")))),
       m => m.getField("vec_id") =!= col("vec_id"))
     val cos = (m: Column) =>
-      cosine(idot(spark, col("qv"), m.getField("v")),
+      cosine(idot(col("qv"), m.getField("v")),
         col("qn"), m.getField("n2"))
     // one dot per candidate: the sort key carries -cos, the output
     // column recovers cos by exact IEEE negation
@@ -2111,8 +1989,8 @@ object Similarity {
     // (constant within the (vec_id, label) group) out directly
     e.join(broadcast(cents))
       .groupBy(col("vec_id"), col("label"))
-      .agg(BestAgg.largest1(spark, struct(
-        cosine(idot(spark, col("v"), col("cv")),
+      .agg(BestAgg.largest1(struct(
+        cosine(idot(col("v"), col("cv")),
           col("n2"), col("cn")).as("cos"),
         negate(col("cent_id")).as("ncell"),
         col("v").as("v"), col("n2").as("n2"))).as("best"))

@@ -155,8 +155,7 @@ case class AsOfJoinExec(
 }
 
 /** Planner strategy for [[AsOfJoinPlan]] — installed session-wide by
-  * [[graft.GraftExtensions]] (`injectPlannerStrategy`), and lazily via
-  * `spark.experimental.extraStrategies` for vanilla sessions.
+  * [[graft.GraftExtensions]] (`injectPlannerStrategy`).
   */
 object GraftAsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * one `TextAnalysis.asciiLower`/`asciiLowerSql` emit and the
   * CasefoldConventionSpec pins), only on default-collation strings,
   * and is fixpoint-safe (the result contains no `StringTranslate`).
-  * Call sites stay on the vanilla-safe translate form; ad-hoc SQL that
-  * spells the same translate gets the fast path for free.
+  * Call sites stay on the declarative translate form, the spelling the
+  * oracle SQL shares; ad-hoc SQL that spells the same translate gets
+  * the fast path for free.
   *
   * Installed by [[graft.GraftExtensions]] via `injectOptimizerRule`.
   */

@@ -1148,7 +1148,7 @@ object EventStream {
           explode(TextOps.bigramArray).as("bg"))
         .select(col("doc_id"),
           (graft.functions.TextAnalysis.fingerprint(
-            concat_ws(" ", col("bg.w1"), col("bg.w2")), Some(spark))
+            concat_ws(" ", col("bg.w1"), col("bg.w2")))
             % Retrieval.DsirDim).as("bucket"))
         .writeStream.outputMode(OutputMode.Append)
         .format("memory").queryName(table)
@@ -1232,7 +1232,7 @@ object EventStream {
                 s"$root/topk-$b/_SUCCESS")
               if (!fs.exists(committed))
                 Imi.deltaProbeOf(batch.sparkSession, dir,
-                    imiQualified(spark, batch))
+                    imiQualified(batch))
                   .write.mode("overwrite").parquet(s"$root/topk-$b")
             }
             .option("checkpointLocation", s"$root/checkpoint")
@@ -1247,7 +1247,7 @@ object EventStream {
           .forall(_.isEmpty)) {
         import graft.operators.Imi
         Imi.deltaProbeOf(spark, dir,
-            imiQualified(spark, graft.Tables.embeddings(spark, dir).limit(0)))
+            imiQualified(graft.Tables.embeddings(spark, dir).limit(0)))
           .write.mode("overwrite").parquet(s"$root/topk-0")
       }
       root
@@ -1257,11 +1257,11 @@ object EventStream {
     * an arbitrary embeddings-shaped frame — the arrivals batch enters
     * [[graft.operators.Imi.deltaProbeOf]] with exactly the columns
     * the batch op's delta carries. */
-  private def imiQualified(spark: SparkSession, raw: DataFrame): DataFrame = {
+  private def imiQualified(raw: DataFrame): DataFrame = {
     import graft.operators.Similarity
     raw.select(col("vec_id"), col("label"),
         Similarity.quantize(col("embedding")).as("v"))
-      .withColumn("n2", Similarity.inorm2(spark, col("v")))
+      .withColumn("n2", Similarity.inorm2(col("v")))
       .filter(col("n2") > 0)
   }
 
@@ -1490,8 +1490,8 @@ object EventStream {
       val arriving = tableStream(spark, dir, "documents.parquet")
       val buckets = transform(TextOps.bigramArray, bg =>
         graft.functions.TextAnalysis.fingerprint(
-          concat_ws(" ", bg.getField("w1"), bg.getField("w2")),
-          Some(spark)) % Retrieval.DsirDim)
+          concat_ws(" ", bg.getField("w1"), bg.getField("w2")))
+          % Retrieval.DsirDim)
       arriving
         // zero-bigram docs are outside the batch op's domain
         .filter(size(TextOps.bigramArray) > 0)

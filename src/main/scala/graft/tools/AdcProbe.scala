@@ -29,11 +29,11 @@ object AdcProbe {
     val queries = q.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val exactTop = queries
-      .withColumn("qn", Similarity.inorm2(spark, col("qv")))
-      .crossJoin(q.withColumn("cn", Similarity.inorm2(spark, col("v"))))
+      .withColumn("qn", Similarity.inorm2(col("qv")))
+      .crossJoin(q.withColumn("cn", Similarity.inorm2(col("v"))))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        (col("qn") + col("cn") - Similarity.idot(spark, col("qv"), col("v")) * 2)
+        (col("qn") + col("cn") - Similarity.idot(col("qv"), col("v")) * 2)
           .as("l2"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("l2"), col("vec_id"))))
@@ -56,8 +56,7 @@ object AdcProbe {
       val scores =
         Similarity.adcScoresSub(q, cb, queries, nc).localCheckpoint()
       for (shortlist <- Seq(25, 50, 100)) {
-        val refined = topOf(Similarity.refineShortlist(
-          spark, q, queries, scores, shortlist = shortlist, k = 5), "c_id")
+        val refined = topOf(Similarity.refineShortlist(q, queries, scores, shortlist = shortlist, k = 5), "c_id")
         println(f"[adc] $dir nc=$nc%3d steps=$steps short=$shortlist%3d " +
           f"refinedRecall=${recall(refined)}%.2f")
       }

@@ -82,13 +82,13 @@ object Explore {
     // ---- embed near-dup: IVF cell coverage ----
     val n = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), Similarity.quantize(col("embedding")).as("v"))
-      .withColumn("n2", Similarity.idot(spark, col("v"), col("v")))
+      .withColumn("n2", Similarity.idot(col("v"), col("v")))
       .filter(col("n2") > 0)
     val cents = n.filter(col("vec_id") % 50 === 0).select(
       col("vec_id").as("cent_id"), col("v").as("cv"), col("n2").as("cn"))
     val scored = n.join(broadcast(cents))
       .select(col("vec_id"), col("label"), col("cent_id"),
-        Similarity.cosine(Similarity.idot(spark, col("v"), col("cv")),
+        Similarity.cosine(Similarity.idot(col("v"), col("cv")),
           col("n2"), col("cn")).as("cos"))
     val ranked = scored.withColumn("rn", row_number().over(
       Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cent_id"))))
@@ -122,12 +122,12 @@ object Explore {
       def meanBestCos(cents: DataFrame): Double =
         n.join(broadcast(cents))
           .select(col("vec_id"),
-            Similarity.cosine(Similarity.idot(spark, col("v"), col("cv")),
+            Similarity.cosine(Similarity.idot(col("v"), col("cv")),
               col("n2"), col("cn")).as("cos"))
           .groupBy("vec_id").agg(max("cos").as("c"))
           .agg(avg("c")).head().getDouble(0)
       println(f"== mean best-cos SEED codebook:  ${meanBestCos(Similarity.ivfSeedCodebook(n))}%.4f")
-      println(f"== mean best-cos LLOYD codebook: ${meanBestCos(Similarity.ivfLloydCodebook(spark, n))}%.4f")
+      println(f"== mean best-cos LLOYD codebook: ${meanBestCos(Similarity.ivfLloydCodebook(n))}%.4f")
     }
     spark.stop()
   }

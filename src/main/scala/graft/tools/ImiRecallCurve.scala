@@ -39,7 +39,7 @@ object ImiRecallCurve {
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
     val brute = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        Similarity.cosine(Similarity.idot(spark, col("qv"), col("v")),
+        Similarity.cosine(Similarity.idot(col("qv"), col("v")),
           col("qn"), col("n2")).as("cos"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("q_id").as("vec_id"), col("c_id").as("nn_id"))
@@ -47,7 +47,7 @@ object ImiRecallCurve {
     val nQ = q.count()
 
     def recallOf(cells: org.apache.spark.sql.DataFrame): Double = {
-      val trained = Similarity.knnTopKFromCells(spark, cells, k,
+      val trained = Similarity.knnTopKFromCells(cells, k,
           srcPred = v => v % mod === 0)
         .select(col("vec_id"), col("nn_id"))
       val hits = trained.join(brute, Seq("vec_id", "nn_id")).count()
@@ -58,11 +58,11 @@ object ImiRecallCurve {
     println("deltaMod deltaFrac recall_merge recall_retrain")
     for (dm <- Seq(10, 4, 3, 2)) {
       val standing = e.filter(col("vec_id") % dm =!= 0)
-      val cbS = Imi.codebook(spark, Imi.halves(spark, standing),
+      val cbS = Imi.codebook(Imi.halves(standing),
         Imi.lawK1Of(standing), Imi.LloydSteps)
-      val merged = Imi.cellsWithCodebook(spark, e, cbS, Imi.NProbeHalf)
+      val merged = Imi.cellsWithCodebook(e, cbS, Imi.NProbeHalf)
         .localCheckpoint()
-      val retrained = Imi.cellsOf(spark, e, Imi.lawK1Of(e), Imi.LloydSteps,
+      val retrained = Imi.cellsOf(e, Imi.lawK1Of(e), Imi.LloydSteps,
         Imi.NProbeHalf).localCheckpoint()
       val frac = 1.0 / dm
       println(f"$dm%8d $frac%9.3f ${recallOf(merged)}%12.3f " +

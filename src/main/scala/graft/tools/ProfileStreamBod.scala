@@ -17,6 +17,7 @@ object ProfileStreamBod {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.GraftExtensions.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     def timed[T](tag: String)(body: => T): T = {
       val t0 = System.nanoTime()

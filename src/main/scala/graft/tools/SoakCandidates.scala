@@ -79,7 +79,7 @@ object SoakCandidates {
         "incremental" -> (() => Dedup.incrementalCandidates(spark, dir).count()),
         // kNN graph candidate edges (cell canopy, no label block) and
         // SemDeDup cluster-bounded ordered pairs — population = vectors
-        "knn" -> (() => Similarity.knnCandidates(spark,
+        "knn" -> (() => Similarity.knnCandidates(
           Similarity.quantized(spark, dir).withColumn("label", lit(0)))
           .count()),
         "semdedup" -> (() => Similarity.semdedupOrderedPairs(
@@ -135,7 +135,7 @@ object SoakCandidates {
           val k1 = math.max(4, math.ceil(math.sqrt(vecs / 10.0)).toInt)
           println(s"[soak] $dir imi: k1=$k1 nprobe=${graft.operators.Imi.NProbeHalf}" +
             s" assignRows=${vecs * 2 * k1}")
-          graft.operators.Imi.trainedCandidates(spark,
+          graft.operators.Imi.trainedCandidates(
             Similarity.quantized(spark, dir).withColumn("label", lit(0)),
             k1, graft.operators.Imi.NProbeHalf).count()
         }),
@@ -154,11 +154,11 @@ object SoakCandidates {
             .withColumn("label", lit(0))
           val standing = e.filter(col("vec_id") % imi.DeltaMod =!= 0)
           val delta = e.filter(col("vec_id") % imi.DeltaMod === 0)
-          val cb = imi.codebook(spark, imi.halves(spark, standing), k1,
+          val cb = imi.codebook(imi.halves(standing), k1,
             imi.LloydSteps).localCheckpoint()
-          val sc = imi.cellsWithCodebook(spark, standing, cb,
+          val sc = imi.cellsWithCodebook(standing, cb,
             imi.NProbeHalf).select(col("cell"), col("vec_id"))
-          val dc = imi.cellsWithCodebook(spark, delta, cb,
+          val dc = imi.cellsWithCodebook(delta, cb,
             imi.NProbeHalf).select(col("cell"), col("vec_id").as("src"))
           println(s"[soak] $dir imidelta: k1=$k1 " +
             s"deltaAssignRows=${delta.count() * 2 * k1}")

@@ -12,7 +12,8 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
 /** [[Tables.parquet]] — the one parquet read path: its footer schema
   * equals Spark's inferred schema on every layout the engine reads, it
   * runs no Spark job to get it, and a path with no data file fails
-  * exactly as a plain read does. */
+  * exactly as a plain read does. Its source scan has a sibling that
+  * keeps one plan per native kernel (no session probes). */
 class ParquetReadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -107,23 +108,45 @@ class ParquetReadSpec extends SparkSpec {
     assert(ours.getMessage === plain.getMessage)
   }
 
-  test("engine sources read parquet only through Tables.parquet") {
-    // anchored on the source tree wherever the forked JVM's working
-    // directory lands; the helper's own fallback read must be found, so
-    // an empty scan cannot pass
+  /** Engine sources under `src/main/scala/graft` (outside `tools/`),
+    * path relative to that root → text. Anchored on the source tree
+    * wherever the forked JVM's working directory lands. */
+  private lazy val engineSources: Map[String, String] = {
     val rel = Paths.get("src", "main", "scala", "graft")
     val root = Iterator.iterate(Paths.get(sys.props("user.dir"))
         .toAbsolutePath)(_.getParent)
       .takeWhile(_ != null).map(_.resolve(rel)).find(Files.isDirectory(_))
       .getOrElse(fail(s"$rel not found above ${sys.props("user.dir")}"))
-    val readParquet = """\.read\s*\.parquet\(""".r
-    val hits = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.startsWith(root.resolve("tools")))
-      .filter(p => readParquet.findFirstIn(Files.readString(p)).nonEmpty)
-      .map(root.relativize(_).toString).toSeq
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+  }
+
+  private def engineSourcesMatching(pattern: scala.util.matching.Regex)
+      : Seq[String] =
+    engineSources.collect {
+      case (p, text) if pattern.findFirstIn(text).nonEmpty => p
+    }.toSeq
+
+  test("engine sources read parquet only through Tables.parquet") {
+    // the helper's own fallback read must be found, so an empty scan
+    // cannot pass
+    val hits = engineSourcesMatching("""\.read\s*\.parquet\(""".r)
     assert(hits.contains("Tables.scala"), "the scan found no reader at all")
     assert(hits.filterNot(_ == "Tables.scala").isEmpty,
       s"read parquet through Tables.parquet, not spark.read.parquet: $hits")
+  }
+
+  test("engine sources reach the native kernels without a session probe") {
+    // the installer must be among the scanned files, so an empty scan
+    // cannot pass; every kernel call site outside it has one plan
+    assert(engineSources.contains("GraftExtensions.scala"),
+      "the scan found no installer")
+    val hits = engineSourcesMatching(
+      """catalog\s*\.functionExists\(|experimental\s*\.extraStrategies""".r)
+    assert(hits.filterNot(_ == "GraftExtensions.scala").isEmpty,
+      "call the graft_ kernels unconditionally; GraftExtensions.install " +
+        s"puts them in every op's session: $hits")
   }
 }

@@ -90,12 +90,12 @@ class CellTopKSpec extends SparkSpec {
     // session's output on the same frames
     val e = graft.operators.Similarity.quantizedLabeled(spark, sf001)
     val cells = graft.operators.Similarity
-      .canopyCells(spark, e, nprobe = 8, stride = 10)
+      .canopyCells(e, nprobe = 8, stride = 10)
       .select("vec_id", "cell")
       .join(e.select(col("vec_id"), col("v"), col("n2")), Seq("vec_id"))
       .select("cell", "vec_id", "v", "n2")
     val withExt = graft.operators.Similarity
-      .knnTopKFromCells(spark, cells, 5)
+      .knnTopKFromCells(cells, 5)
     val ms = cells.groupBy(col("cell"))
       .agg(collect_list(struct(col("vec_id"), col("v"), col("n2"))).as("ms"))
     val hofPerCell = hofKnn(ms, 5)

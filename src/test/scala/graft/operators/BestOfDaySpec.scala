@@ -75,7 +75,7 @@ class BestOfDaySpec extends SparkSpec {
         .toDF("g", "v")
         .select(col("g"), when(col("v").isNotNull,
           struct(col("v").as("v"))).as("s"))
-      val got = df.groupBy("g").agg(BestAgg.largest1(spark, col("s")).as("b"))
+      val got = df.groupBy("g").agg(BestAgg.largest1(col("s")).as("b"))
       val want = df.groupBy("g").agg(max(col("s")).as("b"))
       val rows = got.orderBy("g").collect().toSeq
       assert(rows === want.orderBy("g").collect().toSeq)

@@ -409,7 +409,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // codebook has only 10 cells, so probing 4 of them covers ~all
     // pairs by construction and proves nothing.
     val e = Similarity.quantizedLabeled(spark, "/root/testdata/sf0.1")
-    val candidates = Similarity.cellCanopyCandidates(spark, e, nprobe = 4)
+    val candidates = Similarity.cellCanopyCandidates(e, nprobe = 4)
       .count()
     val blockedPairs = e.groupBy($"label").count()
       .select(sum($"count" * ($"count" - 1))).as[Long].head() / 2
@@ -440,12 +440,12 @@ class DedupSimilaritySpec extends SparkSpec {
     def meanBestCos(cents: org.apache.spark.sql.DataFrame): Double =
       n.join(broadcast(cents))
         .select($"vec_id",
-          Similarity.cosine(Similarity.idot(spark, $"v", $"cv"),
+          Similarity.cosine(Similarity.idot($"v", $"cv"),
             $"n2", $"cn").as("cos"))
         .groupBy("vec_id").agg(max("cos").as("c"))
         .agg(avg("c")).head().getDouble(0)
     val seed = meanBestCos(Similarity.ivfSeedCodebook(n))
-    val lloyd = meanBestCos(Similarity.ivfLloydCodebook(spark, n))
+    val lloyd = meanBestCos(Similarity.ivfLloydCodebook(n))
     assert(lloyd > seed,
       f"Lloyd codebook did not improve assignment: $lloyd%.4f <= $seed%.4f")
     // (b) probe-recall floor vs exact top-5: nprobe=2 of k=10 diffuse
@@ -548,11 +548,11 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter($"vec_id" < 16) // candidates that ARE codebook rows
     // exact quantized L2²(q, c) = qn + cn - 2·dot
     val exact = queries
-      .withColumn("qn", Similarity.inorm2(spark, $"qv"))
-      .crossJoin(codebook.withColumn("cn", Similarity.inorm2(spark, $"cv")))
+      .withColumn("qn", Similarity.inorm2($"qv"))
+      .crossJoin(codebook.withColumn("cn", Similarity.inorm2($"cv")))
       .filter($"q_id" =!= $"cid")
       .select($"q_id", $"cid".as("vec_id"),
-        ($"qn" + $"cn" - Similarity.idot(spark, $"qv", $"cv") * 2).as("l2"))
+        ($"qn" + $"cn" - Similarity.idot($"qv", $"cv") * 2).as("l2"))
     val joined = adc.join(exact, Seq("q_id", "vec_id"))
       .select($"adc", $"l2").as[(Long, Long)].collect()
     assert(joined.length == 10 * 15) // 10 queries × (16 − their own row)
@@ -573,11 +573,11 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter($"rk" <= 5).select($"q_id", $"vec_id")
       .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     val exactTop = queries
-      .withColumn("qn", Similarity.inorm2(spark, $"qv"))
-      .crossJoin(q.withColumn("cn", Similarity.inorm2(spark, $"v")))
+      .withColumn("qn", Similarity.inorm2($"qv"))
+      .crossJoin(q.withColumn("cn", Similarity.inorm2($"v")))
       .filter($"q_id" =!= $"vec_id")
       .select($"q_id", $"vec_id",
-        ($"qn" + $"cn" - Similarity.idot(spark, $"qv", $"v") * 2).as("l2"))
+        ($"qn" + $"cn" - Similarity.idot($"qv", $"v") * 2).as("l2"))
       .withColumn("rk", org.apache.spark.sql.functions.row_number.over(
         org.apache.spark.sql.expressions.Window
           .partitionBy($"q_id").orderBy($"l2", $"vec_id")))
@@ -609,14 +609,14 @@ class DedupSimilaritySpec extends SparkSpec {
           .partitionBy($"q_id").orderBy($"adc", $"vec_id")))
       .filter($"rk" <= 5).select($"q_id", $"vec_id"))
     val refinedTop = topSets(
-      Similarity.adcRefined(spark, q, codebook, queries, shortlist = 25, k = 5)
+      Similarity.adcRefined(q, codebook, queries, shortlist = 25, k = 5)
         .select($"q_id", $"c_id"))
     val exactTop = topSets(queries
-      .withColumn("qn", Similarity.inorm2(spark, $"qv"))
-      .crossJoin(q.withColumn("cn", Similarity.inorm2(spark, $"v")))
+      .withColumn("qn", Similarity.inorm2($"qv"))
+      .crossJoin(q.withColumn("cn", Similarity.inorm2($"v")))
       .filter($"q_id" =!= $"vec_id")
       .select($"q_id", $"vec_id",
-        ($"qn" + $"cn" - Similarity.idot(spark, $"qv", $"v") * 2).as("l2"))
+        ($"qn" + $"cn" - Similarity.idot($"qv", $"v") * 2).as("l2"))
       .withColumn("rk", org.apache.spark.sql.functions.row_number.over(
         org.apache.spark.sql.expressions.Window
           .partitionBy($"q_id").orderBy($"l2", $"vec_id")))
@@ -647,11 +647,11 @@ class DedupSimilaritySpec extends SparkSpec {
     def topSets(df: org.apache.spark.sql.DataFrame) = df
       .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     val exactTop = topSets(queries
-      .withColumn("qn", Similarity.inorm2(spark, $"qv"))
-      .crossJoin(q.withColumn("cn", Similarity.inorm2(spark, $"v")))
+      .withColumn("qn", Similarity.inorm2($"qv"))
+      .crossJoin(q.withColumn("cn", Similarity.inorm2($"v")))
       .filter($"q_id" =!= $"vec_id")
       .select($"q_id", $"vec_id",
-        ($"qn" + $"cn" - Similarity.idot(spark, $"qv", $"v") * 2).as("l2"))
+        ($"qn" + $"cn" - Similarity.idot($"qv", $"v") * 2).as("l2"))
       .withColumn("rk", org.apache.spark.sql.functions.row_number.over(
         org.apache.spark.sql.expressions.Window
           .partitionBy($"q_id").orderBy($"l2", $"vec_id")))
@@ -783,7 +783,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("multi-iteration IVF Lloyd: objective monotone up per step, converges") {
     val n = Similarity.quantized(spark, sf001)
-    val (cb, trace) = Similarity.ivfLloydTrain(spark, n, maxIters = 3)
+    val (cb, trace) = Similarity.ivfLloydTrain(n, maxIters = 3)
     info(s"spherical objective trace: ${trace.mkString(" -> ")}")
     // at least the first Lloyd step must improve on the seed (the
     // one-step op already proves it improves mean best-cos)

@@ -31,8 +31,8 @@ class ImiSpec extends SparkSpec {
 
   test("assignment cost law: the scored frame is |halves| x (<= 2*k1) " +
     "rows — fixed per-vector work, independent of corpus size") {
-    val h = Imi.halves(spark, e)
-    val cb = Imi.codebook(spark, h, k1, Imi.LloydSteps).cache()
+    val h = Imi.halves(e)
+    val cb = Imi.codebook(h, k1, Imi.LloydSteps).cache()
     // the trained codebook never exceeds 2*k1 centroids (k1 per half)
     val perHalf = cb.groupBy($"half").agg(count(lit(1)).as("n"))
     assert(perHalf.filter($"n" > k1).count() === 0)
@@ -60,7 +60,7 @@ class ImiSpec extends SparkSpec {
       .filter($"vec_id" % Imi.RecallQueryMod === 0)
       .select($"vec_id", $"nn_id")
       .as[(Long, Long)].collect().sorted.toSeq
-    val filtered = Similarity.knnTopKFromCells(spark, canopy, 5,
+    val filtered = Similarity.knnTopKFromCells(canopy, 5,
         srcPred = v => v % Imi.RecallQueryMod === 0)
       .select($"vec_id", $"nn_id")
       .as[(Long, Long)].collect().sorted.toSeq
@@ -107,7 +107,7 @@ class ImiSpec extends SparkSpec {
       "evicted reread diverged")
     assert(listing === before, "store was rebuilt on a cache miss")
     // fresh (non-persisted) construction agrees with the committed store
-    val fresh = Imi.cellsOf(spark, e, k1, Imi.LloydSteps, Imi.NProbeHalf)
+    val fresh = Imi.cellsOf(e, k1, Imi.LloydSteps, Imi.NProbeHalf)
     assert(rows(fresh) === first, "persisted canopy drifted from fresh")
   }
 
@@ -117,7 +117,7 @@ class ImiSpec extends SparkSpec {
     val y = e.select($"vec_id".as("dst"), $"v".as("vd"), $"n2".as("nd"))
     val truth = x.join(y, $"src" =!= $"dst")
       .select($"src", $"dst",
-        Similarity.cosine(Similarity.idot(spark, $"vs", $"vd"),
+        Similarity.cosine(Similarity.idot($"vs", $"vd"),
           $"ns", $"nd").as("cos"))
       .groupBy($"src")
       .agg(max(struct($"cos", negate($"dst").as("nd"))).as("best"))
@@ -208,7 +208,7 @@ class ImiSpec extends SparkSpec {
     "codebook — the index is never retrained") {
     val all = Similarity.quantizedLabeled(spark, sf001)
     val (cb, _) = Imi.standingIndex(spark, sf001)
-    val want = Imi.cellsWithCodebook(spark, all, cb, Imi.NProbeHalf)
+    val want = Imi.cellsWithCodebook(all, cb, Imi.NProbeHalf)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
     val got = Imi.imiCompact.build(spark, sf001)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
@@ -225,7 +225,7 @@ class ImiSpec extends SparkSpec {
     "on the union") {
     val got = Imi.compactUnion(spark, sf001, 0.0)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
-    val want = Imi.cellsOf(spark,
+    val want = Imi.cellsOf(
       Similarity.quantizedLabeled(spark, sf001),
       Imi.lawK1Of(e), Imi.LloydSteps, Imi.NProbeHalf)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
@@ -238,7 +238,7 @@ class ImiSpec extends SparkSpec {
     "mismatch fails LOUDLY") {
     val got = Imi.imiRetrain.build(spark, sf001)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
-    val want = Imi.cellsOf(spark,
+    val want = Imi.cellsOf(
       Similarity.quantizedLabeled(spark, sf001),
       Imi.lawK1Of(e), Imi.LloydSteps, Imi.NProbeHalf)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
@@ -261,7 +261,7 @@ class ImiSpec extends SparkSpec {
     // floor −1 means ANY measured gap exceeds it → retrain
     val got = Imi.compactUnion(spark, sf001, 0.99, gapFloor = -1.0)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
-    val want = Imi.cellsOf(spark,
+    val want = Imi.cellsOf(
       Similarity.quantizedLabeled(spark, sf001),
       Imi.lawK1Of(e), Imi.LloydSteps, Imi.NProbeHalf)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
@@ -278,7 +278,7 @@ class ImiSpec extends SparkSpec {
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
     val all = Similarity.quantizedLabeled(spark, sf001)
     val (cb, _) = Imi.standingIndex(spark, sf001)
-    val want = Imi.cellsWithCodebook(spark, all, cb, Imi.NProbeHalf)
+    val want = Imi.cellsWithCodebook(all, cb, Imi.NProbeHalf)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().sorted
     assert(got.nonEmpty)
     assert(got === want.toSeq,
@@ -288,7 +288,7 @@ class ImiSpec extends SparkSpec {
     // if a corpus shape ever breaks this, q_imi_compact fails LOUDLY
     // at build (expectRetrain) instead of hash-diverging
     val (cb2, standingCells) = Imi.standingIndex(spark, sf001)
-    val merged = standingCells.unionByName(Imi.cellsWithCodebook(spark,
+    val merged = standingCells.unionByName(Imi.cellsWithCodebook(
       all.filter($"vec_id" % Imi.DeltaMod === 0), cb2, Imi.NProbeHalf))
     val gap = Imi.measuredRecallGap(spark, sf001, merged)
     info(f"measured frozen-codebook recall gap at sf0.001: $gap%.4f " +
@@ -333,7 +333,7 @@ class ImiSpec extends SparkSpec {
     val offset = dense.withColumn("vec_id", $"vec_id" + off)
     val k1 = 4; val np = 2
     def cells(df: org.apache.spark.sql.DataFrame, sub: Long) =
-      Imi.cellsOf(spark, df, k1, Imi.LloydSteps, np)
+      Imi.cellsOf(df, k1, Imi.LloydSteps, np)
         .select(($"vec_id" - sub).as("vec_id"), $"cell")
         .as[(Long, Long)].collect().sorted.toSeq
     val want = cells(dense, 0L)

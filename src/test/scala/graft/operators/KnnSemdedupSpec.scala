@@ -16,7 +16,7 @@ class KnnSemdedupSpec extends SparkSpec {
 
   test("session-cached graph canopy equals fresh construction") {
     val cached = Similarity.graphCanopy(spark, sf001)
-    val fresh = Similarity.canopyCells(spark,
+    val fresh = Similarity.canopyCells(
       Similarity.quantizedLabeled(spark, sf001), nprobe = 8,
       carryVec = true, stride = 10)
     assert(cached.exceptAll(fresh).isEmpty && fresh.exceptAll(cached).isEmpty,
@@ -52,7 +52,7 @@ class KnnSemdedupSpec extends SparkSpec {
     val y = e.select($"vec_id".as("dst"), $"v".as("vd"), $"n2".as("nd"))
     val truth = x.join(y, $"src" =!= $"dst")
       .select($"src", $"dst",
-        Similarity.cosine(Similarity.idot(spark, $"vs", $"vd"),
+        Similarity.cosine(Similarity.idot($"vs", $"vd"),
           $"ns", $"nd").as("cos"))
       .groupBy($"src")
       .agg(max(struct($"cos", negate($"dst").as("nd"))).as("best"))
@@ -92,7 +92,7 @@ class KnnSemdedupSpec extends SparkSpec {
     val witnessed = a.join(d,
         $"a_cell" === $"b_cell" &&
           ($"a_cc" < $"b_cc" || ($"a_cc" === $"b_cc" && $"a_id" < $"b_id")))
-      .filter(Similarity.cosine(Similarity.idot(spark, $"va", $"vb"),
+      .filter(Similarity.cosine(Similarity.idot($"va", $"vb"),
         $"na", $"nb") >= 0.35)
       .select($"b_id").distinct()
     assert(witnessed.count() === dropped.count())
@@ -113,7 +113,7 @@ class KnnSemdedupSpec extends SparkSpec {
       $"v".as("vd"), $"n2".as("nd"))
     val truth = x.join(y, $"la" =!= $"lb")
       .select($"src",
-        Similarity.cosine(Similarity.idot(spark, $"vs", $"vd"),
+        Similarity.cosine(Similarity.idot($"vs", $"vd"),
           $"ns", $"nd").as("cos"), $"dst")
       .groupBy($"src")
       .agg(max(struct($"cos", negate($"dst").as("nd"))).as("b"))

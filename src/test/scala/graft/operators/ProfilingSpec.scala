@@ -337,8 +337,8 @@ class ProfilingSpec extends SparkSpec {
       (3L, 0, Seq(1000000L, 0L)), (4L, 0, Seq(-1000000L, 0L)),
       (5L, 1, Seq(0L, 777L)))
       .toDF("vec_id", "label", "v")
-      .withColumn("n2", Similarity.inorm2(spark, $"v"))
-    val got = Similarity.outlierScores(spark, n)
+      .withColumn("n2", Similarity.inorm2($"v"))
+    val got = Similarity.outlierScores(n)
       .select($"vec_id", $"cos_centroid", $"is_outlier")
       .as[(Long, Double, Boolean)].collect().map(r => r._1 -> r).toMap
     assert(got(4L)._2 === -1.0 && got(4L)._3)
