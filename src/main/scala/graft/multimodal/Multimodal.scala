@@ -391,45 +391,35 @@ object Multimodal {
         StructField("content", BinaryType))))
   }
 
+  /** Id offset of the planted duplicate asset files
+    * ([[writeAssetFixture]]). */
+  val DupIdBase = 100000L
+
   /** Materialize [[syntheticImageAssets]] as REAL FILES — one
-    * `asset-%05d.bmp` per asset under a GENERATION directory
-    * `root/gen-v4-<n>` — so the ingest side can exercise the
+    * `asset-%05d.bmp` per asset — so the ingest side can exercise the
     * production entry point (`spark.read.format("binaryFile")` over an
     * asset directory) instead of an in-engine frame. Every asset with
     * id % 9 == 0 is ALSO written as a byte-identical copy under
     * id+[[DupIdBase]] — planted EXACT duplicate FILES for the
-    * ingest-dedup op. Idempotent and crash/race-safe: the generation
-    * is built in a private temp dir with a `_FIXTURE_OK` marker inside
-    * and committed by ATOMIC rename, so no process ever observes a
-    * half-built directory; the asset count lives in the generation
-    * DIRECTORY name, so a corpus that changed size builds a new
-    * generation while one predecessor survives for in-flight readers.
-    * The writer is a distributed `foreachPartition` over the asset
-    * frame (local-filesystem paths — this is the dev-side fixture
-    * GENERATOR; a cluster ingest reads whatever shared store already
-    * holds the assets and never runs this). Returns the GENERATION
-    * directory path. */
-  val DupIdBase = 100000L
-
-  def writeAssetFixture(spark: SparkSession, root: String, n: Int): String = {
-    // GENERATION-DIR layout (the PersistedStore ver-dir pattern): the
-    // asset population for size n lives under `root/gen-v4-<n>`, built
-    // in a private temp dir and ATOMICALLY renamed into place with the
-    // marker already inside — so no process can ever observe a
-    // half-built directory, and a regeneration (corpus resized) never
-    // deletes a directory another JVM is mid-read on. The n-bearing dir
-    // name is what keeps "assets scale with the corpus" true across
-    // resizes; losing the rename race just adopts the winner's commit.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(hconf)
-    val genP = new org.apache.hadoop.fs.Path(rootP, s"gen-v4-$n")
-    val markerName = "_FIXTURE_OK"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(genP, markerName))) {
-      val tmpP = new org.apache.hadoop.fs.Path(rootP,
-        s".tmp-gen-v4-$n-${java.util.UUID.randomUUID}")
-      fs.mkdirs(tmpP)
-      val tmpLocal = tmpP.toUri.getPath
+    * ingest-dedup op. The asset count scales with the corpus: 3/5 of
+    * `dir`'s documents, at least 30.
+    *
+    * The directory is the `media_assets` [[graft.operators.PersistedStore]]
+    * store of `dir`, signed by the documents listing: a regenerated or
+    * resized corpus builds a new version while a reader of the
+    * previous one keeps its files, and two sessions building at once
+    * build once. The writer is a distributed `foreachPartition` over
+    * the asset frame (local-filesystem paths — this is the dev-side
+    * fixture GENERATOR; a cluster ingest reads whatever shared store
+    * already holds the assets and never runs this). Returns the
+    * version root. */
+  def writeAssetFixture(spark: SparkSession, dir: String): String =
+    graft.operators.PersistedStore.ensure(spark, dir, "documents.parquet",
+      "media_assets", "v4") { root =>
+      val n = (graft.Tables.documents(spark, dir).count() * 3 / 5).toInt.max(30)
+      val rootP = new org.apache.hadoop.fs.Path(root)
+      rootP.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(rootP)
+      val local = rootP.toUri.getPath
       val dupBase = DupIdBase
       syntheticImageAssets(spark, n).foreachPartition {
         rows: Iterator[Row] =>
@@ -437,84 +427,14 @@ object Multimodal {
             val id = r.getAs[Long]("asset_id")
             val bytes = r.getAs[Array[Byte]]("content")
             java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmpLocal, f"asset-$id%05d.bmp"),
-              bytes)
+              java.nio.file.Paths.get(local, f"asset-$id%05d.bmp"), bytes)
             if (id % 9 == 0)
               java.nio.file.Files.write(
-                java.nio.file.Paths.get(tmpLocal,
+                java.nio.file.Paths.get(local,
                   f"asset-${id + dupBase}%05d.bmp"), bytes)
           }
       }
-      // marker INSIDE the dir before the rename: a committed gen dir is
-      // complete by construction
-      fs.create(new org.apache.hadoop.fs.Path(tmpP, markerName), true)
-        .close()
-      // RawLocalFileSystem.rename onto an EXISTING directory does not
-      // fail — it falls back to copy-INTO (nesting a duplicate tree
-      // inside the winner's commit) — so the loser must adopt by an
-      // exists-check, with a post-rename nested-dir sweep closing the
-      // check-then-rename window
-      if (fs.exists(genP)) {
-        fs.delete(tmpP, true) // another process committed first — adopt
-      } else if (!fs.rename(tmpP, genP)) {
-        fs.delete(tmpP, true)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(genP, markerName)))
-          throw new IllegalStateException(
-            s"asset fixture commit race left no valid generation at $genP")
-      } else {
-        val nested = new org.apache.hadoop.fs.Path(genP, tmpP.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      }
-      // retire older material best-effort; legacy pre-v4 loose files at
-      // the root are always safe to drop — any reader of that layout
-      // rebuilds here first. Orphaned .tmp-gen-* trees (a builder
-      // crashed mid-write) are reclaimed once their NEWEST write (dir
-      // or any child — a slow builder's latest file is its heartbeat)
-      // ages past the grace window — young ones may be another
-      // process's in-flight build and must not be touched. Committed
-      // predecessor generations keep the SAME grace: one predecessor is
-      // always kept for in-flight readers (the ver-dir rule), and older
-      // ones are deleted only once their commit has aged past the
-      // window, so a reader that opened a directory two corpus-resizes
-      // ago has the full grace to finish. All reclaim is best-effort:
-      // a delete that loses a race is benign, never a build failure.
-      val tmpGraceMs = 60L * 60 * 1000
-      val now = System.currentTimeMillis()
-      def newestWrite(s: org.apache.hadoop.fs.FileStatus): Long = {
-        val kids =
-          try fs.listStatus(s.getPath).map(_.getModificationTime)
-          catch { case _: java.io.IOException => Array.empty[Long] }
-        (s.getModificationTime +: kids).max
-      }
-      def reclaim(p: org.apache.hadoop.fs.Path): Unit =
-        try { fs.delete(p, true); () }
-        catch { case _: java.io.IOException => () }
-      val others = fs.listStatus(rootP).filter { s =>
-        val nm = s.getPath.getName
-        nm != genP.getName &&
-          !(nm.startsWith(".tmp-gen-") &&
-            now - newestWrite(s) < tmpGraceMs)
-      }
-      val (gens, rest) = others.partition(s =>
-        s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      rest.foreach(s => reclaim(s.getPath))
-      // supersession epoch: a reader's clock starts when the NEXT
-      // generation replaced the one it is reading, not when its dir
-      // was committed — a gen current for hours would otherwise be
-      // deletable the moment two successors land. The newest
-      // predecessor's superseder is genP itself (committed/adopted
-      // just now), so it always survives this sweep — the
-      // keep-one-predecessor rule — and an older gen is reclaimed
-      // only once the gen that superseded it has been committed for
-      // the full grace window.
-      val sorted = gens.sortBy(-_.getModificationTime)
-      sorted.zipWithIndex.drop(1).foreach { case (s, i) =>
-        if (now - sorted(i - 1).getModificationTime >= tmpGraceMs)
-          reclaim(s.getPath)
-      }
     }
-    genP.toUri.getPath
-  }
 
   /** Deterministic synthetic asset table (tests / demos). */
   def syntheticAssets(spark: SparkSession, n: Int): DataFrame = {

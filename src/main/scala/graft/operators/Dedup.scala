@@ -85,7 +85,7 @@ object Dedup {
     * metadata aggregate — so the guard costs one tiny job, never a
     * pair shuffle. NULL brands/names can never match (SQL equi-join
     * semantics), so they leave the histogram. */
-  private val fuzzyEstimateCache = SessionCache.mkScalars()
+  private val fuzzyEstimateCache = SessionCache.mkValues[Long]()
 
   private[graft] def fuzzyCandidateEstimate(
       spark: SparkSession, dir: String): Long =
@@ -456,23 +456,25 @@ object Dedup {
   private def fuzzyBlockJoin(probe: DataFrame, build: DataFrame,
       keyCond: (Column, Column) => Column, withDp: Boolean): DataFrame = {
     // lengths and bags are per-ROW projections, never recomputed per
-    // pair inside the join loop
-    def side(df: DataFrame, key: String, name: String, len: String,
-        bag: String) =
-      df.select(col("brand"),
-          col("key").as(key), col("name").as(name),
-          length(col("name")).as(len))
-        .withColumn(bag, call_function("graft_letter_bag", col(name)))
-    val a = side(probe, "key_a", "name_a", "len_a", "bag_a")
-    val b = side(build, "key_b", "name_b", "len_b", "bag_b")
-    var cond = a("brand") === b("brand") &&
+    // pair inside the join loop; every column is renamed per side, so
+    // the condition names its columns even when both sides project
+    // one frame (no reliance on Spark's self-join re-resolution)
+    def side(df: DataFrame, s: String) =
+      df.select(col("brand").as(s"brand_$s"),
+          col("key").as(s"key_$s"), col("name").as(s"name_$s"),
+          length(col("name")).as(s"len_$s"))
+        .withColumn(s"bag_$s",
+          call_function("graft_letter_bag", col(s"name_$s")))
+    val a = side(probe, "a")
+    val b = side(build, "b")
+    var cond = col("brand_a") === col("brand_b") &&
       keyCond(col("key_a"), col("key_b")) &&
       abs(col("len_a") - col("len_b")) <= FuzzyMaxDist &&
       call_function("graft_bag_dist", col("bag_a"), col("bag_b")) <= FuzzyMaxDist
     if (withDp)
       cond = cond && levenshtein(col("name_a"), col("name_b"), FuzzyMaxDist) =!= -1
     a.join(b, cond)
-      .select(a("brand"), col("key_a"), col("key_b"),
+      .select(col("brand_a").as("brand"), col("key_a"), col("key_b"),
         col("name_a"), col("name_b"))
   }
 

@@ -57,26 +57,12 @@ object FormatOps {
   def scanStagedOrc(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val orcDir = SinkOps.stagingDir(dir, "orc")
-    val marker = new org.apache.hadoop.fs.Path(s"$orcDir/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$orcDir/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcSig = graft.sources.RunLog
-      .sourceSignature(spark, dir, "lineitem.parquet") + ":v1"
-    val fixtureValid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
-    }
-    if (!fixtureValid) {
+    val orcDir = PersistedStore.ensure(spark, dir, "lineitem.parquet",
+      "orc", "v1") { root =>
       Tables.lineitem(spark, dir)
         .write.mode("overwrite")
         .partitionBy("l_returnflag")
-        .orc(orcDir)
-      val out = fs.create(sigPath, true)
-      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+        .orc(root)
     }
     spark.read.orc(orcDir)
   }

@@ -48,25 +48,11 @@ object IncrementalAgg {
   def baseStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val store = SinkOps.stagingDir(dir, "mv_agg")
-    val marker = new org.apache.hadoop.fs.Path(s"$store/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$store/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcSig = graft.sources.RunLog
-      .sourceSignature(spark, dir, "orders.parquet") + ":v1"
-    val valid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
-    }
-    if (!valid) {
+    val store = PersistedStore.ensure(spark, dir, "orders.parquet",
+      "mv_agg", "v1") { root =>
       dayAgg(Tables.orders(spark, dir)
           .filter(col("o_orderkey") % DeltaMod =!= 0))
-        .write.mode("overwrite").parquet(store)
-      val out = fs.create(sigPath, true)
-      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+        .write.mode("overwrite").parquet(root)
     }
     Tables.parquet(spark, store)
   }
@@ -97,25 +83,11 @@ object IncrementalAgg {
   def sketchStore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val store = SinkOps.stagingDir(dir, "mv_sketch")
-    val marker = new org.apache.hadoop.fs.Path(s"$store/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$store/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcSig = graft.sources.RunLog
-      .sourceSignature(spark, dir, "events.parquet") + ":v1"
-    val valid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
-    }
-    if (!valid) {
+    val store = PersistedStore.ensure(spark, dir, "events.parquet",
+      "mv_sketch", "v1") { root =>
       daySketch(Tables.events(spark, dir)
           .filter(col("event_id") % DeltaMod =!= 0))
-        .write.mode("overwrite").parquet(store)
-      val out = fs.create(sigPath, true)
-      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+        .write.mode("overwrite").parquet(root)
     }
     Tables.parquet(spark, store)
   }

@@ -29,30 +29,18 @@ object IngestOps {
       |FROM part
       |WHERE p_name IS NOT NULL AND length(trim(p_name)) > 0""".stripMargin) {
     (spark, dir) =>
-    // deterministic staging dir per sf, built once and reused across
+    // deterministic staging store per sf, built once and reused across
     // runs: the fixture is a pure function of `part`, so a committed
-    // dir (_SUCCESS) is valid exactly while the source file's listing
+    // version is valid exactly while the source file's listing
     // signature is unchanged — regenerated testdata at the same path
     // rebuilds the fixture instead of reconciling stale CSV against a
     // fresh oracle. Like the bucket-table layout, fixture synthesis is
-    // not what the query measures.
-    val csvDir = SinkOps.stagingDir(dir, "csv")
-    val marker = new org.apache.hadoop.fs.Path(s"$csvDir/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$csvDir/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the fixture signature carries a WRITER-LAW version next to the
-    // source listing: a quoting/escape change (v2: RFC-4180 doubled
-    // quotes) must rebuild the staged CSV, or a stale fixture written
-    // under the old law reconciles against the new reader
-    val srcSig = graft.sources.RunLog
-      .sourceSignature(spark, dir, "part.parquet") + ":csv_v2"
-    val fixtureValid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
-    }
-    if (!fixtureValid) {
+    // not what the query measures. The version carries the WRITER LAW:
+    // a quoting/escape change (csv_v2: RFC-4180 doubled quotes) must
+    // rebuild the staged CSV, or a stale fixture written under the old
+    // law reconciles against the new reader.
+    val csvDir = PersistedStore.ensure(spark, dir, "part.parquet",
+      "csv", "csv_v2") { root =>
       Tables.part(spark, dir).select(
           col("p_partkey").cast("string").as("Product ID"),
           col("p_name").as("Product Name"),
@@ -67,10 +55,7 @@ object IngestOps {
         // contain quote chars)
         .write.mode("overwrite").option("header", "true")
         .option("quote", "\"").option("escape", "\"")
-        .csv(csvDir)
-      val out = fs.create(sigPath, true)
-      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+        .csv(root)
     }
     val ingested = CsvIngest.ingest(
       spark, csvDir,
@@ -119,22 +104,11 @@ object IngestOps {
        |)
        |SELECT * FROM good UNION ALL SELECT * FROM bad""".stripMargin) {
     (spark, dir) =>
-    val jsonDir = SinkOps.stagingDir(dir, "jsonl")
-    val marker = new org.apache.hadoop.fs.Path(s"$jsonDir/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$jsonDir/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // :v2 — fixture layout version: bump to invalidate staged dirs
+    // v2 — fixture layout version: bump to invalidate staged stores
     // when the generator changes (the signature otherwise only tracks
     // the SOURCE listing)
-    val srcSig = graft.sources.RunLog
-      .sourceSignature(spark, dir, "documents.parquet") + ":v2"
-    val fixtureValid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
-    }
-    if (!fixtureValid) {
+    val jsonDir = PersistedStore.ensure(spark, dir, "documents.parquet",
+      "jsonl", "v2") { root =>
       Tables.documents(spark, dir).select(
           when(col("doc_id") % JsonlCorruptMod === 0,
             // malformed from the FIRST byte (bare token before the
@@ -147,10 +121,7 @@ object IngestOps {
             struct(col("lang"), col("source")).as("meta"),
             col("text"))))
           .as("value"))
-        .write.mode("overwrite").text(jsonDir)
-      val out = fs.create(sigPath, true)
-      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+        .write.mode("overwrite").text(root)
     }
     // text + from_json rather than the json source: Spark refuses a
     // query that touches ONLY the corrupt-record column of a raw JSON

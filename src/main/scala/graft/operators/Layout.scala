@@ -129,31 +129,15 @@ object Layout {
   }
 
   /** Build (or reuse) the z-clustered layout for `dir`'s lineitem;
-    * returns the layout path. Reuse contract: committed (_SUCCESS) and
-    * the source listing signature + layout version match — regenerated
-    * testdata at the same path, or changed layout code, rebuilds the
-    * layout instead of serving stale rows. */
-  def layoutDir(spark: SparkSession, dir: String): String = {
-    val out = SinkOps.stagingDir(dir, "zorder")
-    val marker = new org.apache.hadoop.fs.Path(s"$out/_SUCCESS")
-    val sigPath = new org.apache.hadoop.fs.Path(s"$out/_SRC_SIG")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcSig = s"v$LayoutVersion|" + graft.sources.RunLog
-      .sourceSignature(spark, dir, "lineitem.parquet")
-    val valid = fs.exists(marker) && fs.exists(sigPath) && {
-      val in = fs.open(sigPath)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) == srcSig
-      finally in.close()
+    * returns the layout path (the [[PersistedStore]] version root).
+    * Reuse contract: the source listing signature + layout version
+    * match — regenerated testdata at the same path, or changed layout
+    * code, rebuilds the layout instead of serving stale rows. */
+  def layoutDir(spark: SparkSession, dir: String): String =
+    PersistedStore.ensure(spark, dir, "lineitem.parquet",
+      "zorder", s"v$LayoutVersion") { root =>
+      writeZordered(Tables.lineitem(spark, dir), root)
     }
-    if (!valid) {
-      writeZordered(Tables.lineitem(spark, dir), out)
-      val os = fs.create(sigPath, true)
-      try os.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-    }
-    out
-  }
 
   /** Target rows per compaction output group (the row-count stand-in
     * for a target file SIZE — the testdata's fixed-width rows make the

@@ -112,50 +112,11 @@ object MultimodalOps {
   private[graft] def clearPhashCache(): Unit = phashCache.clear()
 
   /** The asset DIRECTORY for `dir` — real .bmp files on disk (the
-    * deterministic fixture [[Multimodal.writeAssetFixture]] materializes
-    * once per corpus; a production deployment points this at whatever
-    * object store already holds the media). Asset count scales with the
-    * corpus (3/5 of its documents), same rule the in-engine frame used.
-    *
-    * The corpus count behind the sizing rule is memoized per
-    * (session, dir, documents-listing-signature) — the signature check
-    * is a driver-side file listing, no Spark job — so repeated store
-    * accesses don't pay a `count()` job each, while a corpus
-    * regenerated at the same path still re-counts (and, via the
-    * n-bearing fixture marker, regrows the directory). */
-  private val assetDirCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, String), String](
-      16, 0.75f, /* accessOrder = */ true) {
-      // true LRU: only the least-recently-USED entry is evicted past
-      // the cap — a workload cycling >64 live (session, dir, sig) keys
-      // evicts one cold entry per insert instead of clearing the whole
-      // map and re-running every key's count+fixture check (thrash)
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), String])
-          : Boolean = size() > 64
-    })
-
-  private[graft] def assetDir(spark: SparkSession, dir: String): String = {
-    val sig = graft.sources.RunLog.sourceSignature(
-      spark, dir, "documents.parquet")
-    // keyed on SessionCache.sessionId (stable and unique per live
-    // session — an identityHashCode can collide or be REUSED after a
-    // session is GC'd, serving a dir sized for another corpus). The
-    // build runs OUTSIDE the map lock (it is a Spark count + fixture
-    // write — holding the cache mutex through it would serialize
-    // unrelated sessions); a lost build race is benign because the
-    // fixture commit itself is race-safe (exists-check adopt).
-    val key = (SessionCache.sessionId(spark), dir, sig)
-    val cached = assetDirCache.get(key)
-    if (cached != null) cached
-    else {
-      val n = (Tables.documents(spark, dir).count() * 3 / 5).toInt.max(30)
-      val built = Multimodal.writeAssetFixture(
-        spark, SinkOps.stagingDir(dir, "media_assets"), n)
-      val prior = assetDirCache.putIfAbsent(key, built)
-      if (prior != null) prior else built
-    }
-  }
+    * deterministic fixture [[Multimodal.writeAssetFixture]] commits
+    * once per documents listing; a production deployment points this
+    * at whatever object store already holds the media). */
+  private[graft] def assetDir(spark: SparkSession, dir: String): String =
+    Multimodal.writeAssetFixture(spark, dir)
 
   /** File ingest of the asset directory — the user's actual first act:
     * `binaryFile` scan (path, length, content), asset id parsed from

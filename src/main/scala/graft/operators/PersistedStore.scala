@@ -11,13 +11,17 @@ import org.apache.spark.sql.SparkSession
   * instead of rebuilding. Session caches ([[SessionCache.Cache]])
   * memoize the store's scan frames; this object owns the durable copy.
   *
-  * At 100 TB this is the production contract for every expensive index
-  * (LSH pair graphs, postings, canopy assignments, co-purchase edges,
-  * cluster labels): build once next to the corpus, re-read everywhere,
-  * invalidate exactly when the corpus files change. The signature is
-  * (name|length|mtime) over the source glob plus a version tag, the
-  * same guard the transactional sinks and the PQ store already carry —
-  * a regenerated fixture rebuilds, a live store never does.
+  * [[ensure]] is the engine's ONLY commit protocol for a derived
+  * artifact: the indexes (LSH pair graphs, postings, canopy
+  * assignments, co-purchase edges, cluster labels, quality and drift
+  * models, …) and the staged fixtures alike — `csv` and `jsonl`
+  * ([[IngestOps]]), `orc` ([[FormatOps]]), `mv_agg` and `mv_sketch`
+  * ([[IncrementalAgg]]), `zorder` ([[Layout]]) and the `media_assets`
+  * directory ([[graft.multimodal.Multimodal.writeAssetFixture]]). The
+  * signature is [[graft.sources.RunLog.sourceSignature]]
+  * (name|length|mtime over the source glob) plus a version tag, the
+  * one [[SessionCache]] keys on too: a regenerated fixture rebuilds, a
+  * live store never does.
   */
 private[graft] object PersistedStore {
 
@@ -69,21 +73,10 @@ private[graft] object PersistedStore {
       graft.sources.RunLog.sourceSignature(
         spark, if (sigDir == null) dir else sigDir, sourceGlob) +
         s":$version"
-    def readSig(): Option[(String, String)] =
-      if (!fs.exists(sigPath)) None
-      else {
-        val in = fs.open(sigPath)
-        val s = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        val i = s.indexOf('\n')
-        if (i < 0) Some((s, "")) // legacy in-place layout (pre-round-8)
-        else Some((s.substring(0, i), s.substring(i + 1)))
-      }
-    def current(): Option[String] = readSig() match {
+    def current(): Option[String] = readSig(fs, sigPath) match {
       case Some((sig, ver)) if sig == srcSig =>
-        val root = if (ver.isEmpty) store else s"$store/$ver"
-        if (ver.isEmpty ||
-          fs.exists(new org.apache.hadoop.fs.Path(root))) Some(root)
+        val root = s"$store/$ver"
+        if (fs.exists(new org.apache.hadoop.fs.Path(root))) Some(root)
         else None
       case _ => None
     }
@@ -91,7 +84,7 @@ private[graft] object PersistedStore {
       val lock = storeLocks.computeIfAbsent(store, _ => new Object)
       lock.synchronized {
         current().getOrElse { // re-check under the lock: a race's loser reuses
-          val prevVer = readSig().map(_._2).getOrElse("")
+          val prevVer = readSig(fs, sigPath).map(_._2).getOrElse("")
           val ver = "ver-" +
             java.lang.Long.toHexString(srcSig.hashCode.toLong & 0xffffffffL) +
             "-" + java.lang.Long.toHexString(System.nanoTime())
@@ -130,23 +123,30 @@ private[graft] object PersistedStore {
     }
   }
 
-  /** The CURRENT version root of an already-committed store (the path
-    * [[ensure]] would return without rebuilding) — for consumers that
-    * need the store's on-disk location itself, e.g. the oracle-SQL
-    * path substitution that lets DuckDB read a persisted artifact.
-    * Falls back to the store root for a legacy in-place layout. */
-  def currentRoot(spark: SparkSession, dir: String, tag: String): String = {
-    val store = SinkOps.stagingDir(dir, tag)
-    val sigPath = new org.apache.hadoop.fs.Path(s"$store/_SRC_SIG")
-    val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sigPath)) store
+  /** The committed (signature, version dir) pair of a store, or None
+    * when it has none. A signature without a version line is not a
+    * commit of this protocol: it reads as None, so [[ensure]] rebuilds. */
+  private def readSig(fs: org.apache.hadoop.fs.FileSystem,
+      sigPath: org.apache.hadoop.fs.Path): Option[(String, String)] =
+    if (!fs.exists(sigPath)) None
     else {
       val in = fs.open(sigPath)
       val s = try new String(in.readAllBytes(),
         java.nio.charset.StandardCharsets.UTF_8) finally in.close()
       val i = s.indexOf('\n')
-      if (i < 0) store else s"$store/${s.substring(i + 1)}"
+      if (i < 0) None else Some((s.substring(0, i), s.substring(i + 1)))
     }
+
+  /** The CURRENT version root of an already-committed store (the path
+    * [[ensure]] would return without rebuilding) — for consumers that
+    * need the store's on-disk location itself, e.g. the oracle-SQL
+    * path substitution that lets DuckDB read a persisted artifact.
+    * Falls back to the store root when nothing is committed. */
+  def currentRoot(spark: SparkSession, dir: String, tag: String): String = {
+    val store = SinkOps.stagingDir(dir, tag)
+    val sigPath = new org.apache.hadoop.fs.Path(s"$store/_SRC_SIG")
+    val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readSig(fs, sigPath).fold(store) { case (_, ver) => s"$store/$ver" }
   }
 
   /** Test hook: drop a store so the next access rebuilds. */

@@ -11,12 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. **Scope**: one entry per (session identity, corpus dir [, extra
   *     parameters]) — a new session rebuilds, two dirs never collide.
   *  2. **Staleness**: the stored value carries the source files'
-  *     LISTING SIGNATURE (name|length|mtime, matched directories
-  *     contribute their child part files); a mismatch on access
-  *     REBUILDS instead of serving the dead corpus — the same guard
-  *     the persisted artifacts (PQ store, CSV staging, z-order
-  *     layout, bootstrap base) already carry. Cost: one driver-side
-  *     file listing per access, metadata only.
+  *     listing signature — [[graft.sources.RunLog.sourceSignature]],
+  *     the one [[PersistedStore.ensure]] commits against (recursive
+  *     over a matched directory, so a partitioned table invalidates;
+  *     marker files such as `_SUCCESS` and `.crc` do not); a mismatch
+  *     on access REBUILDS instead of serving the dead corpus. Cost:
+  *     one driver-side file listing per access, metadata only, no
+  *     process fork.
   *  3. **Bounded memory**: replacing a stale entry RELEASES the old
   *     value's localCheckpoint blocks (the
   *     [[GraphOps.connectedComponents]] release discipline) — a
@@ -70,7 +71,7 @@ private[graft] object SessionCache {
     def getOrBuild(spark: SparkSession, dir: String, sourceGlob: String,
         extra: String = "")(build: => T): T = {
       val scope = s"${sessionId(spark)}@$dir@$extra"
-      val sig = signature(spark, dir, sourceGlob)
+      val sig = graft.sources.RunLog.sourceSignature(spark, dir, sourceGlob)
       val cur = entries.get(scope)
       if (cur != null && cur._1 == sig) return cur._2
       val lock = locks.computeIfAbsent(scope, _ => new Object)
@@ -101,13 +102,10 @@ private[graft] object SessionCache {
     * but never cache, hence the explicit factory form). */
   def mkFrames(): Cache[DataFrame] = new Cache[DataFrame](releaseFrame)
 
-  /** Cache of driver-side scalars (e.g. the quadratic-guard candidate
-    * estimates) — nothing to release. */
-  def mkScalars(): Cache[Long] = new Cache[Long](_ => ())
-
-  /** Cache of driver-side scalar PAIRS (e.g. the BM25 (n_docs,
-    * t_tokens) corpus stats) — nothing to release. */
-  def mkScalarPairs(): Cache[(Long, Long)] = new Cache[(Long, Long)](_ => ())
+  /** Cache of driver-side values (e.g. the quadratic-guard candidate
+    * estimates, the BM25 (n_docs, t_tokens) corpus stats) — nothing to
+    * release. */
+  def mkValues[T](): Cache[T] = new Cache[T](_ => ())
 
   /** Cache of `persist()`-ed (columnar InMemoryRelation) frames — for
     * WIDE cached payloads (e.g. the span window rows, ~8× the corpus
@@ -124,25 +122,4 @@ private[graft] object SessionCache {
     new Cache[(DataFrame, DataFrame)]({ case (a, b) =>
       releaseFrame(a); releaseFrame(b)
     })
-
-  /** Listing signature over the glob's matches; a matched DIRECTORY
-    * contributes its child files (a Spark-written table and the
-    * driver's single-file tables both invalidate — a glob that
-    * silently matched nothing would freeze the key and serve a dead
-    * corpus forever). */
-  private def signature(
-      spark: SparkSession, dir: String, sourceGlob: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched = Option(
-      fs.globStatus(new org.apache.hadoop.fs.Path(p, sourceGlob)))
-      .getOrElse(Array.empty)
-    matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-      else Array(st)
-    }.map(st =>
-      s"${st.getPath.getParent.getName}/${st.getPath.getName}|" +
-        s"${st.getLen}|${st.getModificationTime}")
-      .sorted.mkString(",")
-  }
 }

@@ -124,7 +124,7 @@ object Similarity {
     ivfUpdate(ivfAssign(n,
       ivfSeedCodebook(n, ivfLawStride(nQualifying.getOrElse(n.count())))))
 
-  private val qualCountCache = SessionCache.mkScalars()
+  private val qualCountCache = SessionCache.mkValues[Long]()
 
   private[graft] def clearQualCountCache(): Unit = qualCountCache.clear()
 
@@ -252,7 +252,7 @@ object Similarity {
     * all-pairs join: Σ_label C(n,2) from the label histogram — one
     * metadata aggregate, computed BEFORE any pair exists (r12 verdict
     * #5 guard). */
-  private val embedEstimateCache = SessionCache.mkScalars()
+  private val embedEstimateCache = SessionCache.mkValues[Long]()
 
   private[graft] def embedPairEstimate(
       spark: SparkSession, dir: String): Long =

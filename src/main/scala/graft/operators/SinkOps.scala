@@ -43,7 +43,7 @@ object SinkOps {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private val anchorCache = SessionCache.mkScalars()
+  private val anchorCache = SessionCache.mkValues[Long]()
 
   private[graft] def clearAnchorCache(): Unit = anchorCache.clear()
 

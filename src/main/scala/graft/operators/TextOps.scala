@@ -1270,7 +1270,7 @@ object TextOps {
       Tables.parquet(spark, s"$store/tf")
     }
 
-  private val bm25StatsCache = SessionCache.mkScalarPairs()
+  private val bm25StatsCache = SessionCache.mkValues[(Long, Long)]()
 
   private[graft] def clearBm25StatsCache(): Unit = bm25StatsCache.clear()
 

@@ -25,52 +25,45 @@ object RunLog {
 
   /** Driver-side listing signature of the files an artifact was derived
     * from — `name|length|mtime` per matched file, sorted. Cheap (no
-    * content read) staleness fingerprint for amortized staging
-    * artifacts: a cached fixture or bootstrap base is valid only while
-    * its source files' signature is unchanged; regenerated testdata or
-    * a partially cleaned cache then triggers a rebuild instead of a
-    * silently-wrong reuse. */
+    * content read) staleness fingerprint, and the ONE signature of the
+    * engine: [[graft.operators.PersistedStore.ensure]] commits against
+    * it and [[graft.operators.SessionCache]] keys its entries on it, so
+    * an artifact is valid only while its source files' signature is
+    * unchanged; regenerated testdata or a partially cleaned cache then
+    * triggers a rebuild instead of a silently-wrong reuse.
+    *
+    * A table stored as a DIRECTORY of part files (any Spark-written
+    * corpus) signs its data files, RECURSIVELY: a partitioned table
+    * (key=value subdirectories) has only directory children at depth 1
+    * and would otherwise sign empty, so a stale store could never be
+    * detected. Entries carry the path relative to the matched root, so
+    * identically-named part files in different partitions stay
+    * distinct. Hidden/_-prefixed segments (`_SUCCESS`, `.crc`,
+    * `_temporary`, `.staging` and all below them) stay out, so a
+    * re-run that only touches markers doesn't churn the signature.
+    *
+    * The walk is `listStatus`, never `listFiles`: a `LocatedFileStatus`
+    * copies the file's permissions, and without the native Hadoop
+    * library the local file system reads them by forking `ls -ld` per
+    * file. `listStatus` reads only length and mtime, and forks
+    * nothing. */
   def sourceSignature(
       spark: SparkSession, dir: String, glob: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val filter = new org.apache.hadoop.fs.GlobFilter(glob)
-    fs.listStatus(p)
+    def hidden(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    def walk(rel: String, st: org.apache.hadoop.fs.FileStatus)
+        : Seq[String] =
+      if (st.isFile) Seq(s"$rel|${st.getLen}|${st.getModificationTime}")
+      else fs.listStatus(st.getPath).toSeq.filterNot(hidden)
+        .flatMap(c => walk(s"$rel/${c.getPath.getName}", c))
+    fs.listStatus(p).toSeq
       .filter(st => filter.accept(st.getPath))
-      .flatMap { st =>
-        if (st.isFile)
-          Array(st.getPath.getName -> st)
-        else {
-          // a table stored as a DIRECTORY of part files (any
-          // Spark-written corpus) signs its data files; an isFile-only
-          // listing signed "" and a stale store could never be detected
-          // (r13 soak catch). The descent is RECURSIVE (ADVICE r14): a
-          // partitioned table (key=value subdirectories) has only
-          // directory children at depth 1 and would otherwise still
-          // sign empty. Entries carry the path relative to the matched
-          // root so identically-named part files in different
-          // partitions cannot collapse into one signature entry.
-          // Hidden/_-prefixed SEGMENTS (_SUCCESS, .crc, _temporary/*,
-          // .staging/*) stay out so a re-run that only touches markers
-          // doesn't churn the signature.
-          val rootUri = st.getPath.toUri
-          val it = fs.listFiles(st.getPath, true)
-          val buf = scala.collection.mutable.ArrayBuffer
-            .empty[(String, org.apache.hadoop.fs.FileStatus)]
-          while (it.hasNext) {
-            val c = it.next()
-            val rel = rootUri.relativize(c.getPath.toUri).getPath
-            val segments = rel.split("/")
-            if (!segments.exists(s =>
-                s.startsWith("_") || s.startsWith(".")))
-              buf += s"${st.getPath.getName}/$rel" -> c
-          }
-          buf.toArray
-        }
-      }
-      .map { case (rel, st) =>
-        s"$rel|${st.getLen}|${st.getModificationTime}"
-      }
+      .flatMap(st => walk(st.getPath.getName, st))
       .sorted.mkString(",")
   }
 

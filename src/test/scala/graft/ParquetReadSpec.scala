@@ -149,4 +149,27 @@ class ParquetReadSpec extends SparkSpec {
       "call the graft_ kernels unconditionally; GraftExtensions.install " +
         s"puts them in every op's session: $hits")
   }
+
+  test("engine sources walk listings without LocatedFileStatus") {
+    // the signature's walk must be among the scanned files, so an empty
+    // scan cannot pass
+    assert(engineSourcesMatching("""\.listStatus\(""".r)
+      .contains("sources/RunLog.scala"), "the scan found no listing")
+    // Hadoop's listFiles(path, recursive) and listLocatedStatus build a
+    // LocatedFileStatus, which forks `ls -ld` per file without the
+    // native Hadoop library; java.io.File#listFiles() takes no argument
+    val hits = engineSourcesMatching(
+      """\.listFiles\(\s*[^)\s]|\.listLocatedStatus\(""".r)
+    assert(hits.isEmpty,
+      s"list with listStatus; a LocatedFileStatus forks per file: $hits")
+  }
+
+  test("engine sources commit derived artifacts only through PersistedStore") {
+    val hits = engineSourcesMatching("_SRC_SIG".r)
+    assert(hits.contains("operators/PersistedStore.scala"),
+      "the scan found no commit protocol")
+    assert(hits.filterNot(Set("operators/PersistedStore.scala",
+      "streaming/EventStream.scala")).isEmpty,
+      s"build and reuse a store with PersistedStore.ensure: $hits")
+  }
 }

@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -93,6 +98,72 @@ class IncrementalAggSpec extends SparkSpec {
     overlap.collect().map(_.getDate(0).toString).foreach { day =>
       assert(merged(day)._1 === b(day)._1 + d(day)._1, s"count merge broke $day")
       assert(merged(day)._2 === b(day)._2 + d(day)._2, s"sum merge broke $day")
+    }
+  }
+
+  /** `body` over a fresh temp copy of sf0.001's `orders` (the only
+    * table [[IncrementalAgg.baseStore]] reads), so the shared staging
+    * stores of sf0.001 stay untouched; the copy's `mv_agg` store is
+    * dropped afterwards. */
+  private def withOrdersCopy(body: Path => Unit): Unit = {
+    val tmp = Files.createTempDirectory("graft-mv-agg")
+    try {
+      Files.copy(Paths.get(sf001, "orders.parquet"),
+        tmp.resolve("orders.parquet"))
+      body(tmp)
+    } finally {
+      PersistedStore.drop(spark, tmp.toString, "mv_agg")
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
+
+  private def versions(dir: Path): Seq[String] = {
+    val store = Paths.get(SinkOps.stagingDir(dir.toString, "mv_agg"))
+    if (!Files.isDirectory(store)) Nil
+    else {
+      val s = Files.list(store)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("ver-")).toList
+      finally s.close()
+    }
+  }
+
+  test("a rebuilt base store leaves a held frame of the old version " +
+    "readable") {
+    withOrdersCopy { tmp =>
+      val held = IncrementalAgg.baseStore(spark, tmp.toString)
+      val n = held.count()
+      assert(n > 0)
+      // change orders' listing: same bytes, later mtime
+      val orders = tmp.resolve("orders.parquet")
+      val t = Files.getLastModifiedTime(orders).toMillis
+      Files.write(orders, Files.readAllBytes(orders))
+      Files.setLastModifiedTime(orders, FileTime.fromMillis(t + 10000))
+      val rebuilt = IncrementalAgg.baseStore(spark, tmp.toString)
+      assert(held.count() === n,
+        "the rebuild deleted files under a reader of the old version")
+      assert(versions(tmp).size === 2, "the listing change did not rebuild")
+      assert(rebuilt.count() === n)
+    }
+  }
+
+  test("two threads building one base store commit exactly one version") {
+    withOrdersCopy { tmp =>
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val futures = (1 to 2).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Long] {
+            def call(): Long = {
+              latch.await()
+              IncrementalAgg.baseStore(spark, tmp.toString).count()
+            }
+          }))
+        latch.countDown()
+        assert(futures.map(_.get()).toSet.size === 1)
+        assert(versions(tmp).size === 1,
+          s"racing builders committed ${versions(tmp)}")
+      } finally pool.shutdown()
     }
   }
 }

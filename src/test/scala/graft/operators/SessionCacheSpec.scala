@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** The cache-scope law the round-10 verdict pinned: `getOrBuild`'s
@@ -42,5 +47,40 @@ class SessionCacheSpec extends SparkSpec {
       build(spark)) eq f1)
     assert(cache.getOrBuild(s2, sf001, "region.parquet")(build(s2)) eq f2)
     assert(builds == 2)
+  }
+
+  test("a rewritten file under a partition dir rebuilds; a touched " +
+    "_SUCCESS does not") {
+    val tmp = Files.createTempDirectory("graft-session-cache")
+    try {
+      val table = tmp.resolve("region.parquet")
+      graft.Tables.parquet(spark, s"$sf001/region.parquet")
+        .write.partitionBy("r_name").parquet(table.toString)
+      val cache = SessionCache.mkValues[Long]()
+      var builds = 0
+      def get(): Unit = {
+        cache.getOrBuild(spark, tmp.toString, "region.parquet") {
+          builds += 1; 0L
+        }: Unit
+      }
+      // rewrite = same bytes, later mtime
+      def rewrite(f: Path): Unit = {
+        val t = Files.getLastModifiedTime(f).toMillis
+        Files.write(f, Files.readAllBytes(f))
+        Files.setLastModifiedTime(f, FileTime.fromMillis(t + 10000))
+      }
+      get()
+      get()
+      assert(builds === 1)
+      val part = Files.walk(table).iterator().asScala.find { f =>
+        f.getParent != table && f.getFileName.toString.startsWith("part-")
+      }.getOrElse(fail(s"no part file under a partition dir of $table"))
+      rewrite(part)
+      get()
+      assert(builds === 2, s"rewriting $part did not invalidate the cache")
+      rewrite(table.resolve("_SUCCESS"))
+      get()
+      assert(builds === 2, "touching _SUCCESS invalidated the cache")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }
