@@ -95,8 +95,7 @@ object EngineConf {
       // independent: the decision is per-join from runtime statistics,
       // not a local[32] constant (guide §3.1/§9; bucketed co-located
       // joins keep their SMJ because neither side is 3× smaller).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ_OFF", "false"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       // AQE's runtime SMJ→SHJ rewrite (off by default): when every
       // measured post-shuffle partition of a sort-merge join is under
       // this bound, build a per-partition hash map instead of sorting
@@ -106,6 +105,5 @@ object EngineConf {
       // whose partitions measure small (after AQE coalescing) skip two
       // sorts. 64 MB per build map × cores is well inside the
       // documented session shapes (guide §3.1).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_THRESHOLD", "64m"))
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{CellTopK, LongArrayDot, PackedBagDistance, PackedLetterBag, RandProjExpr, StringRollingHash, TopKAgg, UriEncode}
+import graft.expressions.{AsciiLower, CellTopK, LongArrayDot, PackedBagDistance, PackedLetterBag, RandProjExpr, StringRollingHash, TopKAgg, UriEncode}
 
 /** Engine extension point: the native functions, optimizer rules and
   * planner strategy every operator plans with. Two ways in, one set of
@@ -18,16 +18,14 @@ import graft.expressions.{CellTopK, LongArrayDot, PackedBagDistance, PackedLette
   * which every registered op calls before it builds. The functions are
   * callable from BOTH the DataFrame API
   * (`call_function("graft_dot", a, b)`) and plain SQL. Operators call
-  * them unconditionally: there is no second, extension-free plan.
+  * them unconditionally: there is no second, extension-free plan. The
+  * engine's ASCII casefold is one of them: it calls
+  * `graft_ascii_lower` directly; no rule rewrites a `translate`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // optimizer tier: runs in the user-provided batch after pushdown
     e.injectOptimizerRule(_ => graft.plans.ThresholdLevenshtein)
-    // the declarative ASCII casefold (translate over the canonical
-    // alphabet, the round-11 dialect-free casing law) folds to the
-    // native byte-looping expression
-    e.injectOptimizerRule(_ => graft.plans.FoldAsciiTranslate)
     // planner tier: whole-operator strategy for the native as-of join
     e.injectPlannerStrategy(_ => graft.plans.GraftAsOfStrategy)
     // exact-arity builders: surplus arguments must be an analysis error,
@@ -109,6 +107,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         arity("graft_fingerprint", 1, children)
         StringRollingHash(children.head)
+      }))
+    e.injectFunction((
+      FunctionIdentifier("graft_ascii_lower"),
+      new ExpressionInfo(classOf[AsciiLower].getName, "graft_ascii_lower"),
+      (children: Seq[Expression]) => {
+        arity("graft_ascii_lower", 1, children)
+        AsciiLower(children.head)
       }))
     e.injectFunction((
       FunctionIdentifier("graft_uri_encode"),

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native codegen'd ASCII casefold — the hot-path form of the engine's
   * dialect-free casing law ([[graft.functions.TextAnalysis.asciiLower]],
   * round 11: `lower()` is not cross-engine-stable on unicode, so every
-  * text law folds exactly [A-Z] via `translate`).
+  * text law folds exactly [A-Z]; the oracles spell it `translate`).
   *
   * The declarative form (`StringTranslate` with the 26+26 alphabet)
   * routes every code point of the corpus through a JVM hash-map lookup.
@@ -23,10 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * round 11: the translate swap cost text ops 15-40% at sf0.1), UDF
   * never.
   *
-  * Installed by [[graft.plans.FoldAsciiTranslate]], which rewrites the
-  * declarative pattern wherever it appears — call sites keep the
-  * `translate` form, which computes the identical law interpretively
-  * wherever the rule does not run. Equivalence is property-tested over unicode inputs (AsciiLowerSpec).
+  * Registered as the SQL function `graft_ascii_lower` by
+  * [[graft.GraftExtensions]] and called directly by
+  * [[graft.functions.TextAnalysis.asciiLower]]; the DuckDB oracles
+  * spell the same law as `translate` over the canonical alphabet.
+  * Equivalence with `translate` is property-tested over unicode inputs
+  * (AsciiLowerSpec).
   */
 case class AsciiLower(child: Expression) extends UnaryExpression {
 
@@ -57,8 +59,8 @@ object AsciiLower {
     * MALFORMED UTF-8 takes the slow path: `StringTranslate` evaluates
     * through `toString`, which substitutes U+FFFD for invalid
     * sequences — the byte loop would instead copy the garbage bytes
-    * verbatim, and the rewrite would then change the answer of the
-    * `translate` it replaces on e.g. `cast(binary as string)` inputs. The
+    * verbatim, and the fold would then disagree with the `translate`
+    * law on e.g. `cast(binary as string)` inputs. The
     * validity check is a single vectorizable scan; valid strings (all
     * engine-law inputs — parquet strings are validated on read) never
     * leave the fast path. */

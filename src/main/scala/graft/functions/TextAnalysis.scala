@@ -104,16 +104,18 @@ object TextAnalysis {
     * utf8proc applies SIMPLE per-codepoint casing (`ισοσ`, bare `i`),
     * so any law that lowercases raw text diverges the moment a Greek
     * or Turkic document arrives (round-11 adversarial dimension 5:
-    * 22 ops failed on exactly this). `translate` is per-codepoint 1:1
-    * in BOTH engines, and every token law downstream keeps only
-    * `[a-z]+` runs (or hashes whole whitespace-split words), so an
+    * 22 ops failed on exactly this). An [A-Z]-only fold is 1:1 per
+    * code point in BOTH engines, and every token law downstream keeps
+    * only `[a-z]+` runs (or hashes whole whitespace-split words), so an
     * ASCII-only fold is both sufficient and the only form with a
-    * bit-identical cross-engine contract. */
-  def asciiLower(c: Column): Column =
-    translate(c, UpperAscii, LowerAsciiChars)
+    * bit-identical cross-engine contract. The Spark side calls the
+    * native byte fold `graft_ascii_lower`
+    * ([[graft.expressions.AsciiLower]]); the oracles spell the same law
+    * as `translate` over [[UpperAscii]] ([[asciiLowerSql]]). */
+  def asciiLower(c: Column): Column = call_function("graft_ascii_lower", c)
 
-  /** [[asciiLower]] as a SQL fragment — one definition for both the
-    * DuckDB oracles and embedded Spark-SQL expression strings. */
+  /** [[asciiLower]] as a DuckDB SQL fragment: `translate` over the
+    * canonical alphabet, for the oracles. */
   def asciiLowerSql(expr: String): String =
     s"translate($expr, '$UpperAscii', '$LowerAsciiChars')"
 

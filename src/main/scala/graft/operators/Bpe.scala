@@ -559,12 +559,8 @@ object Bpe {
     out
   }
 
-  private val mergesCache = SessionCache.mkFrames()
-  private val vocabCache = SessionCache.mkFrames()
-
-  private[graft] def clearMergesCache(): Unit = {
-    mergesCache.clear(); vocabCache.clear()
-  }
+  private[graft] val mergesCache = new SessionCache.Cache[DataFrame]
+  private[graft] val vocabCache = new SessionCache.Cache[DataFrame]
 
   /** Build-or-reuse the full tokenizer store (merge table + final
     * segmented vocab as sibling parquet dirs under one signature). */
@@ -609,10 +605,7 @@ object Bpe {
     standingMerges(spark, dir)
   }
 
-  private val batchedMergesCache = SessionCache.mkFrames()
-
-  private[graft] def clearBatchedMergesCache(): Unit =
-    batchedMergesCache.clear()
+  private val batchedMergesCache = new SessionCache.Cache[DataFrame]
 
   /** The BATCHED trainer registered against the SAME oracle as
     * [[bpeMerges]]: [[trainBatched]] is provably equivalent to
@@ -631,10 +624,7 @@ object Bpe {
     }
   }
 
-  private val parallelMergesCache = SessionCache.mkFrames()
-
-  private[graft] def clearParallelMergesCache(): Unit =
-    parallelMergesCache.clear()
+  private val parallelMergesCache = new SessionCache.Cache[DataFrame]
 
   /** The full-batch trainer as a registered op with its OWN oracle —
     * the DuckDB replay of the rounds×top-k one-hop-domination law — so
@@ -658,9 +648,7 @@ object Bpe {
     * deeper still (256/4096). */
   val DeepMerges = 64
 
-  private val deepMergesCache = SessionCache.mkFrames()
-
-  private[graft] def clearDeepMergesCache(): Unit = deepMergesCache.clear()
+  private val deepMergesCache = new SessionCache.Cache[DataFrame]
 
   /** The DEEP merge table — trained by [[trainBatched]] (the
     * production job cadence, provably greedy-equivalent) at

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextAnalysis._
@@ -28,9 +29,7 @@ object Curation {
     * streaming twin cannot drift from it). */
   private[graft] val BenchSplitMod = 29
 
-  private val gram8Cache = SessionCache.mkFrames()
-
-  private[graft] def clearGram8Cache(): Unit = gram8Cache.clear()
+  private val gram8Cache = new SessionCache.Cache[DataFrame]
 
   /** Exploded 8-word decontamination shingles with the bench flag —
     * session-cached ([[graft.operators.Dedup.shingleRows]] convention):
@@ -1056,10 +1055,7 @@ object Curation {
       when(total3 > 0, ratio <= 0.2).otherwise(lit(true)).as("rep_pass"))
   }
 
-  private val pipelineMetricsCache = SessionCache.mkFrames()
-
-  private[graft] def clearPipelineMetricsCache(): Unit =
-    pipelineMetricsCache.clear()
+  private[graft] val pipelineMetricsCache = new SessionCache.Cache[DataFrame]
 
   /** [[pipelineDocMetrics]] session-cached (source-listing signature,
     * the shared-index device): the fused text pass — token counts +
@@ -1086,9 +1082,7 @@ object Curation {
       .agg(expr("(max(doc_id) * 3) div 4").as("s"))
       .collect()(0).getLong(0)
 
-  private val packHwmCache = SessionCache.mkFrames()
-
-  private[graft] def clearPackHwmCache(): Unit = packHwmCache.clear()
+  private val packHwmCache = new SessionCache.Cache[DataFrame]
 
   /** The per-source packing high-water mark AT REST (`pack_hwm`
     * store): Σ tokens and doc count over the STANDING slice — the
@@ -1113,9 +1107,7 @@ object Curation {
       Tables.parquet(spark, s"$store/hwm").localCheckpoint()
     }
 
-  private val packIncrCache = SessionCache.mkFrames()
-
-  private[graft] def clearPackIncrCache(): Unit = packIncrCache.clear()
+  private val packIncrCache = new SessionCache.Cache[DataFrame]
 
   /** [[packIncr]]'s kernel: the delta slice packed by CONTINUING each
     * source's prefix sum from the persisted high-water mark — shared

@@ -85,7 +85,7 @@ object Dedup {
     * metadata aggregate — so the guard costs one tiny job, never a
     * pair shuffle. NULL brands/names can never match (SQL equi-join
     * semantics), so they leave the histogram. */
-  private val fuzzyEstimateCache = SessionCache.mkValues[Long]()
+  private val fuzzyEstimateCache = new SessionCache.Cache[Long]
 
   private[graft] def fuzzyCandidateEstimate(
       spark: SparkSession, dir: String): Long =
@@ -114,9 +114,7 @@ object Dedup {
     est.head().getLong(0) // 1-row scalar — bounded metadata collect
   }
 
-  private val fuzzyPairCache = SessionCache.mkFrames()
-
-  private[graft] def clearFuzzyPairCache(): Unit = fuzzyPairCache.clear()
+  private[graft] val fuzzyPairCache = new SessionCache.Cache[DataFrame]
 
   /** The verified fuzzy pair graph — (brand, key_a, key_b, dist), the
     * full blocked-DP output — session-cached: [[fuzzyMatch]] emits it
@@ -213,10 +211,7 @@ object Dedup {
         (col("key") === col("entity_id")).as("is_canonical"))
   }
 
-  private val fuzzyStandingCache = SessionCache.mkFrames()
-
-  private[graft] def clearFuzzyStandingCache(): Unit =
-    fuzzyStandingCache.clear()
+  private[graft] val fuzzyStandingCache = new SessionCache.Cache[DataFrame]
 
   /** The STANDING parts' (node, lbl) entity table — the fuzzy-graph
     * twin of [[GraphOps.standingLabels]], and PERSISTED at rest
@@ -387,9 +382,7 @@ object Dedup {
         (col("key") === col("entity_id")).as("is_canonical"))
   }
 
-  private val sparseEntityCache = SessionCache.mkFrames()
-
-  private[graft] def clearSparseEntityCache(): Unit = sparseEntityCache.clear()
+  private[graft] val sparseEntityCache = new SessionCache.Cache[DataFrame]
 
   /** The sparse best-match entity labels (node, lbl) at rest
     * ([[PersistedStore]]) — like every cluster-label table, this is a
@@ -486,9 +479,7 @@ object Dedup {
     * formulation needs one split per doc but pays 2-3 shuffles of the
     * posting rows — measured slower at this block structure.
     */
-  private val shingleRowCache = SessionCache.mkFrames()
-
-  private[graft] def clearShingleRowCache(): Unit = shingleRowCache.clear()
+  private val shingleRowCache = new SessionCache.Cache[DataFrame]
 
   /** Exploded distinct 3-word shingle rows — session-cached: this is
     * the tokenize+explode base under THIRTEEN call sites (Jaccard,
@@ -514,9 +505,7 @@ object Dedup {
     shingleRows(spark, dir).withColumn("n_sh",
       count(lit(1)).over(Window.partitionBy(col("doc_id"))))
 
-  private val shingleDfCache = SessionCache.mkFrames()
-
-  private[graft] def clearShingleDfCache(): Unit = shingleDfCache.clear()
+  private val shingleDfCache = new SessionCache.Cache[DataFrame]
 
   /** Posting rows with per-doc distinct-shingle count AND per-shingle
     * document frequency — (lang, source, s, doc_id, n_sh, df) —
@@ -805,9 +794,7 @@ object Dedup {
     * row count — strictly fewer shuffled rows at any scale, and the
     * shape the DuckDB oracles already use (`list_intersect` on the
     * `sh` CTE). */
-  private val shingleArrayCache = SessionCache.mkFrames()
-
-  private[graft] def clearShingleArrayCache(): Unit = shingleArrayCache.clear()
+  private val shingleArrayCache = new SessionCache.Cache[DataFrame]
 
   private[graft] def shingleArrays(
       spark: SparkSession, dir: String): DataFrame =
@@ -1111,9 +1098,7 @@ object Dedup {
       .select("doc_id_a", "doc_id_b", "jaccard")
   }
 
-  private val lshPairCache = SessionCache.mkFrames()
-
-  private[graft] def clearLshPairCache(): Unit = lshPairCache.clear()
+  private[graft] val lshPairCache = new SessionCache.Cache[DataFrame]
 
   /** The verified near-dup pair set (uncapped banding, exact Jaccard)
     * — session-cached AND at rest ([[PersistedStore]], round-7):
@@ -1188,10 +1173,7 @@ object Dedup {
     * checkpoints of dead executors. The cached frames are byte-identical
     * to fresh construction (same deterministic xxhash64 chain —
     * DedupSimilaritySpec pins the parity), so oracles are unaffected. */
-  private val minhashIndexCache = SessionCache.mkFramePairs()
-
-  private[graft] def clearMinhashIndexCache(): Unit =
-    minhashIndexCache.clear()
+  private[graft] val minhashIndexCache = new SessionCache.Cache[(DataFrame, DataFrame)]
 
   private[graft] def minhashIndex(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
@@ -1312,9 +1294,7 @@ object Dedup {
       .select(col("doc_id_a").as("doc_id"),
         col("dup_of"), col("n_matches"), col("best_j"))
 
-  private val incrMatchCache = SessionCache.mkFrames()
-
-  private[graft] def clearIncrMatchCache(): Unit = incrMatchCache.clear()
+  private[graft] val incrMatchCache = new SessionCache.Cache[DataFrame]
 
   /** Verified (delta, corpus) match pairs of [[dedupIncremental]],
     * pre-aggregation (exposed for the spec's exact-join parity check).
@@ -1427,9 +1407,10 @@ object Dedup {
   def simhashWordHashes(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(expr(
-          s"transform(slice(split(translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\\\t\\\\n\\\\x0B\\\\f\\\\r]+'), 1, $SimhashWordCap), w -> xxhash64(w))"))
-          .as("h"))
+        explode(transform(
+          slice(split(asciiLower(trim(col("text"))), "[ \\t\\n\\x0B\\f\\r]+"),
+            1, SimhashWordCap),
+          w => xxhash64(w))).as("h"))
 
   /** 64-bit simhash per document (lane-packed vote aggregation). */
   def simhashSignatures(spark: SparkSession, dir: String): DataFrame = {
@@ -1464,9 +1445,7 @@ object Dedup {
       .select(col("doc_id"), sig.as("simhash"))
   }
 
-  private val simhashSigCache = SessionCache.mkFrames()
-
-  private[graft] def clearSimhashSigCache(): Unit = simhashSigCache.clear()
+  private val simhashSigCache = new SessionCache.Cache[DataFrame]
 
   /** [[simhashSignatures]] session-cached (r14): the word-hash explode
     * + lane-packed vote aggregate is the family's corpus-scaled stage
@@ -1606,9 +1585,7 @@ object Dedup {
       .join(wordsOk, Seq("doc_id"))
   }
 
-  private val simhashScopeCache = SessionCache.mkFrames()
-
-  private[graft] def clearSimhashScopeCache(): Unit = simhashScopeCache.clear()
+  private val simhashScopeCache = new SessionCache.Cache[DataFrame]
 
   /** [[simhashScopeSizes]] session-cached (r14): the word-count pass
     * over the documents scan + the shingle-count aggregate ran fresh

@@ -248,9 +248,7 @@ object GraphOps {
     * delta-sized quotient; the standing label table is input, not
     * work (here it is recomputed once for self-containedness — a
     * production run reads the previous output). */
-  private val standingLblCache = SessionCache.mkFrames()
-
-  private[graft] def clearStandingLblCache(): Unit = standingLblCache.clear()
+  private[graft] val standingLblCache = new SessionCache.Cache[DataFrame]
 
   /** The STANDING corpus' (node, lbl) cluster table — session-cached
     * AND at rest ([[PersistedStore]], round-7): this is the previous
@@ -284,9 +282,7 @@ object GraphOps {
     * Shared by [[dupClustersIncremental]], [[clusterRep]] and (via the
     * incremental op) [[Curation.cleanCorpus]]: every consumer of corpus
     * cluster labels reads yesterday's artifact and pays the delta. */
-  private val corpusLblCache = SessionCache.mkFrames()
-
-  private[graft] def clearCorpusLblCache(): Unit = corpusLblCache.clear()
+  private val corpusLblCache = new SessionCache.Cache[DataFrame]
 
   private[graft] def corpusLabels(
       spark: SparkSession, dir: String): DataFrame =
@@ -652,9 +648,7 @@ object GraphOps {
     * deterministic, so cached and fresh frames are row-identical and
     * oracles are unaffected. Keyed by session identity so a replaced
     * session rebuilds instead of touching dead checkpoints. */
-  private val copurchaseCache = SessionCache.mkFrames()
-
-  private[graft] def copurchaseCacheClear(): Unit = copurchaseCache.clear()
+  private[graft] val copurchaseCache = new SessionCache.Cache[DataFrame]
 
   private[graft] def copurchaseEdges(
       spark: SparkSession, dir: String): DataFrame =
@@ -780,10 +774,7 @@ object GraphOps {
     (withDeg, r0)
   }
 
-  private val pagerankStaticCache = SessionCache.mkFramePairs()
-
-  private[graft] def clearPagerankStaticCache(): Unit =
-    pagerankStaticCache.clear()
+  private val pagerankStaticCache = new SessionCache.Cache[(DataFrame, DataFrame)]
 
   /** [[pagerankStatic]] over the registered co-purchase graph,
     * session-cached (r15): the (src, dst, outdeg) frame and r₀ are the
@@ -949,9 +940,7 @@ object GraphOps {
     lpaOfEd(lpaEdgesCached(spark, dir), LpaIters)
   }
 
-  private val lpaEdgeCache = SessionCache.mkFrames()
-
-  private[graft] def clearLpaEdgeCache(): Unit = lpaEdgeCache.clear()
+  private val lpaEdgeCache = new SessionCache.Cache[DataFrame]
 
   /** The doubled (src, dst) co-purchase edge frame LPA iterates over —
     * session-cached (r15): `q_communities` and `q_lpa_converged` each

@@ -187,9 +187,7 @@ object Imi {
   def cellsOf(e: DataFrame, k1: Int, steps: Int, nprobe: Int): DataFrame =
     cellsWithCodebook(e, codebook(halves(e), k1, steps), nprobe)
 
-  private val imiCache = SessionCache.mkFrames()
-
-  private[graft] def clearImiCache(): Unit = imiCache.clear()
+  private[graft] val imiCache = new SessionCache.Cache[DataFrame]
 
   /** Train-or-reuse the registered-geometry trained canopy for `dir` —
     * session-cached AND at rest (`imi_canopy` store): the assignment
@@ -237,9 +235,7 @@ object Imi {
     * uses ([[Similarity.StreamAnnMod]]). */
   val DeltaMod: Int = Similarity.StreamAnnMod
 
-  private val standingCache = SessionCache.mkFramePairs()
-
-  private[graft] def clearStandingCache(): Unit = standingCache.clear()
+  private[graft] val standingCache = new SessionCache.Cache[(DataFrame, DataFrame)]
 
   /** The STANDING trained index at rest (`imi_standing` store): the
     * per-half codebook trained on the standing slice ONLY
@@ -516,9 +512,7 @@ object Imi {
     * measurement. */
   val CompactRecallGapFloor = 0.10
 
-  private val compactCache = SessionCache.mkFrames()
-
-  private[graft] def clearCompactCache(): Unit = compactCache.clear()
+  private[graft] val compactCache = new SessionCache.Cache[DataFrame]
 
   /** The COMPACTED index's cell assignment — the leg that folds an
     * accumulated delta back into the standing index (without it the
@@ -669,9 +663,7 @@ object Imi {
     * too long. */
   val RetrainDeltaMod = 3
 
-  private val retrainCache = SessionCache.mkFrames()
-
-  private[graft] def clearRetrainCache(): Unit = retrainCache.clear()
+  private val retrainCache = new SessionCache.Cache[DataFrame]
 
   /** The RETRAIN branch of [[compactUnion]] as its own registered op —
     * the r9 verdict's gap: the >threshold path was spec-forced but

@@ -107,9 +107,7 @@ object MultimodalOps {
   def phashStorePath(spark: SparkSession, dir: String): String =
     PersistedStore.currentRoot(spark, dir, "phash_store")
 
-  private val phashCache = SessionCache.mkFrames()
-
-  private[graft] def clearPhashCache(): Unit = phashCache.clear()
+  private[graft] val phashCache = new SessionCache.Cache[DataFrame]
 
   /** The asset DIRECTORY for `dir` — real .bmp files on disk (the
     * deterministic fixture [[Multimodal.writeAssetFixture]] commits

@@ -48,9 +48,11 @@ private[graft] object PersistedStore {
     * generation (protecting in-flight readers); a `ver-*` dir is
     * garbage-collected at a later commit once it is (a) at least two
     * generations old AND (b) older than the cross-process grace
-    * window (see below). A crash mid-rebuild leaves a stale/absent
-    * signature and an orphan version dir — never a valid-looking
-    * half-written store.
+    * window (see below); every other entry of the store root but the
+    * signature file (what a store first written in an older layout
+    * left) is deleted at the next commit. A crash mid-rebuild leaves a
+    * stale/absent signature and an orphan version dir — never a
+    * valid-looking half-written store.
     *
     * Concurrency: a per-store JVM lock serializes rebuilds across
     * SESSIONS in one process (the session caches' per-scope locks
@@ -110,12 +112,18 @@ private[graft] object PersistedStore {
               GcGraceNanos
             catch { case _: NumberFormatException => false }
           }
+          // Anything else in the store root but the signature and its
+          // checksum is a leftover of an older layout (in-place part
+          // files, generation dirs) that nothing reads any more.
+          def stale(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+            val name = st.getPath.getName
+            if (st.isDirectory && name.startsWith("ver-"))
+              !keep(name) && !youngerThanGrace(name)
+            else name != "_SRC_SIG" && name != "._SRC_SIG.crc"
+          }
           Option(fs.listStatus(new org.apache.hadoop.fs.Path(store)))
             .getOrElse(Array.empty)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("ver-") &&
-              !keep(st.getPath.getName) &&
-              !youngerThanGrace(st.getPath.getName))
+            .filter(stale)
             .foreach(st => fs.delete(st.getPath, true))
           root
         }

@@ -169,9 +169,7 @@ object QualityModel {
     w.filter(col("w") =!= 0)
   }
 
-  private val modelCache = SessionCache.mkFrames()
-
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
+  private val modelCache = new SessionCache.Cache[DataFrame]
 
   /** The trained weights AT REST (`quality_model` store) — trained once
     * per corpus, read by every scorer; session-cached on top. */

@@ -170,9 +170,7 @@ object Retrieval {
     * the whole point of hashed features. */
   /** Per-(doc, bucket) hashed-bigram counts with the target flag — the
     * one corpus-scaled aggregate every DSIR surface builds from. */
-  private val dsirDcCache = SessionCache.mkFrames()
-
-  private[graft] def clearDsirDcCache(): Unit = dsirDcCache.clear()
+  private val dsirDcCache = new SessionCache.Cache[DataFrame]
 
   /** [[dsirDocCounts]] session-cached (r14): the tokenize+hash pass is
     * the one corpus-scaled stage under BOTH the batch op and the

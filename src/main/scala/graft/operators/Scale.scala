@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Money.centsOf
@@ -86,9 +87,7 @@ object Scale {
       .drop("__salt")
   }
 
-  private val hotKeyCache = SessionCache.mkFrames()
-
-  private[graft] def clearHotKeyCache(): Unit = hotKeyCache.clear()
+  private val hotKeyCache = new SessionCache.Cache[DataFrame]
 
   val saltedJoin: Op = Op(
     "q_salted_join",

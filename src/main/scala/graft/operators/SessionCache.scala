@@ -19,12 +19,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     one driver-side file listing per access, metadata only, no
   *     process fork.
   *  3. **Bounded memory**: replacing a stale entry RELEASES the old
-  *     value's localCheckpoint blocks (the
-  *     [[GraphOps.connectedComponents]] release discipline) — a
-  *     long-lived session cycling through regenerated corpora holds
-  *     one live index per scope, not one per generation. `clear()`
-  *     only drops references (tests may still hold the frames; the
-  *     ContextCleaner reclaims them).
+  *     value, before the rebuild, by its own shape: a `persist()`ed frame is unpersisted,
+  *     any other frame drops its localCheckpoint blocks
+  *     ([[releaseFrame]], the [[GraphOps.connectedComponents]] release
+  *     discipline; a plain scan holds none), a tuple releases each
+  *     element and a scalar holds nothing. A long-lived session
+  *     cycling through regenerated corpora holds one live index per
+  *     scope, not one per generation. `clear()` only drops references
+  *     (tests may still hold the frames; the ContextCleaner reclaims
+  *     them).
+  *
+  * Each call site holds its own `private val` of a `new Cache[T]`:
+  * inlining the construction into the access would compile but never
+  * cache.
   */
 private[graft] object SessionCache {
 
@@ -53,7 +60,17 @@ private[graft] object SessionCache {
     }
   }
 
-  final class Cache[T](release: T => Unit) {
+  /** Releases what an evicted value holds, by the value's shape. */
+  private def release(v: Any): Unit = v match {
+    case df: DataFrame =>
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        df.unpersist(false)
+      else releaseFrame(df)
+    case p: Product => p.productIterator.foreach(release)
+    case _ => ()
+  }
+
+  final class Cache[T] {
     private val entries =
       new java.util.concurrent.ConcurrentHashMap[String, (String, T)]
     private val locks =
@@ -79,9 +96,12 @@ private[graft] object SessionCache {
         val cur2 = entries.get(scope)
         if (cur2 != null && cur2._1 == sig) cur2._2
         else {
+          // release the stale value BEFORE the build: a rebuild that
+          // persists the same plan would otherwise adopt the old cached
+          // data and lose it with the release
+          if (cur2 != null) { entries.remove(scope); release(cur2._2) }
           val v = build
-          val old = entries.put(scope, (sig, v))
-          if (old != null) release(old._2)
+          entries.put(scope, (sig, v))
           v
         }
       }
@@ -95,31 +115,4 @@ private[graft] object SessionCache {
       * scope keys are bounded by (session × dir × params) churn. */
     def clear(): Unit = entries.clear()
   }
-
-  /** NEW cache of single localCheckpointed frames — factory, not a
-    * shared singleton: each call-site holds its own `private val`
-    * (inlining `SessionCache.mkFrames().getOrBuild(...)` would compile
-    * but never cache, hence the explicit factory form). */
-  def mkFrames(): Cache[DataFrame] = new Cache[DataFrame](releaseFrame)
-
-  /** Cache of driver-side values (e.g. the quadratic-guard candidate
-    * estimates, the BM25 (n_docs, t_tokens) corpus stats) — nothing to
-    * release. */
-  def mkValues[T](): Cache[T] = new Cache[T](_ => ())
-
-  /** Cache of `persist()`-ed (columnar InMemoryRelation) frames — for
-    * WIDE cached payloads (e.g. the span window rows, ~8× the corpus
-    * text bytes as deserialized localCheckpoint blocks) where the
-    * columnar cache's compression (dictionary/RLE over repetitive
-    * strings) bounds the footprint and MEMORY_AND_DISK spills the rest;
-    * released by `unpersist` instead of the LogicalRDD block drop. */
-  def mkPersistedFrames(): Cache[DataFrame] =
-    new Cache[DataFrame](df => { df.unpersist(false); () })
-
-  /** NEW cache of frame PAIRS (e.g. the minhash (banded, sizes) index) —
-    * factory form for the same reason as [[mkFrames]]. */
-  def mkFramePairs(): Cache[(DataFrame, DataFrame)] =
-    new Cache[(DataFrame, DataFrame)]({ case (a, b) =>
-      releaseFrame(a); releaseFrame(b)
-    })
 }

@@ -124,9 +124,7 @@ object Similarity {
     ivfUpdate(ivfAssign(n,
       ivfSeedCodebook(n, ivfLawStride(nQualifying.getOrElse(n.count())))))
 
-  private val qualCountCache = SessionCache.mkValues[Long]()
-
-  private[graft] def clearQualCountCache(): Unit = qualCountCache.clear()
+  private val qualCountCache = new SessionCache.Cache[Long]
 
   /** The qualifying-population count (n2 > 0) behind the stride law —
     * session-cached bounded metadata (the fuzzy candidate-estimate
@@ -252,7 +250,7 @@ object Similarity {
     * all-pairs join: Σ_label C(n,2) from the label histogram — one
     * metadata aggregate, computed BEFORE any pair exists (r12 verdict
     * #5 guard). */
-  private val embedEstimateCache = SessionCache.mkValues[Long]()
+  private val embedEstimateCache = new SessionCache.Cache[Long]
 
   private[graft] def embedPairEstimate(
       spark: SparkSession, dir: String): Long =
@@ -367,9 +365,7 @@ object Similarity {
           explode(col("cs.cell")).as("cell"))
   }
 
-  private val canopyCache = SessionCache.mkFrames()
-
-  private[graft] def clearGraphCanopyCache(): Unit = canopyCache.clear()
+  private[graft] val canopyCache = new SessionCache.Cache[DataFrame]
 
   /** The GRAPH-geometry canopy (stride 10, nprobe 8, vectors carried)
     * — session-cached AND at rest ([[PersistedStore]], round-7):
@@ -1185,9 +1181,7 @@ object Similarity {
     * store's scan frames. Contract: `dir`'s embeddings table IS the
     * corpus `q` derives from (both callers hold this); regenerated
     * testdata invalidates the signature and retrains. */
-  private val pqIndexCache = SessionCache.mkFramePairs()
-
-  private[graft] def clearPqIndexCache(): Unit = pqIndexCache.clear()
+  private[graft] val pqIndexCache = new SessionCache.Cache[(DataFrame, DataFrame)]
 
   /** Train-or-reuse the PQ index for (corpus `q`, `steps`, `nc`).
     * `tag` names a distinct index over a SUBSET of the corpus (its own
@@ -1408,9 +1402,7 @@ object Similarity {
       .agg(sum(col("d2")).as("adc"))
   }
 
-  private val seedCodesCache = SessionCache.mkFrames()
-
-  private[graft] def clearSeedCodesCache(): Unit = seedCodesCache.clear()
+  private val seedCodesCache = new SessionCache.Cache[DataFrame]
 
   /** Seed-codebook PQ code assignment — session-cached: [[pqAdc]] and
     * [[pqAdcRefine]] both scan these codes, and the corpus-scaled
@@ -1966,9 +1958,7 @@ object Similarity {
     * (vec_id, label, cell, cos_cent, v, n2). The argmax collapses
     * map-side via the min(struct) trick — the broadcast fan-out never
     * reaches a shuffle. */
-  private val semAsgCache = SessionCache.mkFrames()
-
-  private[graft] def clearSemAsgCache(): Unit = semAsgCache.clear()
+  private val semAsgCache = new SessionCache.Cache[DataFrame]
 
   /** Session-cached (r15): TWO registered consumers ([[semdedup]],
     * [[cleanEmbeddings]]) each re-ran the broadcast-codebook argmax

@@ -43,9 +43,7 @@ object SinkOps {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private val anchorCache = SessionCache.mkValues[Long]()
-
-  private[graft] def clearAnchorCache(): Unit = anchorCache.clear()
+  private val anchorCache = new SessionCache.Cache[Long]
 
   /** min(shipdate) of the lineitem table — the day-window anchor BOTH
     * [[upsertDay]] and [[txCommit]] derive their literal bounds from.

@@ -44,9 +44,7 @@ object Spans {
 
   private def tokens: Column = split(trim(col("text")), "[ \\t\\n\\x0B\\f\\r]+")
 
-  private val windowRowCache = SessionCache.mkPersistedFrames()
-
-  private[graft] def clearWindowRowCache(): Unit = windowRowCache.clear()
+  private val windowRowCache = new SessionCache.Cache[DataFrame]
 
   /** (doc_id, i, win_text) for every W-token window start i (1-based) —
     * session-cached (r14): the window construction over the full text

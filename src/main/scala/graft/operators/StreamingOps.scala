@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 
@@ -216,9 +217,7 @@ object StreamingOps {
         (col("chi2_scaled") > Introspect.DriftThreshold).as("drifted"))
   }
 
-  private val driftModelCache = SessionCache.mkFrames()
-
-  private[graft] def clearDriftModelCache(): Unit = driftModelCache.clear()
+  private[graft] val driftModelCache = new SessionCache.Cache[DataFrame]
 
   /** The STANDING corpus' drift bucket model — session-cached (round-7
     * task 5) AND at rest ([[PersistedStore]]): the model is
@@ -356,9 +355,7 @@ object StreamingOps {
       .agg(sum(col("n")).as("n"), sum(col("value_cents")).as("value_cents"))
   }
 
-  private val pplModelCache = SessionCache.mkFramePairs()
-
-  private[graft] def clearPplModelCache(): Unit = pplModelCache.clear()
+  private[graft] val pplModelCache = new SessionCache.Cache[(DataFrame, DataFrame)]
 
   /** The STANDING corpus' perplexity model — the per-language bigram
     * counts PLUS the tercile cut scores, persisted

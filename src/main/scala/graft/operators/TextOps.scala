@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -183,9 +184,7 @@ object TextOps {
     * with the as-of oracles. */
   private[graft] val ChunkPack = 1000000L
 
-  private val chunkIndexCache = SessionCache.mkFrames()
-
-  private[graft] def clearChunkIndexCache(): Unit = chunkIndexCache.clear()
+  private val chunkIndexCache = new SessionCache.Cache[DataFrame]
 
   /** Full-corpus (doc_id, source, chunk_idx, n_words, chunk_fp) chunk
     * metadata — session-cached (r14): the text→words→chunks explode +
@@ -309,10 +308,7 @@ object TextOps {
       : org.apache.spark.sql.DataFrame =
     chunkDedupRollup(chunks, chunkKeepersOf(chunks))
 
-  private val chunkKeepersCache = SessionCache.mkFrames()
-
-  private[graft] def clearChunkKeepersCache(): Unit =
-    chunkKeepersCache.clear()
+  private[graft] val chunkKeepersCache = new SessionCache.Cache[DataFrame]
 
   /** The STANDING corpus' first-keeper table — session-cached AND at
     * rest (`chunk_keepers` store): (chunk_fp, first_key) over the
@@ -600,9 +596,7 @@ object TextOps {
     docs.select(col("doc_id"), explode(bigramArray).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
 
-  private val bigramRowCache = SessionCache.mkPersistedFrames()
-
-  private[graft] def clearBigramRowCache(): Unit = bigramRowCache.clear()
+  private val bigramRowCache = new SessionCache.Cache[DataFrame]
 
   /** (doc_id, lang, w1, w2) word-bigram occurrence rows of the corpus,
     * with one NULL-marker row per document with < 2 tokens
@@ -1222,9 +1216,7 @@ object TextOps {
     * broadcastable where full postings never would be; a df cap is the
     * documented second bound if a corpus breaks that assumption.
     */
-  private val rareIndexCache = SessionCache.mkFrames()
-
-  private[graft] def clearRareIndexCache(): Unit = rareIndexCache.clear()
+  private val rareIndexCache = new SessionCache.Cache[DataFrame]
 
   private[graft] def bm25RareIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -1241,9 +1233,7 @@ object TextOps {
         .localCheckpoint()
     }
 
-  private val tfIndexCache = SessionCache.mkFrames()
-
-  private[graft] def clearTfIndexCache(): Unit = tfIndexCache.clear()
+  private[graft] val tfIndexCache = new SessionCache.Cache[DataFrame]
 
   /** Whole-vocabulary term-frequency index — (doc_id, dl, term, tf),
     * the tokenize + first aggregate EVERY lexical-retrieval surface
@@ -1270,9 +1260,7 @@ object TextOps {
       Tables.parquet(spark, s"$store/tf")
     }
 
-  private val bm25StatsCache = SessionCache.mkValues[(Long, Long)]()
-
-  private[graft] def clearBm25StatsCache(): Unit = bm25StatsCache.clear()
+  private val bm25StatsCache = new SessionCache.Cache[(Long, Long)]
 
   /** Corpus scalars the probe needs: (n_docs, t_tokens) over ALL tokens
     * (dl counts every token, not just rare ones). One driver-side row —
@@ -1322,9 +1310,7 @@ object TextOps {
     */
   val Bm25PrunePostings = 32
 
-  private val prunedIndexCache = SessionCache.mkFrames()
-
-  private[graft] def clearPrunedIndexCache(): Unit = prunedIndexCache.clear()
+  private val prunedIndexCache = new SessionCache.Cache[DataFrame]
 
   private[graft] def bm25PrunedIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =

@@ -1002,8 +1002,6 @@ object EventStream {
   private val incrCcStates = scala.collection.concurrent.TrieMap
     .empty[String, IncrCcState]
 
-  private[graft] def clearIncrCcStates(): Unit = incrCcStates.clear()
-
   /** Initial fold state — the standing corpus' slice of the session
     * band index, its shingle sets, and its cluster labels. */
   private[graft] def incrCcInit(

@@ -164,13 +164,13 @@ class MultimodalSpec extends SparkSpec {
     val before = listing
     // a fresh session (simulated by cache eviction) must READ the
     // persisted hash table — same results, store untouched
-    MultimodalOps.clearPhashCache()
+    MultimodalOps.phashCache.clear()
     assert(run() === first)
     assert(listing === before,
       "cache-evicted rerun must reuse the persisted hashes, not re-decode")
     // dropping the store forces a rebuild that reproduces the same hashes
     graft.operators.PersistedStore.drop(spark, sf001, "phash_store")
-    MultimodalOps.clearPhashCache()
+    MultimodalOps.phashCache.clear()
     assert(run() === first, "rebuilt store must reproduce identical pairs")
   }
 
@@ -196,7 +196,7 @@ class MultimodalSpec extends SparkSpec {
     try {
       java.nio.file.Files.write(victim,
         "not an image at all".getBytes("UTF-8"))
-      MultimodalOps.clearPhashCache()
+      MultimodalOps.phashCache.clear()
       val hashes = MultimodalOps.phashStore(spark, sf001)
         .filter(col("asset_id") === 2L).collect()
       // the corrupted payload no longer decodes: phash must be NULL —
@@ -207,7 +207,7 @@ class MultimodalSpec extends SparkSpec {
         !== storeRootBefore, "store version did not advance on rebuild")
     } finally {
       java.nio.file.Files.write(victim, orig)
-      MultimodalOps.clearPhashCache()
+      MultimodalOps.phashCache.clear()
     }
     // restored bytes → rebuild again → asset 2 decodes again
     val back = MultimodalOps.phashStore(spark, sf001)

@@ -353,7 +353,7 @@ class CurationSpec extends SparkSpec {
       df.select($"doc_id", $"source", $"n_tokens", $"rep_pass")
         .as[(Long, String, Long, Boolean)].collect().sorted
     val fresh = key(Curation.pipelineDocMetrics(spark, sf001))
-    Curation.clearPipelineMetricsCache()
+    Curation.pipelineMetricsCache.clear()
     val cached1 = key(Curation.pipelineDocMetricsCached(spark, sf001))
     val cached2 = key(Curation.pipelineDocMetricsCached(spark, sf001))
     assert(cached1 === fresh.toSeq)

@@ -690,7 +690,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val before = listing
     // a fresh session (simulated by cache eviction) must READ the
     // persisted index, not retrain it — and return identical results
-    Similarity.clearPqIndexCache()
+    Similarity.pqIndexCache.clear()
     assert(run() === first)
     assert(listing === before,
       "cache-evicted search must reuse the persisted index, not rewrite it")

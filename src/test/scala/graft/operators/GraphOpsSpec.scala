@@ -115,7 +115,7 @@ class GraphOpsSpec extends SparkSpec {
     def listing = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/labels"))
       .map(s => s.getPath.getName -> s.getModificationTime).sortBy(_._1).toSeq
     val before = listing
-    GraphOps.clearStandingLblCache()
+    GraphOps.standingLblCache.clear()
     assert(run() === first)
     assert(listing === before,
       "cache-evicted rerun must reuse the persisted labels, not re-run CC")
@@ -136,7 +136,7 @@ class GraphOpsSpec extends SparkSpec {
     def listing = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/labels"))
       .map(s => s.getPath.getName -> s.getModificationTime).sortBy(_._1).toSeq
     val before = listing
-    Dedup.clearFuzzyStandingCache()
+    Dedup.fuzzyStandingCache.clear()
     assert(labs() === first)
     assert(listing === before,
       "cache-evicted rerun must reuse the persisted labels, not re-run CC")

@@ -102,7 +102,7 @@ class ImiSpec extends SparkSpec {
     def listing = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/cells"))
       .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
     val before = listing
-    Imi.clearImiCache()
+    Imi.imiCache.clear()
     assert(rows(Imi.trainedCanopy(spark, sf001)) === first,
       "evicted reread diverged")
     assert(listing === before, "store was rebuilt on a cache miss")

@@ -37,92 +37,94 @@ class PersistedStoreSpec extends SparkSpec {
   }
 
   test("lsh pair index persists and rebuilds identically") {
-    checkStore("lsh_pair_index", "pairs", () => Dedup.clearLshPairCache())(
+    checkStore("lsh_pair_index", "pairs", () => Dedup.lshPairCache.clear())(
       Dedup.minhashLsh.build(spark, sf001))
   }
 
   test("tf index persists and rebuilds identically") {
-    checkStore("tf_index", "tf", () => TextOps.clearTfIndexCache())(
+    checkStore("tf_index", "tf", () => TextOps.tfIndexCache.clear())(
       TextOps.tfIndex(spark, sf001))
   }
 
   test("co-purchase edges persist and rebuild identically") {
     checkStore("copurchase_edges", "edges",
-      () => GraphOps.copurchaseCacheClear())(
+      () => GraphOps.copurchaseCache.clear())(
       GraphOps.copurchaseEdges(spark, sf001))
   }
 
   test("graph canopy persists and rebuilds identically") {
     checkStore("graph_canopy", "cells",
-      () => Similarity.clearGraphCanopyCache())(
+      () => Similarity.canopyCache.clear())(
       Similarity.graphCanopy(spark, sf001))
   }
 
   test("sparse entity labels persist and rebuild identically") {
     checkStore("sparse_entity_labels", "labels",
-      () => Dedup.clearSparseEntityCache())(
+      () => Dedup.sparseEntityCache.clear())(
       Dedup.entityResolve.build(spark, sf001))
   }
 
   test("drift model persists and rebuilds identically") {
     checkStore("drift_model", "model",
-      () => StreamingOps.clearDriftModelCache())(
+      () => StreamingOps.driftModelCache.clear())(
       StreamingOps.standingDriftModel(spark, sf001))
   }
 
   test("bpe merge table persists and rebuilds identically") {
-    checkStore("bpe_merges", "merges", () => Bpe.clearMergesCache())(
+    checkStore("bpe_merges", "merges",
+      () => { Bpe.mergesCache.clear(); Bpe.vocabCache.clear() })(
       Bpe.standingMerges(spark, sf001))
   }
 
   test("minhash banded-signature index persists and rebuilds identically") {
     checkStore("minhash_index", "banded",
-      () => Dedup.clearMinhashIndexCache())(
+      () => Dedup.minhashIndexCache.clear())(
       Dedup.minhashIndex(spark, sf001)._1)
   }
 
   test("minhash shingle sizes persist and rebuild identically") {
     checkStore("minhash_index", "sizes",
-      () => Dedup.clearMinhashIndexCache())(
+      () => Dedup.minhashIndexCache.clear())(
       Dedup.minhashIndex(spark, sf001)._2)
   }
 
   test("incremental verified-match set persists and rebuilds identically") {
     checkStore("incr_matches", "matches",
-      () => Dedup.clearIncrMatchCache())(
+      () => Dedup.incrMatchCache.clear())(
       Dedup.incrementalMatches(spark, sf001))
   }
 
   test("trained IMI canopy persists and rebuilds identically") {
-    checkStore("imi_canopy", "cells", () => Imi.clearImiCache())(
+    checkStore("imi_canopy", "cells", () => Imi.imiCache.clear())(
       Imi.trainedCanopy(spark, sf001))
   }
 
   test("standing IMI index (codebook half) persists and rebuilds " +
     "identically") {
-    checkStore("imi_standing", "codebook", () => Imi.clearStandingCache())(
+    checkStore("imi_standing", "codebook", () => Imi.standingCache.clear())(
       Imi.standingIndex(spark, sf001)._1)
   }
 
   test("standing IMI index (cells half) persists and rebuilds " +
     "identically") {
-    checkStore("imi_standing", "cells", () => Imi.clearStandingCache())(
+    checkStore("imi_standing", "cells", () => Imi.standingCache.clear())(
       Imi.standingIndex(spark, sf001)._2)
   }
 
   test("compacted IMI index persists and rebuilds identically") {
-    checkStore("imi_compact", "cells", () => Imi.clearCompactCache())(
+    checkStore("imi_compact", "cells", () => Imi.compactCache.clear())(
       Imi.imiCompact.build(spark, sf001))
   }
 
   test("bpe segmented vocab persists and rebuilds identically") {
-    checkStore("bpe_merges", "vocab", () => Bpe.clearMergesCache())(
+    checkStore("bpe_merges", "vocab",
+      () => { Bpe.mergesCache.clear(); Bpe.vocabCache.clear() })(
       Bpe.standingVocab(spark, sf001))
   }
 
   test("standing chunk-keeper table persists and rebuilds identically") {
     checkStore("chunk_keepers", "keepers",
-      () => TextOps.clearChunkKeepersCache())(
+      () => TextOps.chunkKeepersCache.clear())(
       TextOps.standingChunkKeepers(spark, sf001))
   }
 
@@ -165,6 +167,34 @@ class PersistedStoreSpec extends SparkSpec {
           "(it could be a concurrent writer's in-flight build)")
       assert(exists(s"$r2/rows") && exists(s"$r3/rows"))
     } finally PersistedStore.drop(spark, sf001, "ver_probe")
+  }
+
+  test("a commit deletes what an older layout left in the store root") {
+    PersistedStore.drop(spark, sf001, "layout_probe")
+    def build(v: String) = PersistedStore.ensure(spark, sf001,
+      "documents.parquet", "layout_probe", v) { root =>
+      graft.Tables.documents(spark, sf001).limit(2)
+        .write.mode("overwrite").parquet(s"$root/rows")
+    }
+    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    try {
+      val r1 = build("v1")
+      val store = r1.substring(0, r1.lastIndexOf('/'))
+      // an in-place part file and a generation dir, the layouts the
+      // fixture stores had before they committed through ensure
+      fs.create(path(s"$store/part-0.parquet")).close()
+      fs.mkdirs(path(s"$store/gen-v4-1"))
+      val r2 = build("v2")
+      assert(!fs.exists(path(s"$store/part-0.parquet")))
+      assert(!fs.exists(path(s"$store/gen-v4-1")))
+      assert(fs.exists(path(s"$store/_SRC_SIG")))
+      assert(fs.listStatus(path(store)).map(_.getPath.getName)
+        .filter(_.startsWith("ver-")).toSet ===
+        Set(r1, r2).map(r => r.substring(r.lastIndexOf('/') + 1)))
+      assert(fs.exists(path(s"$r1/rows")) && fs.exists(path(s"$r2/rows")))
+    } finally PersistedStore.drop(spark, sf001, "layout_probe")
   }
 
   test("concurrent ensure on one store builds exactly once") {
@@ -214,7 +244,7 @@ class PersistedStoreSpec extends SparkSpec {
     assert(before.nonEmpty, "first build must register a bucketed table")
     // force a NEW store generation (fresh ver dir ⇒ fresh table name)
     PersistedStore.drop(spark, sf001, "chunk_keepers")
-    TextOps.clearChunkKeepersCache()
+    TextOps.chunkKeepersCache.clear()
     TextOps.bucketedChunkKeepers(spark, sf001).count()
     val after = keeperTables
     assert(after.nonEmpty)

@@ -319,7 +319,7 @@ class ProfilingSpec extends SparkSpec {
     def listing = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/model"))
       .map(s => s.getPath.getName -> s.getModificationTime).sortBy(_._1).toSeq
     val before = listing
-    StreamingOps.clearPplModelCache()
+    StreamingOps.pplModelCache.clear()
     assert(run() === first)
     assert(listing === before,
       "cache-evicted rerun must reuse the persisted model, not rebuild it")

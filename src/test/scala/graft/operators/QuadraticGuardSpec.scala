@@ -36,7 +36,7 @@ class QuadraticGuardSpec extends SparkSpec {
   test("hot corpus: all three contract ops abort BEFORE pair work, " +
     "each naming its scale-safe sibling") {
     val dir = hotDir(400) // C(400,2) = 79 800 candidates
-    Dedup.clearFuzzyPairCache()
+    Dedup.fuzzyPairCache.clear()
     withBudget(1000L) {
       val e1 = intercept[IllegalStateException](
         Dedup.fuzzyMatch.build(spark, dir).count())
@@ -68,18 +68,18 @@ class QuadraticGuardSpec extends SparkSpec {
     assert(Similarity.embedPairEstimate(spark, sf001)
       < EngineConf.CandidateBudgetDefault)
     // and the guarded ops still run green under the default budget
-    Dedup.clearFuzzyPairCache()
+    Dedup.fuzzyPairCache.clear()
     assert(Dedup.fuzzyMatch.build(spark, sf001).count() > 0)
   }
 
   test("an explicit budget raise is the documented escape hatch") {
     val dir = hotDir(400)
-    Dedup.clearFuzzyPairCache()
+    Dedup.fuzzyPairCache.clear()
     withBudget(100000L) {
       // 79 800 candidates now inside the budget: the exhaustive
       // contract runs — every same-brand pair within distance 2
       assert(Dedup.fuzzyMatch.build(spark, dir).count() > 0)
     }
-    Dedup.clearFuzzyPairCache()
+    Dedup.fuzzyPairCache.clear()
   }
 }
