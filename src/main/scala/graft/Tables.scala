@@ -17,9 +17,10 @@ object Tables {
   /** Live-database source switch (reference reads live PostgreSQL:
     * scripts/revalue/revalueCollection.mjs:9-16,
     * scripts/pricing/03_build_market_price_daily.js:24-25): when the
-    * session conf `graft.jdbc.url` (or env `GRAFT_JDBC_URL`) is set,
-    * tables resolve through `spark.read.format("jdbc")` against that URL
-    * with `dbtable = <name>`; parquet from the sf dir otherwise. The
+    * session conf `graft.jdbc.url` is set (`spark-submit --conf` or
+    * `spark-defaults`), tables resolve through
+    * `spark.read.format("jdbc")` against that URL with
+    * `dbtable = <name>`; parquet from the sf dir otherwise. The
     * JDBC reader participates in pushdown like any DataSource — filters
     * and column pruning travel into the generated SQL; partitioned reads
     * (partitionColumn/numPartitions) are the caller's per-table tuning
@@ -27,7 +28,7 @@ object Tables {
     * Derby database.
     */
   // Announce which source backs table reads, once per distinct source:
-  // a stale GRAFT_JDBC_URL silently rerouting every read to a database
+  // a stale graft.jdbc.url silently rerouting every read to a database
   // while the oracles still check parquet is otherwise a pure
   // head-scratcher of hash mismatches.
   private val lastLoggedSource =
@@ -37,10 +38,9 @@ object Tables {
       System.err.println(s"[graft] Tables reading from: $source")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val url = spark.conf.getOption("graft.jdbc.url")
-      .orElse(sys.env.get("GRAFT_JDBC_URL")).getOrElse("")
+    val url = spark.conf.getOption("graft.jdbc.url").getOrElse("")
     if (url.nonEmpty) {
-      logSourceOnce(s"jdbc $url (GRAFT_JDBC_URL/graft.jdbc.url is set)")
+      logSourceOnce(s"jdbc $url (graft.jdbc.url is set)")
       jdbcRead(spark, url, name)
     } else {
       logSourceOnce(s"parquet under scale-factor dirs (e.g. $dir)")

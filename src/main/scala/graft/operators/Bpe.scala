@@ -133,7 +133,7 @@ object Bpe {
     * form keys a map<long, array<entry>> by `xxhash64(key) mod
     * [[MapBuckets]]`: a probe scans at most min(N, 1024) LONG keys
     * (flat 8-byte compares) plus one tiny bucket array instead of N
-    * string compares. Measured (BpeEncodeBench, PERF.md round 9):
+    * string compares. Measured (PERF.md round 9):
     * 2.9× faster than the flat map already at depth 256 and 17× at a
     * synthetic depth 4096, so this is the DEFAULT for every encode
     * path; same law, spec-pinned ≡ flat. */
@@ -243,7 +243,7 @@ object Bpe {
         // transform: mergePair's fold evaluates its pair argument per
         // SYMBOL, so inlining the rank-scan expressions there would
         // re-run the whole adjacent-pair lookup for every element —
-        // measured 10× slower at depth 256 (BpeEncodeBench). The
+        // measured 10× slower at depth 256 (PERF.md round 9). The
         // `done` flag short-circuits the iterations past the fixpoint
         // (the loop bound is |syms|-1, the worst case; most types fix
         // in a few merges), and CASE WHEN's lazy branches make those
@@ -369,15 +369,10 @@ object Bpe {
     * Per round: one (batch+1)-row `TakeOrderedAndProject` argmax (the
     * collected rows are O(batch) metadata, same adjudication as the
     * 8-row merge-table reads), then ONE map-only fold applying the
-    * whole batch in rank order, then the round checkpoint.
-    *
-    * `onRound` observes (round, acceptedMerges) after each committed
-    * round — telemetry only (the BpeTrainBench occupancy measurement);
-    * the default is a no-op and the merge table is unaffected. */
+    * whole batch in rank order, then the round checkpoint. */
   def trainBatched(docs: DataFrame, numMerges: Int = NumMerges,
-      batch: Int = 32,
-      onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
-    val (m, v) = trainBatchedWithVocab(docs, numMerges, batch, onRound)
+      batch: Int = 32): DataFrame = {
+    val (m, v) = trainBatchedWithVocab(docs, numMerges, batch)
     SessionCache.releaseFrame(v)
     m
   }
@@ -388,9 +383,7 @@ object Bpe {
     * fast path for seen types). Both frames are checkpointed; the
     * caller owns their blocks. */
   def trainBatchedWithVocab(docs: DataFrame, numMerges: Int = NumMerges,
-      batch: Int = 32,
-      onRound: (Int, Int) => Unit = (_, _) => ())
-      : (DataFrame, DataFrame) = {
+      batch: Int = 32): (DataFrame, DataFrame) = {
     var vocab = wordFreqs(docs)
       .withColumn("syms", initSyms(col("w")))
       .select(col("w"), col("freq"), col("syms"))
@@ -459,7 +452,6 @@ object Bpe {
         SessionCache.releaseFrame(old)
         done += accepted.size
         round += 1
-        onRound(round, accepted.size)
       }
     }
     (merges.getOrElse(emptyMerges(vocab.sparkSession)).localCheckpoint(),
@@ -504,8 +496,7 @@ object Bpe {
     * registered op runs exactly [[ParallelRounds]] rounds (the oracle
     * is a static CTE chain). */
   def trainFullBatch(docs: DataFrame, rounds: Int = ParallelRounds,
-      k: Int = ParallelTopK, maxMerges: Int = Int.MaxValue,
-      onRound: (Int, Int) => Unit = (_, _) => ()): DataFrame = {
+      k: Int = ParallelTopK, maxMerges: Int = Int.MaxValue): DataFrame = {
     var vocab = wordFreqs(docs)
       .withColumn("syms", initSyms(col("w")))
       .select(col("w"), col("freq"), col("syms"))
@@ -550,7 +541,6 @@ object Bpe {
         SessionCache.releaseFrame(old)
         done += accepted.size
         round += 1
-        onRound(round, accepted.size)
       }
     }
     val out = merges.getOrElse(emptyMerges(vocab.sparkSession))

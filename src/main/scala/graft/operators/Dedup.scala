@@ -262,7 +262,7 @@ object Dedup {
     *
     * The probe population SHRINKS as the corpus grows (name vocabulary
     * saturates), so candidate volume collapses with scale
-    * (tools/SoakCandidates: 2 783 → 0 across the sf0.01→sf0.1 step)
+    * (2 783 → 0 across the sf0.01→sf0.1 step, PERF.md)
     * while the pairwise kernel's grows at its measured 2.02. The exact
     * kernel [[fuzzyMatch]] stays registered as the recall reference. */
   val fuzzyBest: Op = Op(
@@ -406,19 +406,6 @@ object Dedup {
       }
       Tables.parquet(spark, s"$store/labels")
     }
-
-  /** The residual tier's candidate stage of [[fuzzyBest]] (post cheap
-    * cuts, pre DP) — exposed for the scale soak. */
-  private[graft] def fuzzyBestCandidates(
-      spark: SparkSession, dir: String): DataFrame = {
-    val parts = Tables.part(spark, dir).select(col("p_brand").as("brand"),
-      col("p_partkey").as("key"), col("p_name").as("name"))
-    val w = Window.partitionBy(col("brand"), col("name"))
-    val uniq = parts.withColumn("grp_n", count(lit(1)).over(w))
-      .filter(col("grp_n") === 1)
-      .select(col("brand"), col("key"), col("name"))
-    fuzzyBlockJoin(uniq, parts, (a, b) => a =!= b, withDp = false)
-  }
 
   /** The blocked fuzzy join with every cut FUSED into the join
     * condition, cheapest first: key order, the lossless length band,
@@ -581,20 +568,10 @@ object Dedup {
       shingleArrays(spark, dir), Seq("lang", "source"))
   }
 
-  /** The AllPairs prefix-filtered candidate stage of [[ngramJaccard]],
-    * exposed so the scale soak (tools/SoakCandidates, PERF.md) can
-    * measure candidate-pair growth across corpus sizes. */
-  private[graft] def ngramCandidates(rows: DataFrame): DataFrame = {
-    // df computed inline for arbitrary row frames (soak/spec callers);
-    // the registered op rides the session-cached [[shingleRowsWithDf]]
-    val freq = rows.groupBy(col("lang"), col("source"), col("s"))
-      .agg(count(lit(1)).as("df"))
-    ngramCandidatesOfDf(rows.join(freq, Seq("lang", "source", "s")))
-  }
-
-  /** The prefix-filter + pair-generation stage of [[ngramCandidates]]
-    * over df-annotated posting rows (lang, source, s, doc_id, n_sh,
-    * df). */
+  /** The AllPairs prefix-filtered candidate stage of [[ngramJaccard]]
+    * (prefix filter + pair generation) over df-annotated posting rows
+    * (lang, source, s, doc_id, n_sh, df); its candidate-pair growth
+    * across corpus sizes is in PERF.md. */
   private[graft] def ngramCandidatesOfDf(rowsDf: DataFrame): DataFrame = {
     val wDoc = Window.partitionBy(col("lang"), col("source"), col("doc_id"))
       .orderBy(col("df").asc, col("s").asc)
@@ -752,8 +729,8 @@ object Dedup {
   }
 
   /** The rare-shingle blocking stage of [[containment]] — distinct
-    * candidate pairs pre-verification, exposed for the candidate-growth
-    * soak (tools/SoakCandidates, PERF.md). */
+    * candidate pairs pre-verification (candidate growth across corpus
+    * sizes: PERF.md). */
   private[graft] def containmentCandidates(
       rows: DataFrame, bare: DataFrame, dfCap: Int): DataFrame = {
     // df computed inline for arbitrary row frames (soak/spec callers);
@@ -903,7 +880,7 @@ object Dedup {
     * set: on this corpus near-dup pairs sit at J≥0.9 (measured — there
     * are NO pairs in (0.2, 0.9)), where banded recall is 1.0
     * deterministically (xxhash64 signatures are fixed), verified at
-    * sf0.01 and sf0.1 by tools/Explore.
+    * sf0.01 and sf0.1 (PERF.md).
     *
     * The registered op runs with NO bucket cap: an exact-equality oracle
     * and a silent candidate cap are incompatible on mass-duplicate data
@@ -1195,9 +1172,8 @@ object Dedup {
       }
 
   /** The banded-bucket candidate stage of [[minhashLsh]] alone
-    * (distinct pairs + sizes, pre-verification) — split out so the
-    * scale soak (tools/SoakCandidates, PERF.md) can measure
-    * candidate-pair growth across corpus sizes. */
+    * (distinct pairs + sizes, pre-verification); its candidate-pair
+    * growth across corpus sizes is in PERF.md. */
   private[graft] def minhashCandidates(
       spark: SparkSession, dir: String,
       bucketCap: Option[Int] = None): DataFrame = {
@@ -1319,9 +1295,8 @@ object Dedup {
     }
 
   /** The band-probe candidate stage of [[dedupIncremental]] alone
-    * (distinct delta×corpus pairs + sizes, pre-verification) — split out
-    * so the scale soak (tools/SoakCandidates, PERF.md) can measure its
-    * candidate growth like the self-join families'. */
+    * (distinct delta×corpus pairs + sizes, pre-verification); its
+    * candidate growth is in PERF.md beside the self-join families'. */
   private[graft] def incrementalCandidates(
       spark: SparkSession, dir: String): DataFrame = {
     val (banded, sizes) = minhashIndex(spark, dir)
@@ -1559,7 +1534,7 @@ object Dedup {
     * zero, and margins scale with √n_words — on a 10-word doc a single
     * edit can flip 9-12 of the 64 bits (measured: the sf0.1 corpus'
     * short-doc near-dup pairs reach Hamming 12), while docs with ≥32
-    * shingles stay ≤7 at sf0.001/0.01/0.1 (tools/Explore). Short docs
+    * shingles stay ≤7 at sf0.001/0.01/0.1 (PERF.md). Short docs
     * belong to the MinHash path, whose per-shingle MIN signatures are
     * length-robust (measured recall 1.0 on the same corpus). */
   val SimhashMinShingles = 32
@@ -1616,13 +1591,13 @@ object Dedup {
     * at 50k docs, so any bucket past tens of members is the
     * closed-vocabulary signature-concentration degeneracy (see
     * [[simhashCandidatesOf]]), and the measured true-pair mass inside
-    * capped buckets is fully covered by the minhash tier. */
+    * capped buckets is fully covered by the minhash tier (the capped
+    * and uncapped hybrids verify the same pairs: PERF.md). */
   val SimhashBucketCap = 64
 
   /** The registered candidate stage of [[simhash]]: the 4×16/radius-3
     * banded tier (bucket-capped) UNION MinHash-band candidates,
-    * scope-filtered and size-banded — exposed so tools/SoakCandidates
-    * measures the stage the op actually runs. */
+    * scope-filtered and size-banded (its candidate growth: PERF.md). */
   private[graft] def simhashHybridCandidates(
       spark: SparkSession, dir: String,
       bucketCap: Option[Int] = Some(SimhashBucketCap)): DataFrame = {
@@ -1638,15 +1613,6 @@ object Dedup {
     scopeAndSizeBand(
       tight.union(noisy).dropDuplicates("doc_id_a", "doc_id_b"), sizes)
   }
-
-  /** Uncapped-hybrid verified pipeline — the parity reference for the
-    * bucket cap (tools/CapParity: output equality proves the cap lost
-    * no true pair on the measured corpus). */
-  private[graft] def simhashHybridUncapped(
-      spark: SparkSession, dir: String): DataFrame =
-    verifyExact(simhashHybridCandidates(spark, dir, bucketCap = None),
-        shingleArrays(spark, dir), Seq.empty)
-      .select("doc_id_a", "doc_id_b", "jaccard")
 
   /** SimHash near-dup detection, two-stage: banded-signature candidate
     * generation (map-only signatures, band-bucket join) followed by
@@ -1694,7 +1660,7 @@ object Dedup {
 
   /** Single-tier 8×8/radius-7 variant — the former registered wiring.
     * Its recall argument needs no second tier (in-scope pairs max out at
-    * signature Hamming 7, measured across all SFs by tools/Explore,
+    * signature Hamming 7, measured across all SFs (PERF.md),
     * inside the radius-7 pigeonhole guarantee), but its candidate stage
     * must enumerate the corpus' whole Hamming≤7 pair set, which is
     * measured-quadratic on topic-clustered text (exponent 1.95) — a

@@ -31,18 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Release the block-manager copy behind a `localCheckpoint`ed frame
-    * (its analyzed plan is a LogicalRDD over the materialized RDD).
-    * Without this, superseded per-round snapshots stay pinned until the
-    * RDD is GC'd and the ContextCleaner gets to it — deterministic
-    * release keeps a long-lived session's storage memory flat. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Connected components of the undirected graph given as an edge
     * frame: returns (node, lbl) where lbl = min node id reachable.
     * Deterministic for any edge order. Propagation provably converges
@@ -51,11 +39,6 @@ object GraphOps {
     * a silently split cluster (multiple canonicals for one real
     * component) must never look like success.
     */
-  /** Round count of the most recent [[connectedComponents]] run on this
-    * JVM — dev profiling telemetry only (the bench-scale cost model is
-    * rounds × jobs/round; this makes the round count observable). */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 64): DataFrame = {
@@ -121,13 +104,12 @@ object GraphOps {
       // (the jump leg preserves this: lbl(lbl(v)) ≤ lbl(v) because
       // every label row's own lbl already satisfies lbl(u) ≤ u)
       converged = next.filter(col("lbl") < col("prev")).isEmpty
-      releaseCheckpoint(labelsCkpt) // superseded round snapshot
+      SessionCache.releaseFrame(labelsCkpt) // superseded round snapshot
       labelsCkpt = next
       labels = next.select(col("node"), col("lbl"))
       round += 1
     }
-    releaseCheckpoint(sym)
-    lastCcRounds = round
+    SessionCache.releaseFrame(sym)
     require(converged,
       s"connectedComponents did not converge within $maxRounds rounds — " +
         "graph diameter exceeds the bound; raise maxRounds (pointer-" +
@@ -554,7 +536,7 @@ object GraphOps {
     var prev: Option[DataFrame] = None
     for (_ <- 1 to rounds) {
       val next = kcorePeel(ed, k).localCheckpoint()
-      prev.foreach(releaseCheckpoint)
+      prev.foreach(SessionCache.releaseFrame)
       prev = Some(next)
       ed = next
     }

@@ -126,8 +126,8 @@ object Imi {
     // it); the winning half-vector is re-joined by its unique
     // (vec_id, half) key — one extra skinny shuffle, identical result
     // (the argmax and its tie-break (cos DESC, cent_id) are
-    // unchanged). The argmax itself rides graft_topk(k=1):
-    // min(struct) is a DECLARATIVE
+    // unchanged). The argmax itself rides graft_topk(k=1) through
+    // BestAgg.largest1: min(struct) is a DECLARATIVE
     // aggregate with a struct buffer, which HashAggregateExec cannot
     // hold — the plan degrades to SortAggregate and SORTS the whole
     // N·k1 scored stream (the soak's measured terabyte spill at 10M),
@@ -139,9 +139,8 @@ object Imi {
         cosine(idot(col("h"), col("cv")), col("hn2"), col("cn"))
           .as("cos"))
     val best = scored.groupBy(col("vec_id"), col("half"))
-      .agg(element_at(call_function("graft_topk",
-        struct(col("cos"), negate(col("cent_id")).as("negc")),
-        lit(1)), 1).as("b"))
+      .agg(BestAgg.largest1(
+        struct(col("cos"), negate(col("cent_id")).as("negc"))).as("b"))
       .select(col("vec_id"), col("half"), negate(col("b.negc")).as("cell"))
     val assigned = best
       .join(h.select(col("vec_id"), col("half"), col("h")),
@@ -215,19 +214,6 @@ object Imi {
       }
       graft.Tables.parquet(spark, s"$store/cells")
     }
-
-  /** Label-blind co-cell candidate pairs (src < dst, distinct) — the
-    * soak's measured volume for the trained families. */
-  def trainedCandidates(e: DataFrame, k1: Int, nprobe: Int): DataFrame = {
-    val cells = cellsOf(e, k1, LloydSteps, nprobe)
-      .select(col("cell"), col("vec_id"))
-    val a = cells.alias("ca")
-    val b = cells.alias("cb")
-    a.join(b, col("ca.cell") === col("cb.cell") &&
-        col("ca.vec_id") < col("cb.vec_id"))
-      .select(col("ca.vec_id").as("src"), col("cb.vec_id").as("dst"))
-      .distinct()
-  }
 
   /** Delta slice of the INCREMENTAL probe: decoupled from both the
     * seed rule (vec_id < k1) and the stride-canopy arrivals so the
@@ -502,7 +488,7 @@ object Imi {
     * publishes, and retrains anyway when the frozen codebook has
     * drifted past this floor (expressed as a fraction of [[RecallK]] —
     * 0.10 = half a neighbor of the top-5). Calibration: the measured
-    * frozen-codebook curve (tools/ImiRecallCurve, PERF.md) loses ≤2
+    * frozen-codebook curve (PERF.md) loses ≤2
     * recall points (≤0.02) at 10–50% delta on the clustered gate
     * corpora — comfortably under the floor, so the registered merge
     * leg stays a merge — while the 1M random-vector soak measured ~13

@@ -35,7 +35,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object SessionCache {
 
-  /** Release the block-manager copy behind a localCheckpointed frame. */
+  /** Release the block-manager copy behind a `localCheckpoint`ed frame
+    * (its analyzed plan is a LogicalRDD over the materialized RDD); a
+    * plain scan holds none. Without this, superseded snapshots stay
+    * pinned until the RDD is GC'd and the ContextCleaner gets to it —
+    * deterministic release keeps a long-lived session's storage memory
+    * flat. */
   def releaseFrame(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case lr: org.apache.spark.sql.execution.LogicalRDD =>
       lr.rdd.unpersist(blocking = false)

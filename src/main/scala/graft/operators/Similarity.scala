@@ -216,7 +216,7 @@ object Similarity {
     * contract at this low threshold, not an implementation choice —
     * measured and provable on this data: full coverage of the cos≥0.35
     * pair set via IVF-cell co-assignment needs probing 12 of 40 cells at
-    * sf0.1, i.e. 99% of all pairs (tools/Explore), and the triangle
+    * sf0.1, i.e. 99% of all pairs (PERF.md), and the triangle
     * inequality on angular distance shows why no sound cell canopy can
     * exist here — the mean angle to the nearest centroid (~71°, mean
     * best-cos 0.32) already EXCEEDS the pair-threshold angle (69.5°),
@@ -1354,7 +1354,7 @@ object Similarity {
   /** [[adcRefinedTrained]] registered — the production PQ pipeline
     * searching the TRAINED codebook instead of the 16-seed one: 64
     * centroids per subspace, 2 Lloyd refinements, ADC shortlist 100 →
-    * exact top-5. Config chosen by measurement (tools/AdcProbe):
+    * exact top-5. Config chosen by measurement (PERF.md):
     * refined top-5 recall vs exact brute force is 0.98 at sf0.001 and
     * 0.84 at sf0.1, vs 0.72/0.36 for the seed-codebook shortlist-25
     * registration (`q_pq_adc_refine`, kept as the minimal-pipeline
@@ -1421,20 +1421,13 @@ object Similarity {
           .localCheckpoint()
       }
 
-  /** [[adcScores]] against a per-SUBSPACE codebook (m, cid, cv8) — the
-    * TRAINED-codebook twin: codes assign via [[pqSubspaceAssign]], the
-    * per-query LUT measures query slices against the trained centroids.
-    * Same broadcast shape (codebook and LUT are metadata-sized; the
-    * code-scaled exchange carries partial sums only). */
-  def adcScoresSub(q: DataFrame, cb: DataFrame, queries: DataFrame,
-      nc: Int = 16): DataFrame =
-    adcScoresFromCodes(
-      pqSubspaceAssign(pqSubspaces(q), cb, nc)
-        .select(col("vec_id"), col("m"), expr(s"k % $nc").as("cid")),
-      cb, queries)
-
-  /** The LUT scan of [[adcScoresSub]] over PRE-ASSIGNED codes — the
-    * query-time kernel once the index (codebook + codes) exists. */
+  /** [[adcScores]] against a per-SUBSPACE codebook (m, cid, cv8) over
+    * PRE-ASSIGNED codes (the TRAINED-codebook twin; codes assign via
+    * [[pqSubspaceAssign]]) — the query-time kernel once the index
+    * (codebook + codes) exists. The per-query LUT measures query
+    * slices against the trained centroids; same broadcast shape
+    * (codebook and LUT are metadata-sized; the code-scaled exchange
+    * carries partial sums only). */
   def adcScoresFromCodes(
       codes: DataFrame, cb: DataFrame, queries: DataFrame): DataFrame = {
     val d2 = aggregate(
@@ -1697,21 +1690,6 @@ object Similarity {
         (col("pos") + 1).cast("long").as("rank"),
         col("col.neg_id").as("neg_id"), col("col.neg_label").as("neg_label"),
         negate(col("col.ncos")).as("cos"))
-  }
-
-  /** Candidate edge set of [[knnGraph]] (pre-scoring): distinct ordered
-    * (src, dst) pairs sharing a canopy cell. Exposed so the soak can
-    * measure its growth exponent directly. */
-  def knnCandidates(e: DataFrame): DataFrame = {
-    val cells = canopyCells(e, nprobe = 8, stride = 10)
-      .select("vec_id", "cell")
-    val ka = cells.alias("ka")
-    val kb = cells.alias("kb")
-    ka.join(kb,
-        col("ka.cell") === col("kb.cell") &&
-          col("ka.vec_id") =!= col("kb.vec_id"))
-      .select(col("ka.vec_id").as("src"), col("kb.vec_id").as("dst"))
-      .distinct()
   }
 
   /** Semantic dedup over embeddings (the SemDeDup recipe: cluster with

@@ -26,7 +26,7 @@ object SinkOps {
     * for it only throttles the sink round-trips. Production deployments
     * point sinks at real storage through the explicit path arguments;
     * this root only ever hosts the harness's own scratch. */
-  private[operators] def scratchRoot: String = {
+  private[graft] def scratchRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) "/dev/shm"
     else System.getProperty("java.io.tmpdir")
@@ -94,13 +94,6 @@ object SinkOps {
       .localCheckpoint()
   }
 
-  private def releaseFrame(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** S7/S9 (`ON CONFLICT DO UPDATE` / delete-then-insert-day,
     * revalueCollection.mjs:135-165), TRANSACTIONAL since round 5: two
     * OVERLAPPING day-batches land through [[graft.sources.TxStore
@@ -164,7 +157,7 @@ object SinkOps {
     TxStore.transact(spark, out) { txn =>
       TxStore.stageDays(txn, batch(10, 30, "cents_corr"), "as_of_date")
     }
-    releaseFrame(stats)
+    SessionCache.releaseFrame(stats)
     TxStore.readDays(spark, out)
       .select(col("as_of_date").cast("date").as("as_of_date"),
         col("n_items"), col("sum_cents"))
@@ -306,7 +299,7 @@ object SinkOps {
       .write.mode("overwrite").parquet(t3.stage("prices"))
     require(TxCommit.commit(spark, t3,
       Map("daily" -> t3.stage("daily"), "prices" -> t3.stage("prices"))))
-    releaseFrame(stats)
+    SessionCache.releaseFrame(stats)
     val dailyBack = TxCommit.read(spark, root, "daily")
       .agg(count(lit(1)).as("n_rows"), sum(col("sum_cents")).as("sum_val"))
       .select(lit("daily").as("output"), col("n_rows"), col("sum_val"))

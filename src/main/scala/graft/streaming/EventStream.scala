@@ -214,11 +214,8 @@ object EventStream {
     * removed on JVM exit — long-lived queries keep their checkpoints
     * here for the process lifetime. */
   private lazy val scratchRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    val root =
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val dir = s"$root/graft-ckpt-${java.util.UUID.randomUUID()}"
+    val dir = s"${graft.operators.SinkOps.scratchRoot}/graft-ckpt-${
+      java.util.UUID.randomUUID()}"
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       rmTree(new java.io.File(dir))))
     dir

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev harness (not part of the engine surface): generate the 10×
   * soak corpus — 50k documents + 200k parts at /tmp/graft_soak_sf1 —
   * extending the driver testdata's measured structure one scale step
-  * so SoakCandidates can measure candidate-growth exponents across a
-  * second 10× population step (PERF.md). Deterministic (seed 42).
+  * so the decade soak ([[SoakRegistry]], via [[GenScaleTwin]]) can
+  * measure growth exponents across a second 10× population step
+  * (PERF.md). Deterministic (seed 42).
   *
   * Measured structure reproduced from sf0.1 (see PERF.md round-5):
   *  - documents: 31-word vocabulary, 10-100 words/doc (uniform), langs

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `explain("formatted")` for named queries into
   * per-query files — the round deliverable convention
@@ -12,14 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PlanFiles {
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, suffix, names @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.EngineConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profile.session()
     Files.createDirectories(Paths.get(outDir))
     val qs = graft.SparkEntry.queries
     names.foreach { n =>

@@ -3,12 +3,13 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Package-placed bridge to the `private[sql]` entry points the engine
-  * needs: wrapping a hand-built resolved [[LogicalPlan]] back into a
-  * [[DataFrame]], and building what a [[SparkSessionExtensions]]
-  * injector declares. This is the standard device third-party Spark
-  * engines (Delta Lake, Frameless, Sedona …) use for custom logical
-  * nodes; everything else in this repo goes through the public API.
+/** Package-placed bridge to the `private[sql]`/`private[spark]` entry
+  * points the engine and its dev tools need: wrapping a hand-built
+  * resolved [[LogicalPlan]] back into a [[DataFrame]], building what a
+  * [[SparkSessionExtensions]] injector declares, and draining the
+  * listener bus. This is the standard device third-party Spark engines
+  * (Delta Lake, Frameless, Sedona …) use for custom logical nodes;
+  * everything else in this repo goes through the public API.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -20,6 +21,11 @@ object GraftSqlBridge {
   def hasFunction(spark: SparkSession, name: String): Boolean =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .functionExists(FunctionIdentifier(name))
+
+  /** Blocks until every event posted so far has reached the listeners
+    * (the `private[spark]` bus drain Spark's own listener tests use). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Applies `injector` to a fresh [[SparkSessionExtensions]] and hands
     * what it built to the live session: functions into its function

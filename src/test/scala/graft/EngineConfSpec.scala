@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bounded-heap ObjectHashAggregates must never silently degrade to
   * sort-based fallback at Spark's 128-key default — the 10M-vector
   * soak measured that failure as a disk-filling full-stream sort.
-  * Every session recipe (Verify, Bench, BenchOnly, the test session)
+  * Every session recipe (Verify, Bench, tools.Profile, the test session)
   * routes through [[EngineConf.tuned]]; this spec keeps them honest.
   */
 class EngineConfSpec extends SparkSpec {

@@ -108,20 +108,26 @@ class ParquetReadSpec extends SparkSpec {
     assert(ours.getMessage === plain.getMessage)
   }
 
+  /** The repository root: the nearest ancestor of the forked JVM's
+    * working directory that holds `src/main/scala/graft`. */
+  private lazy val repoRoot: Path =
+    Iterator.iterate(Paths.get(sys.props("user.dir")).toAbsolutePath)(
+        _.getParent)
+      .takeWhile(_ != null)
+      .find(d => Files.isDirectory(d.resolve("src/main/scala/graft")))
+      .getOrElse(fail(s"src/main/scala/graft not found above " +
+        sys.props("user.dir")))
+
+  private lazy val graftRoot = repoRoot.resolve("src/main/scala/graft")
+
   /** Engine sources under `src/main/scala/graft` (outside `tools/`),
-    * path relative to that root → text. Anchored on the source tree
-    * wherever the forked JVM's working directory lands. */
-  private lazy val engineSources: Map[String, String] = {
-    val rel = Paths.get("src", "main", "scala", "graft")
-    val root = Iterator.iterate(Paths.get(sys.props("user.dir"))
-        .toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null).map(_.resolve(rel)).find(Files.isDirectory(_))
-      .getOrElse(fail(s"$rel not found above ${sys.props("user.dir")}"))
-    Files.walk(root).iterator().asScala
+    * path relative to that root → text. */
+  private lazy val engineSources: Map[String, String] =
+    Files.walk(graftRoot).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.startsWith(root.resolve("tools")))
-      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
-  }
+      .filterNot(_.startsWith(graftRoot.resolve("tools")))
+      .map(p => graftRoot.relativize(p).toString -> Files.readString(p))
+      .toMap
 
   private def engineSourcesMatching(pattern: scala.util.matching.Regex)
       : Seq[String] =
@@ -171,5 +177,24 @@ class ParquetReadSpec extends SparkSpec {
     assert(hits.filterNot(Set("operators/PersistedStore.scala",
       "streaming/EventStream.scala")).isEmpty,
       s"build and reuse a store with PersistedStore.ensure: $hits")
+  }
+
+  test("every dev tool main is named in the verify skill") {
+    // the owner of a `def main(` is the last object declared before it
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = Files.list(graftRoot.resolve("tools")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString(_))
+      .flatMap { text =>
+        val objs = objectDecl.findAllMatchIn(text).toSeq
+        """def main\(""".r.findAllMatchIn(text).flatMap(m =>
+          objs.takeWhile(_.start < m.start).lastOption.map(_.group(1)))
+      }.toSeq.distinct.sorted
+    assert(mains.contains("Profile"), s"the scan found no profiler: $mains")
+    val skill = Files.readString(
+      repoRoot.resolve(".claude/skills/verify/SKILL.md"))
+    val missing =
+      mains.filterNot(n => s"\\b$n\\b".r.findFirstIn(skill).nonEmpty)
+    assert(missing.isEmpty,
+      s"document each dev tool in the verify skill, or delete it: $missing")
   }
 }

@@ -664,7 +664,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val recall = rs.sum / rs.size
     info(f"trained ADC+refine top-5 recall: $recall%.2f")
     // the registered config (nc=64, 2 Lloyd steps, shortlist 100) was
-    // picked by sweep (tools/AdcProbe): 0.98 here, 0.84 at sf0.1 —
+    // picked by sweep (PERF.md): 0.98 here, 0.84 at sf0.1 —
     // the production floor the seed-codebook path (0.72/0.36) misses
     assert(recall >= 0.8, f"trained recall $recall%.2f below 0.8 floor")
   }

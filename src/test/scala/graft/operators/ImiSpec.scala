@@ -81,7 +81,7 @@ class ImiSpec extends SparkSpec {
     assert(compacted.values.forall(h => h >= 0 && h <= Imi.RecallK))
     val rT = trained.values.sum.toDouble / (trained.size * Imi.RecallK)
     val rC = compacted.values.sum.toDouble / (compacted.size * Imi.RecallK)
-    // the measured curve (tools/ImiRecallCurve): the merge path costs
+    // the measured curve (PERF.md): the merge path costs
     // <= a few points on this clustered corpus — the gap must stay a
     // small fraction, not a cliff (and can be slightly negative: two
     // different codebooks make different per-query mistakes)

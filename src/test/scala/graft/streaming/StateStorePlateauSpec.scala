@@ -5,10 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** CI pin of the watermark-eviction law the at-scale
-  * `tools/StreamStateSoak` measures (r13 verdict #6 follow-through):
-  * the 5M-event soak proved state plateaus at the horizon population,
-  * but its assertions lived only in the hand-run tool — a regression
+/** CI pin of the watermark-eviction law the at-scale 5M-event soak
+  * measured (PERF.md; r13 verdict #6 follow-through): the soak proved
+  * state plateaus at the horizon population, but its assertions lived
+  * only in a hand-run tool — a regression
   * in watermark wiring (a dropped `withWatermark`, a delay computed
   * from the wrong column, an eviction-less dedup swap) would stay
   * invisible until someone re-ran it. This is the same corpus shape
@@ -40,7 +40,7 @@ class StateStorePlateauSpec extends SparkSpec {
     f.delete(): Unit
   }
 
-  /** Same corpus law as StreamStateSoak, downscaled: Zipf keys,
+  /** Same corpus law as the PERF.md state soak, downscaled: Zipf keys,
     * event time advancing file-by-file over a 30-day span, ~3% late
     * arrivals 1–4 days back (some inside the 2-day horizon, some
     * beyond). */
