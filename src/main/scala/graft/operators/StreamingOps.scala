@@ -12,6 +12,17 @@ import graft.streaming.EventStream
   */
 object StreamingOps {
 
+  /** The output root of a live at-rest streaming op. It is
+    * SESSION-scoped, as the live-query registry key is: a shared
+    * per-dir root would let a second session's fresh-start reset delete
+    * the first session's live output out from under its running query.
+    * Scratch-sized leak per dead session (~the delta's output rows),
+    * reclaimed with the scratch dir. */
+  private def sessionRoot(
+      spark: org.apache.spark.sql.SparkSession, dir: String, tag: String)
+      : String =
+    SinkOps.stagingDir(dir, s"${tag}_${SessionCache.sessionId(spark).take(8)}")
+
   /** Streaming content-key dedup ≡ batch DISTINCT (see
     * [[EventStream.runDedupToParquet]] for why the watermark makes the
     * parity exact here, and why the sink is an at-rest parquet file
@@ -21,8 +32,7 @@ object StreamingOps {
     """SELECT DISTINCT user_id, event_type,
       |       CAST(ROUND(value*100) AS BIGINT) AS value_cents
       |FROM events""".stripMargin) { (spark, dir) =>
-    val root = SinkOps.stagingDir(dir,
-      s"stream_dedup_${SessionCache.sessionId(spark).take(8)}")
+    val root = sessionRoot(spark, dir, "stream_dedup")
     EventStream.runDedupToParquet(spark, dir, root)
     graft.Tables.parquet(spark, s"$root/out")
   }
@@ -40,7 +50,7 @@ object StreamingOps {
     Pricing.bestOfDay.oracle.get) { (spark, dir) =>
     // base = the amortized backfill layout (kept across runs, like the
     // bucketed tables); the stream-merge of the 30-day tail replays on
-    // the first call per session (hot + checkpoint reset), later calls
+    // the first call per session (hot reset, fresh checkpoint), later calls
     // drain the live query — see EventStream.runBestOfDayLive
     val base = SinkOps.stagingDir(dir, "stream_bod_base")
     val hot = SinkOps.stagingDir(dir, "stream_bod_hot")
@@ -100,8 +110,7 @@ object StreamingOps {
       |       CAST(SUM(cents) AS BIGINT) AS value_cents
       |FROM numbered
       |GROUP BY user_id, session_idx""".stripMargin) { (spark, dir) =>
-    val root = SinkOps.stagingDir(dir,
-      s"stream_sess_${SessionCache.sessionId(spark).take(8)}")
+    val root = sessionRoot(spark, dir, "stream_sess")
     EventStream.runSessionizeToParquet(spark, dir, root)
     graft.Tables.parquet(spark, s"$root/out")
       .select("user_id", "start_us", "end_us", "n_events", "value_cents")
@@ -264,11 +273,6 @@ object StreamingOps {
         col("cluster_size"), (col("node") === col("lbl")).as("is_canonical"))
   }
 
-  /** Streaming DSIR selection ≡ the batch importance-weighting op:
-    * arriving docs scored statelessly against the standing hashed-bigram
-    * model ([[EventStream.runDsirToMemory]]); same oracle — only
-    * possible if the per-row lookup sum reproduces the batch
-    * aggregate exactly. */
   /** STATELESS tokenize-on-arrival against the persisted standing
     * tokenizer — see [[graft.streaming.EventStream.runBpeEncodeToMemory]];
     * oracle = the batch encode op's (stream ≡ batch). */
@@ -291,6 +295,11 @@ object StreamingOps {
       spark, dir, "q_stream_bpe_tokens_mem"))
   }
 
+  /** Streaming DSIR selection ≡ the batch importance-weighting op:
+    * arriving docs scored statelessly against the standing hashed-bigram
+    * model ([[EventStream.runDsirToMemory]]); same oracle — only
+    * possible if the per-row lookup sum reproduces the batch
+    * aggregate exactly. */
   val streamDsir: Op = Op(
     "q_stream_dsir",
     Retrieval.dsirWeights.oracle.get) { (spark, dir) =>
@@ -318,8 +327,7 @@ object StreamingOps {
   val streamAnnTrained: Op = Op(
     "q_stream_ann_trained",
     Imi.imiDelta.oracle.get) { (spark, dir) =>
-    val root = SinkOps.stagingDir(dir,
-      s"stream_ann_tr_${SessionCache.sessionId(spark).take(8)}")
+    val root = sessionRoot(spark, dir, "stream_ann_tr")
     EventStream.runImiProbeToParquet(spark, dir, root)
     graft.Tables.parquet(spark, s"$root/topk-*")
       .select("vec_id", "rank", "nn_id", "cos")
@@ -533,13 +541,7 @@ object StreamingOps {
   val streamPack: Op = Op(
     "q_stream_pack",
     Curation.packIncr.oracle.get) { (spark, dir) =>
-    // root is SESSION-scoped (the live-query registry key is too): a
-    // shared per-dir root would let a second session's fresh-start
-    // reset delete the first session's live checkpoint and hwm chain
-    // out from under its running query. Scratch-sized leak per dead
-    // session (~the delta's pack rows), reclaimed with the scratch dir.
-    val root = SinkOps.stagingDir(dir,
-      s"stream_pack_${SessionCache.sessionId(spark).take(8)}")
+    val root = sessionRoot(spark, dir, "stream_pack")
     EventStream.runStreamPack(spark, dir, root)
     graft.Tables.parquet(spark, s"$root/packs-*")
       .select(col("doc_id"), col("source"), col("n_tokens"),
@@ -556,9 +558,7 @@ object StreamingOps {
   val streamBm25: Op = Op(
     "q_stream_bm25",
     TextOps.bm25.oracle.get) { (spark, dir) =>
-    // session-scoped root, same discipline as q_stream_pack above
-    val root = SinkOps.stagingDir(dir,
-      s"stream_bm25_${SessionCache.sessionId(spark).take(8)}")
+    val root = sessionRoot(spark, dir, "stream_bm25")
     EventStream.runBm25Probe(spark, dir, root)
     graft.Tables.parquet(spark, s"$root/topk-*")
       .select("qid", "doc_id", "score", "rnk")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming over the `events` shape (north-star extension —
   * SURVEY §2.10: the reference's only "streaming" is cron + daily
@@ -125,17 +125,15 @@ object EventStream {
     * late data simply rewrites its day, identical to the batch replay.
     */
   def streamToDayPartitions(
-      spark: SparkSession, dir: String, outPath: String): Unit = withStreamShuffle(spark) {
-    val stream = eventsStream(spark, dir)
+      spark: SparkSession, dir: String, outPath: String): Unit = runOnce(spark) {
+    eventsStream(spark, dir)
       .withColumn("as_of_date", to_date(col("ts")))
-    val q = stream.writeStream
+      .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.sources.Sinks.upsertByDay(batch, outPath, "as_of_date")
       }
       .option("checkpointLocation", s"$outPath.checkpoint")
       .start()
-    q.processAllAvailable()
-    q.stop()
   }
 
   /** Exactly-once streaming rollup into the transactional store: each
@@ -151,32 +149,32 @@ object EventStream {
     * signature changes — regenerated testdata must not reconcile
     * against a stale log.
     */
-  def runTxRollup(spark: SparkSession, dir: String, root: String): Unit =
-    withStreamShuffle(spark) {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val sigPath = new org.apache.hadoop.fs.Path(s"$root/_SRC_SIG")
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val srcSig = graft.sources.RunLog
-        .sourceSignature(spark, dir, "events.parquet")
-      val sigOk = fs.exists(sigPath) && {
-        val in = fs.open(sigPath)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) == srcSig
-        finally in.close()
-      }
-      if (!sigOk) {
-        fs.delete(rootPath, true)
-        fs.mkdirs(rootPath)
-        val out = fs.create(sigPath, true)
-        try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      val stream = eventsStream(spark, dir)
-        .select(to_date(col("ts")).as("day"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-      withScratchCheckpoint { ckpt =>
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+  def runTxRollup(spark: SparkSession, dir: String, root: String): Unit = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val sigPath = new org.apache.hadoop.fs.Path(s"$root/_SRC_SIG")
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val srcSig = graft.sources.RunLog
+      .sourceSignature(spark, dir, "events.parquet")
+    val sigOk = fs.exists(sigPath) && {
+      val in = fs.open(sigPath)
+      try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) == srcSig
+      finally in.close()
+    }
+    if (!sigOk) {
+      fs.delete(rootPath, true)
+      fs.mkdirs(rootPath)
+      val out = fs.create(sigPath, true)
+      try out.write(srcSig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    withScratchCheckpoint { ckpt =>
+      runOnce(spark) {
+        eventsStream(spark, dir)
+          .select(to_date(col("ts")).as("day"), col("event_type"),
+            round(col("value") * 100).cast("long").as("cents"))
+          .writeStream
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val rollup = batch.groupBy(col("day"), col("event_type"))
               .agg(count(lit(1)).as("n"), sum(col("cents")).as("value_cents"))
             graft.sources.TxStore.commitStreamBatch(
@@ -184,10 +182,9 @@ object EventStream {
           }
           .option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
     }
+  }
 
   /** Run `body` with a fresh checkpoint dir on the machine's tmpfs
     * (fallback: java.io.tmpdir — Spark's own default for memory-sink
@@ -233,54 +230,96 @@ object EventStream {
     * query-start machinery. Keys carry the collision-safe
     * [[graft.operators.SessionCache.sessionId]] (never recycled across
     * GC'd sessions, unlike identityHashCode) so a stopped/replaced
-    * session restarts cold instead of reusing a dead query; queries die
-    * with the JVM (local harness) or with an explicit
-    * [[stopLiveQueries]]. */
+    * session restarts cold instead of reusing a dead query. Entries
+    * whose query died are dropped at the next start ([[runLive]]). */
   private val liveQueries = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.streaming.StreamingQuery]
+    .empty[String, StreamingQuery]
 
-  private def liveKey(
+  private[graft] def liveKey(
       spark: SparkSession, queryName: String, dir: String): String =
     s"$queryName@$dir@${graft.operators.SessionCache.sessionId(spark)}"
 
-  /** Memory-sink table name, unique per (op, source dir) so one session
-    * can hold live queries against several dirs (the bench warms at
-    * sf0.001, then times sf0.1). */
-  private def liveTable(queryName: String, dir: String): String =
+  /** The query name (and memory-sink table name) of a live query,
+    * unique per (op, source dir) so one session can hold live queries
+    * against several dirs (the bench warms at sf0.001, then times
+    * sf0.1). */
+  private[graft] def liveTable(queryName: String, dir: String): String =
     s"${queryName}_${java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)}"
 
-  /** Stop and deregister every live query of `spark` (tests / teardown). */
-  def stopLiveQueries(spark: SparkSession): Unit = {
-    val suffix = s"@${graft.operators.SessionCache.sessionId(spark)}"
-    liveQueries.filterInPlace { (k, q) =>
-      if (k.endsWith(suffix)) { if (q.isActive) q.stop(); false } else true
-    }: Unit
+  /** The drain-or-start harness behind every registered streaming op.
+    * When `(name, dir)` has an active query in this session it only
+    * drains it. Otherwise it forgets every registered query that died
+    * (releasing the fold state held under its key), deletes each
+    * `reset` path, stops a same-named query of this session (one a
+    * failed drain leaked would make the start throw a duplicate-name
+    * error and wedge the op until the session restarts), and calls
+    * `start(queryName, checkpoint)`, which starts the query under that
+    * name in that fresh checkpoint dir: a resumed checkpoint of a dead
+    * session's query would replay zero files into an empty sink. It
+    * drains the new query and registers it. Returns the query name —
+    * for a memory sink, the table name. */
+  private def runLive(
+      spark: SparkSession, name: String, dir: String,
+      reset: Seq[String] = Nil)(
+      start: (String, String) => StreamingQuery): String =
+    withStreamShuffle(spark) {
+      val qName = liveTable(name, dir)
+      val key = liveKey(spark, name, dir)
+      val q = liveQueries.get(key).filter(_.isActive).getOrElse {
+        for ((k, dead) <- liveQueries if !dead.isActive) {
+          liveQueries.remove(k, dead)
+          releaseFoldState(k)
+        }
+        releaseFoldState(key)
+        for (p <- reset) {
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
+        spark.streams.active.filter(_.name == qName).foreach(_.stop())
+        start(qName, s"$scratchRoot/$qName-${java.util.UUID.randomUUID()}")
+      }
+      q.processAllAvailable()
+      liveQueries(key) = q
+      qName
+    }
+
+  /** The one-shot harness: runs the query `start` returns to the end
+    * of its source, then stops it, even when the drain throws. */
+  private def runOnce(spark: SparkSession)(start: => StreamingQuery): Unit =
+    withStreamShuffle(spark) {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** Writes `empty` (a schema-correct empty output) to `target` when
+    * nothing matches `glob`: a run with no micro-batch leaves no sink
+    * directory, and the op's read would throw path-not-found. */
+  private def seedIfEmpty(spark: SparkSession, glob: String, target: String)(
+      empty: => DataFrame): Unit = {
+    val p = new org.apache.hadoop.fs.Path(glob)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Option(fs.globStatus(p)).forall(_.isEmpty))
+      empty.write.mode("overwrite").parquet(target)
   }
 
-  /** Drain-or-start harness behind the registered memory-sink streaming
-    * ops: reuse the live query for (queryName, dir) when active, else
-    * start it via `start(tableName, checkpointDir)` and register it.
-    * Returns the memory-sink table name holding the current output. */
-  private def runLiveToMemory(
-      spark: SparkSession, queryName: String, dir: String)(
-      start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery)
-      : String = {
-    val table = liveTable(queryName, dir)
-    val key = liveKey(spark, queryName, dir)
-    withStreamShuffle(spark) {
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          // fresh checkpoint per START: a resumed checkpoint from a
-          // previous session's dead query would replay zero files into
-          // an empty memory sink
-          val q = start(table, s"$scratchRoot/$table-${
-            java.util.UUID.randomUUID()}")
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-    }
-    table
+  /** The start of a memory-sink op: `df` into the memory table named
+    * after the query, built only when [[runLive]] starts the query. */
+  private def toMemory(df: => DataFrame, mode: OutputMode = OutputMode.Append)
+      : (String, String) => StreamingQuery = (table, ckpt) =>
+    df.writeStream.outputMode(mode)
+      .format("memory").queryName(table)
+      .option("checkpointLocation", ckpt)
+      .start()
+
+  /** Runs `write` unless `dir/_SUCCESS` exists: a micro-batch replayed
+    * after a crash finds its batch-id-named artifact committed and
+    * no-ops, so a foreachBatch sink commits each batch exactly once. */
+  private def unlessCommitted(spark: SparkSession, dir: String)(
+      write: => Unit): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      write
   }
 
   /** Streaming entry points pin a smaller shuffle-partition count for
@@ -353,38 +392,26 @@ object EventStream {
     */
   def runBestOfDayIncremental(
       spark: SparkSession, srcDir: String, glob: String,
-      basePath: String, hotPath: String): Unit = withStreamShuffle(spark) {
-    val q = startBestOfDay(spark, srcDir, glob, basePath, hotPath)
-    q.processAllAvailable()
-    q.stop()
+      basePath: String, hotPath: String): Unit = runOnce(spark) {
+    startBestOfDay(spark, srcDir, glob, basePath, hotPath)(
+      liveTable("stream_bod_once", hotPath), s"$hotPath.checkpoint")
   }
 
   /** [[runBestOfDayIncremental]] with the query LEFT RUNNING — the
-    * registered op's entry (see [[runLiveToMemory]] for why): on the
-    * first call per (store, session) the hot store and its checkpoint
-    * reset and the stream replays the tail; later calls drain whatever
-    * new snapshot files arrived into the same live query. */
+    * registered op's entry (see [[runLive]] for why): on the first call
+    * per (source dir, session) the hot store resets and the stream
+    * replays the tail; later calls drain whatever new snapshot files
+    * arrived into the same live query. */
   def runBestOfDayLive(
       spark: SparkSession, srcDir: String, glob: String,
-      basePath: String, hotPath: String): Unit = withStreamShuffle(spark) {
-    val key = liveKey(spark, s"bod:$basePath", srcDir)
-    liveQueries.get(key).filter(_.isActive) match {
-      case Some(q) => q.processAllAvailable()
-      case None =>
-        val fs = new org.apache.hadoop.fs.Path(hotPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        for (p <- Seq(hotPath, s"$hotPath.checkpoint"))
-          fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        val q = startBestOfDay(spark, srcDir, glob, basePath, hotPath)
-        q.processAllAvailable()
-        liveQueries(key) = q
-    }
-  }
+      basePath: String, hotPath: String): Unit =
+    runLive(spark, "stream_bod", srcDir, reset = Seq(hotPath))(
+      startBestOfDay(spark, srcDir, glob, basePath, hotPath)): Unit
 
   private def startBestOfDay(
       spark: SparkSession, srcDir: String, glob: String,
-      basePath: String, hotPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      basePath: String, hotPath: String)(
+      qName: String, checkpoint: String): StreamingQuery = {
     val fs = new org.apache.hadoop.fs.Path(basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // reuse the base only while it is COMMITTED (_SUCCESS — a partially
@@ -406,8 +433,7 @@ object EventStream {
           }
         }
     if (!baseValid) {
-      for (p <- Seq(basePath, bodMetaPath(basePath), hotPath,
-          s"$hotPath.checkpoint"))
+      for (p <- Seq(basePath, bodMetaPath(basePath), hotPath, checkpoint))
         fs.delete(new org.apache.hadoop.fs.Path(p), true)
       bootstrapBestOfDay(spark, srcDir, glob, basePath)
     }
@@ -417,17 +443,8 @@ object EventStream {
     // one file per micro-batch: the multi-batch merge path actually
     // executes when the source has several files (EventStreamSpec
     // feeds two overlapping halves)
-    val stream = tableStream(spark, srcDir, glob, maxFilesPerTrigger = 1)
-    val qName = "stream_bod_" + java.lang.Integer.toHexString(
-      hotPath.hashCode & 0x7fffffff)
-    // a query leaked ACTIVE by an earlier failed drain would make this
-    // start throw a duplicate-name error and wedge the op until the
-    // session restarts — stop the stale instance first (its state is
-    // being reset by this very code path anyway)
-    spark.streams.active
-      .filter(q => q.name != null && q.name == qName)
-      .foreach(_.stop())
-    stream.writeStream
+    tableStream(spark, srcDir, glob, maxFilesPerTrigger = 1)
+      .writeStream
       // named: active-query enumerations must never meet a null name
       .queryName(qName)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -456,7 +473,7 @@ object EventStream {
           graft.sources.Sinks.upsertByDay(merged, hotPath, "as_of_date")
         }
       }
-      .option("checkpointLocation", s"$hotPath.checkpoint")
+      .option("checkpointLocation", checkpoint)
       .start()
   }
 
@@ -616,8 +633,9 @@ object EventStream {
   }
 
   /** Streaming exact dedup on a content key — the ingest-dedup stage of
-    * a training-data pipeline run incrementally. Uses
-    * `dropDuplicatesWithinWatermark`, the state-EXPIRING dedup API
+    * a training-data pipeline run incrementally — to an AT-REST parquet
+    * file sink (exactly-once via the sink's _spark_metadata commit log).
+    * Uses `dropDuplicatesWithinWatermark`, the state-EXPIRING dedup API
     * (plain streaming dropDuplicates keeps every key forever — a
     * guaranteed OOM on an unbounded 100 TB/day stream). The watermark
     * delay is DERIVED from the dataset's actual time span (one
@@ -629,61 +647,41 @@ object EventStream {
     * delay held that parity only while the data span stayed under it —
     * a larger corpus would have re-emitted expired keys and failed the
     * oracle non-obviously.) The first-arrival row wins; only the key
-    * columns are emitted, so the output set is arrival-order-independent. */
-  /** Streaming content-key dedup to an AT-REST parquet file sink
-    * (exactly-once via the sink's _spark_metadata commit log). The
-    * output is corpus-sized (every distinct key triple), so a memory
+    * columns are emitted, so the output set is arrival-order-independent.
+    *
+    * The output is corpus-sized (every distinct key triple), so a memory
     * sink holds ~N rows on the driver — measured at the r14 sf1→sf10
     * soak step as exponent 1.23 solo (34 s vs the 7.7 s the SAME
     * stream costs into a noop sink: the data path + state store scale
     * at 0.43; the driver-held sink was the whole regression). Same
     * fix class as r13's q_stream_bm25 pair-log: results land at rest,
-    * the registered op reads them back distributed. */
+    * the registered op reads them back distributed. `root` is reset on
+    * every fresh start: the file sink's commit log under `root/out`
+    * would otherwise skip the new query's batches. */
   def runDedupToParquet(
-      spark: SparkSession, dir: String, root: String): String =
-    withStreamShuffle(spark) {
-      val key = liveKey(spark, s"dedup_pq:$root", dir)
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // fresh run per session: a resumed checkpoint from a dead
-          // session's query would replay zero files into empty output
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
-          val spanDays = derivedWatermarkDays(spark, dir)
-          val qName = "q_stream_dedup_" + java.lang.Integer.toHexString(
-            root.hashCode & 0x7fffffff)
-          spark.streams.active
-            .filter(q => q.name != null && q.name == qName)
-            .foreach(_.stop())
-          val q = eventsStream(spark, dir)
-            .select(col("ts"), col("user_id"), col("event_type"),
-              round(col("value") * 100).cast("long").as("value_cents"))
-            .withWatermark("ts", s"$spanDays days")
-            .dropDuplicatesWithinWatermark(
-              "user_id", "event_type", "value_cents")
-            .select("user_id", "event_type", "value_cents")
-            .writeStream.outputMode(OutputMode.Append)
-            .format("parquet")
-            .queryName(qName)
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/checkpoint")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-      // a zero-batch run leaves no sink directory — seed a
-      // schema-correct empty one so the read side never throws
-      val rootFs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!rootFs.exists(new org.apache.hadoop.fs.Path(s"$root/out")))
-        graft.Tables.events(spark, dir).limit(0)
-          .select(col("user_id"), col("event_type"),
-            lit(0L).as("value_cents"))
-          .write.mode("overwrite").parquet(s"$root/out")
-      root
+      spark: SparkSession, dir: String, root: String): String = {
+    runLive(spark, "q_stream_dedup", dir, reset = Seq(root)) { (qName, ckpt) =>
+      val spanDays = derivedWatermarkDays(spark, dir)
+      eventsStream(spark, dir)
+        .select(col("ts"), col("user_id"), col("event_type"),
+          round(col("value") * 100).cast("long").as("value_cents"))
+        .withWatermark("ts", s"$spanDays days")
+        .dropDuplicatesWithinWatermark(
+          "user_id", "event_type", "value_cents")
+        .select("user_id", "event_type", "value_cents")
+        .writeStream.outputMode(OutputMode.Append)
+        .format("parquet")
+        .queryName(qName)
+        .option("path", s"$root/out")
+        .option("checkpointLocation", ckpt)
+        .start()
     }
+    seedIfEmpty(spark, s"$root/out", s"$root/out") {
+      graft.Tables.events(spark, dir).limit(0)
+        .select(col("user_id"), col("event_type"), lit(0L).as("value_cents"))
+    }
+    root
+  }
 
   /** Streaming INCREMENTAL near-dup dedup — the continuous-ingestion
     * twin of [[graft.operators.Dedup.dedupIncremental]]: delta
@@ -714,17 +712,13 @@ object EventStream {
     * (`sources/Bucketing.scala`); the stream side stays map-only. */
   def runIncrDedupToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.Dedup
       val mod = Dedup.IncrementalDeltaMod
       val delta = tableStream(spark, dir, "documents.parquet")
         .filter(col("doc_id") % mod === 0)
       incrDedupMatchLog(spark, dir, delta)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** The whole stream-side transform of [[runIncrDedupToMemory]]:
     * delta docs (doc_id, text, …) → verified match-log rows
@@ -804,16 +798,12 @@ object EventStream {
     * (`sources/Bucketing.scala`); the stream side stays map-only. */
   def runChunkDedupToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       val mod = graft.operators.Dedup.IncrementalDeltaMod
       val delta = tableStream(spark, dir, "documents.parquet")
         .filter(col("doc_id") % mod === 0)
       chunkProbeLog(spark, dir, delta)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** The whole stream-side transform of [[runChunkDedupToMemory]]:
     * delta docs (doc_id, text, …) → per-chunk probe rows against
@@ -845,7 +835,7 @@ object EventStream {
     * map + one static-side probe per row. */
   def runPplToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       val (model, _) =
         graft.operators.StreamingOps.standingPplModel(spark, dir)
       val delta = tableStream(spark, dir, "documents.parquet")
@@ -859,11 +849,7 @@ object EventStream {
         .join(model, Seq("lang", "w1", "w2"), "left")
         .select(col("doc_id"), col("lang"),
           coalesce(col("c12"), lit(0L)).as("c12"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Streaming LEARNED-quality scoring — the stream leg of the trained
     * gate ([[graft.operators.QualityModel]]): arriving documents score
@@ -877,15 +863,11 @@ object EventStream {
     * the per-token fold is exactly the batch group-by. */
   def runQualityScoreToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       val docs = tableStream(spark, dir, "documents.parquet")
         .select(col("doc_id"), col("text"))
       graft.operators.QualityModel.scoreRowLocal(spark, dir, docs)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Streaming sequence packing — the stream leg of the packing
     * triple on [[graft.operators.Curation.packContinuing]]'s kernel:
@@ -906,61 +888,40 @@ object EventStream {
     * own rows + a #sources-row broadcast; the standing corpus is never
     * rescanned, and yesterday's packed shards are never touched. */
   def runStreamPack(
-      spark: SparkSession, dir: String, root: String): String =
-    withStreamShuffle(spark) {
-      val key = liveKey(spark, s"pack:$root", dir)
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // fresh run per session: a resumed checkpoint from a dead
-          // session's query would replay zero files into empty output
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
-          graft.operators.Curation.standingPackHwm(spark, dir)
-            .select(col("source"), col("standing_tokens"))
-            .write.mode("overwrite").parquet(s"$root/hwm-seed")
-          val split = graft.operators.Curation.packSplitId(spark, dir)
-          val delta = tableStream(spark, dir, "documents.parquet")
-            .filter(col("doc_id") >= split)
-            .select(col("doc_id"), col("source"),
-              graft.functions.TextAnalysis.bpeishTokenCount(col("text"))
-                .cast("long").as("n_tokens"))
-          val qName = "q_stream_pack_" + java.lang.Integer.toHexString(
-            root.hashCode & 0x7fffffff)
-          // stop a stale same-named query a failed drain leaked —
-          // this branch resets its state anyway, and a duplicate-name
-          // start would otherwise wedge the op for the session
-          spark.streams.active
-            .filter(q => q.name != null && q.name == qName)
-            .foreach(_.stop())
-          val q = delta.writeStream
-            // named: anything enumerating spark.streams.active (the
-            // stateless-plan specs do) must never meet a null name
-            .queryName(qName)
-            .foreachBatch { (batch: DataFrame, b: Long) =>
-              val sb = batch.sparkSession
-              val committed = new org.apache.hadoop.fs.Path(
-                s"$root/hwm-$b/_SUCCESS")
-              if (!fs.exists(committed)) {
-                val prev =
-                  if (b == 0) s"$root/hwm-seed" else s"$root/hwm-${b - 1}"
-                val hwm = graft.Tables.parquet(sb, prev)
-                graft.operators.Curation.packContinuing(batch, hwm)
-                  .write.mode("overwrite").parquet(s"$root/packs-$b")
-                // advance from the AT-REST packs (one compute per batch)
-                graft.operators.Curation.advancePackHwm(
-                    hwm, graft.Tables.parquet(sb, s"$root/packs-$b"))
-                  .write.mode("overwrite").parquet(s"$root/hwm-$b")
-              }
-            }
-            .option("checkpointLocation", s"$root/checkpoint")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-      root
+      spark: SparkSession, dir: String, root: String): String = {
+    runLive(spark, "q_stream_pack", dir, reset = Seq(root)) { (qName, ckpt) =>
+      graft.operators.Curation.standingPackHwm(spark, dir)
+        .select(col("source"), col("standing_tokens"))
+        .write.mode("overwrite").parquet(s"$root/hwm-seed")
+      val split = graft.operators.Curation.packSplitId(spark, dir)
+      tableStream(spark, dir, "documents.parquet")
+        .filter(col("doc_id") >= split)
+        .select(col("doc_id"), col("source"),
+          graft.functions.TextAnalysis.bpeishTokenCount(col("text"))
+            .cast("long").as("n_tokens"))
+        .writeStream
+        // named: an enumeration of the session's active queries (the
+        // stateless-plan specs do one) must never meet a null name
+        .queryName(qName)
+        .foreachBatch { (batch: DataFrame, b: Long) =>
+          val sb = batch.sparkSession
+          unlessCommitted(sb, s"$root/hwm-$b") {
+            val prev =
+              if (b == 0) s"$root/hwm-seed" else s"$root/hwm-${b - 1}"
+            val hwm = graft.Tables.parquet(sb, prev)
+            graft.operators.Curation.packContinuing(batch, hwm)
+              .write.mode("overwrite").parquet(s"$root/packs-$b")
+            // advance from the AT-REST packs (one compute per batch)
+            graft.operators.Curation.advancePackHwm(
+                hwm, graft.Tables.parquet(sb, s"$root/packs-$b"))
+              .write.mode("overwrite").parquet(s"$root/hwm-$b")
+          }
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
     }
+    root
+  }
 
   // ------- continuous cluster maintenance (q_stream_incr_cc) -------
 
@@ -996,8 +957,18 @@ object EventStream {
     * re-checkpoint (one corpus-sized write) amortizes. */
   private[graft] val IncrCcCompactEvery = 8
 
-  private val incrCcStates = scala.collection.concurrent.TrieMap
+  /** Fold state per live-query key ([[liveKey]]), dropped by [[runLive]]
+    * when that key's query is restarted or found dead. */
+  private[graft] val incrCcStates = scala.collection.concurrent.TrieMap
     .empty[String, IncrCcState]
+
+  /** Drops the fold state held under `key` and releases the frames its
+    * fold chain checkpointed — never the shared standing-labels frame. */
+  private def releaseFoldState(key: String): Unit =
+    incrCcStates.remove(key).foreach { st =>
+      st.ownedSegs.foreach(graft.operators.SessionCache.releaseFrame)
+      if (st.ownsLabels) graft.operators.SessionCache.releaseFrame(st.labels)
+    }
 
   /** Initial fold state — the standing corpus' slice of the session
     * band index, its shingle sets, and its cluster labels. */
@@ -1099,26 +1070,19 @@ object EventStream {
   def runIncrCcLabels(
       spark: SparkSession, dir: String, queryName: String): DataFrame = {
     val key = liveKey(spark, queryName, dir)
-    withStreamShuffle(spark) {
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          incrCcStates(key) = incrCcInit(spark, dir)
-          val mod = graft.operators.Dedup.IncrementalDeltaMod
-          val arriving = tableStream(spark, dir, "documents.parquet")
-            .filter(col("doc_id") % mod === 0)
-          val q = arriving.writeStream
-            .queryName(liveTable(queryName, dir))
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              incrCcStates.updateWith(key)(_.map(incrCcFold(_, batch)))
-              ()
-            }
-            .option("checkpointLocation", s"$scratchRoot/$queryName-${
-              java.util.UUID.randomUUID()}")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
+    runLive(spark, queryName, dir) { (qName, ckpt) =>
+      incrCcStates(key) = incrCcInit(spark, dir)
+      val mod = graft.operators.Dedup.IncrementalDeltaMod
+      tableStream(spark, dir, "documents.parquet")
+        .filter(col("doc_id") % mod === 0)
+        .writeStream
+        .queryName(qName)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          incrCcStates.updateWith(key)(_.map(incrCcFold(_, batch)))
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
     }
     incrCcStates(key).labels
   }
@@ -1134,7 +1098,7 @@ object EventStream {
     * accumulates in the stream. */
   def runDriftToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.{Dedup, Retrieval, TextOps}
       val mod = Dedup.IncrementalDeltaMod
       tableStream(spark, dir, "documents.parquet")
@@ -1145,25 +1109,8 @@ object EventStream {
           (graft.functions.TextAnalysis.fingerprint(
             concat_ws(" ", col("bg.w1"), col("bg.w2")))
             % Retrieval.DsirDim).as("bucket"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
-  /** Streaming benchmark decontamination — the curation gate run at
-    * INGEST, the second demonstration (after [[runIncrDedupToMemory]])
-    * that the corpus-hygiene family is stateless against a fixed
-    * reference set. The benchmark suite is FIXED and small (MBs of eval
-    * text vs 100 TB/day of arriving train data), so its exploded
-    * distinct 8-grams BROADCAST; each arriving train doc explodes its
-    * own grams map-side and inner-joins the broadcast — the emitted
-    * match log (doc_id, g8, bench_doc_id) is exactly the batch op's
-    * pre-aggregation join, and the registered op rolls it up per doc in
-    * batch. No state store anywhere; per-batch cost is the batch's own
-    * grams × a broadcast probe, nothing accumulates. Rows are unique by
-    * construction (both gram lists are per-doc distinct), so the log
-    * needs no dedup before rollup. */
   /** Arrival-time ANN retrieval — the third stateless ingest pattern
     * (after the incremental-dedup probe and benchmark decontamination),
     * extending it from text to EMBEDDINGS: arriving vectors probe the
@@ -1178,16 +1125,12 @@ object EventStream {
     * map-only. */
   def runAnnProbeToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.Similarity
       val arrivals = tableStream(spark, dir, "embeddings.parquet")
         .filter(col("vec_id") % Similarity.StreamAnnMod === 0)
       Similarity.annProbeRows(spark, dir, arrivals)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Streaming probe of the TRAINED standing index — the stream leg
     * of the imiDelta triple (batch join form / persisted incremental
@@ -1203,50 +1146,28 @@ object EventStream {
     * sink it fed. The registered op's oracle is imiDelta's verbatim,
     * so the green row pins stream ≡ batch hash-exactly. */
   def runImiProbeToParquet(
-      spark: SparkSession, dir: String, root: String): String =
-    withStreamShuffle(spark) {
-      import graft.operators.Imi
-      val key = liveKey(spark, s"imiprobe:$root", dir)
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
-          val arrivals = tableStream(spark, dir, "embeddings.parquet")
-            .filter(col("vec_id") % Imi.DeltaMod === 0)
-          val qName = "q_stream_ann_tr_" + java.lang.Integer.toHexString(
-            root.hashCode & 0x7fffffff)
-          spark.streams.active
-            .filter(q => q.name != null && q.name == qName)
-            .foreach(_.stop())
-          val q = arrivals.writeStream
-            .queryName(qName)
-            .foreachBatch { (batch: DataFrame, b: Long) =>
-              val committed = new org.apache.hadoop.fs.Path(
-                s"$root/topk-$b/_SUCCESS")
-              if (!fs.exists(committed))
-                Imi.deltaProbeOf(batch.sparkSession, dir,
-                    imiQualified(batch))
-                  .write.mode("overwrite").parquet(s"$root/topk-$b")
-            }
-            .option("checkpointLocation", s"$root/checkpoint")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-      val rootFs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (Option(rootFs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$root/topk-*")))
-          .forall(_.isEmpty)) {
-        import graft.operators.Imi
-        Imi.deltaProbeOf(spark, dir,
-            imiQualified(graft.Tables.embeddings(spark, dir).limit(0)))
-          .write.mode("overwrite").parquet(s"$root/topk-0")
-      }
-      root
+      spark: SparkSession, dir: String, root: String): String = {
+    import graft.operators.Imi
+    runLive(spark, "q_stream_ann_tr", dir, reset = Seq(root)) { (qName, ckpt) =>
+      tableStream(spark, dir, "embeddings.parquet")
+        .filter(col("vec_id") % Imi.DeltaMod === 0)
+        .writeStream
+        .queryName(qName)
+        .foreachBatch { (batch: DataFrame, b: Long) =>
+          unlessCommitted(batch.sparkSession, s"$root/topk-$b") {
+            Imi.deltaProbeOf(batch.sparkSession, dir, imiQualified(batch))
+              .write.mode("overwrite").parquet(s"$root/topk-$b")
+          }
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
     }
+    seedIfEmpty(spark, s"$root/topk-*", s"$root/topk-0") {
+      Imi.deltaProbeOf(spark, dir,
+        imiQualified(graft.Tables.embeddings(spark, dir).limit(0)))
+    }
+    root
+  }
 
   /** [[graft.operators.Similarity.quantizedLabeled]]'s projection over
     * an arbitrary embeddings-shaped frame — the arrivals batch enters
@@ -1281,57 +1202,30 @@ object EventStream {
     * write is idempotent (_SUCCESS guard), same fresh-per-session root
     * discipline as [[runStreamPack]]. */
   def runBm25Probe(
-      spark: SparkSession, dir: String, root: String): String =
-    withStreamShuffle(spark) {
-      val key = liveKey(spark, s"bm25probe:$root", dir)
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          import graft.operators.TextOps
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // fresh run per session: a resumed checkpoint from a dead
-          // session's query would replay zero files into empty output
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
-          val arrivals = tableStream(spark, dir, "documents.parquet")
-            .filter(col("doc_id") % TextOps.Bm25QueryMod === 0)
-          val qName = "q_stream_bm25_" + java.lang.Integer.toHexString(
-            root.hashCode & 0x7fffffff)
-          spark.streams.active
-            .filter(q => q.name != null && q.name == qName)
-            .foreach(_.stop())
-          val q = TextOps.bm25ProbeRows(spark, dir, arrivals)
-            .writeStream
-            .queryName(qName)
-            .foreachBatch { (batch: DataFrame, b: Long) =>
-              val committed = new org.apache.hadoop.fs.Path(
-                s"$root/topk-$b/_SUCCESS")
-              if (!fs.exists(committed))
-                bm25TopkOf(batch)
-                  .write.mode("overwrite").parquet(s"$root/topk-$b")
-            }
-            .option("checkpointLocation", s"$root/checkpoint")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-      // zero micro-batches (no files / no query-doc arrivals) leave no
-      // topk-* directory and the consumer's read would throw
-      // path-not-found (ADVICE r14) — guarantee a schema-correct empty
-      // batch-0 artifact by pushing an empty static arrivals frame
-      // through the SAME probe + reduce pipeline
-      val rootFs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (Option(rootFs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$root/topk-*")))
-          .forall(_.isEmpty)) {
-        import graft.operators.TextOps
-        bm25TopkOf(TextOps.bm25ProbeRows(
-            spark, dir, graft.Tables.documents(spark, dir).limit(0)))
-          .write.mode("overwrite").parquet(s"$root/topk-0")
-      }
-      root
+      spark: SparkSession, dir: String, root: String): String = {
+    import graft.operators.TextOps
+    runLive(spark, "q_stream_bm25", dir, reset = Seq(root)) { (qName, ckpt) =>
+      val arrivals = tableStream(spark, dir, "documents.parquet")
+        .filter(col("doc_id") % TextOps.Bm25QueryMod === 0)
+      TextOps.bm25ProbeRows(spark, dir, arrivals)
+        .writeStream
+        .queryName(qName)
+        .foreachBatch { (batch: DataFrame, b: Long) =>
+          unlessCommitted(batch.sparkSession, s"$root/topk-$b") {
+            bm25TopkOf(batch).write.mode("overwrite").parquet(s"$root/topk-$b")
+          }
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
     }
+    // the seed pushes an empty static arrivals frame through the SAME
+    // probe + reduce pipeline (ADVICE r14)
+    seedIfEmpty(spark, s"$root/topk-*", s"$root/topk-0") {
+      bm25TopkOf(TextOps.bm25ProbeRows(
+        spark, dir, graft.Tables.documents(spark, dir).limit(0)))
+    }
+    root
+  }
 
   /** The per-micro-batch BM25 reduce: exact per-query score sum +
     * top-k, batch-local (a query's partials all share its arrival's
@@ -1348,9 +1242,22 @@ object EventStream {
       .filter(col("rnk") <= TextOps.Bm25K)
   }
 
+  /** Streaming benchmark decontamination — the curation gate run at
+    * INGEST, the second demonstration (after [[runIncrDedupToMemory]])
+    * that the corpus-hygiene family is stateless against a fixed
+    * reference set. The benchmark suite is FIXED and small (MBs of eval
+    * text vs 100 TB/day of arriving train data), so its exploded
+    * distinct 8-grams BROADCAST; each arriving train doc explodes its
+    * own grams map-side and inner-joins the broadcast — the emitted
+    * match log (doc_id, g8, bench_doc_id) is exactly the batch op's
+    * pre-aggregation join, and the registered op rolls it up per doc in
+    * batch. No state store anywhere; per-batch cost is the batch's own
+    * grams × a broadcast probe, nothing accumulates. Rows are unique by
+    * construction (both gram lists are per-doc distinct), so the log
+    * needs no dedup before rollup. */
   def runDecontaminateToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       val mod = graft.operators.Curation.BenchSplitMod
       val bench = broadcast(graft.operators.Curation.gramRows8(spark, dir)
         .filter(col("is_bench"))
@@ -1362,11 +1269,7 @@ object EventStream {
             .as("g8"))
       train.join(bench, Seq("g8"))
         .select(col("doc_id"), col("g8"), col("bench_doc_id"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** STATELESS streaming BPE encode — arriving delta documents are
     * tokenized against the STANDING tokenizer artifact
@@ -1386,7 +1289,7 @@ object EventStream {
     * 100 TB/day feed needs. */
   def runBpeEncodeToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.{Bpe, Dedup}
       val mrank = Bpe.mergeRankMapBucketed(Bpe.standingMerges(spark, dir))
       val words = regexp_extract_all(col("text"),
@@ -1404,11 +1307,7 @@ object EventStream {
             (acc, w) => acc + length(w)).as("n_chars"),
           aggregate(words, lit(0L),
             (acc, w) => acc + tokCount(w)).as("n_tokens"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** STATELESS streaming token-id emission — the dataloader artifact
     * ([[graft.operators.Bpe.bpeTokens]]'s law) computed AT ARRIVAL:
@@ -1430,7 +1329,7 @@ object EventStream {
     * the SHARED oracle on every verify run. */
   def runBpeTokensToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.{Bpe, Dedup}
       val mrank = Bpe.mergeRankMapBucketed(Bpe.standingMerges(spark, dir))
       val imap = Bpe.inventoryMapBucketed(Bpe.inventoryIds(spark, dir))
@@ -1453,11 +1352,7 @@ object EventStream {
             .as("n_unk"),
           aggregate(col("ids"), lit(0L),
             (acc, x) => (acc * 31 + x) % 1000000007L).as("ids_fp"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Streaming DSIR scoring — arriving documents scored against the
     * STANDING importance model at ingest ([[graft.operators.Retrieval
@@ -1473,7 +1368,7 @@ object EventStream {
     * selection-at-ingest. */
   def runDsirToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       import graft.operators.{Retrieval, TextOps}
       val dc = Retrieval.dsirDocCountsCached(spark, dir)
       val ratio = Retrieval.dsirRatio(dc)
@@ -1499,11 +1394,7 @@ object EventStream {
           col("p75"))
         .select(col("doc_id"), col("dsir_score"),
           (col("dsir_score") >= col("p75")).as("kept"))
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Watermarked STREAM-STREAM join — the attribution shape: every
     * (click, purchase) pair of the same user where the click precedes
@@ -1513,7 +1404,7 @@ object EventStream {
     * watermark − window can never match a future purchase and is
     * evicted — without the time bound the state grows forever and a
     * 100 TB/day stream OOMs. The watermark delay is DERIVED from the
-    * corpus's actual span (same anchor pattern as [[runDedupToMemory]]),
+    * corpus's actual span (same anchor pattern as [[runDedupToParquet]]),
     * which pins exact batch parity for the inner join regardless of how
     * many micro-batches the source splits into — exactly what the
     * DuckDB oracle (a plain self-join with the same interval predicate)
@@ -1522,7 +1413,7 @@ object EventStream {
 
   def runAttributionToMemory(
       spark: SparkSession, dir: String, queryName: String): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
+    runLive(spark, queryName, dir)(toMemory {
       val spanDays = derivedWatermarkDays(spark, dir)
       val stream = eventsStream(spark, dir)
       val clicks = stream.filter(col("event_type") === "click")
@@ -1535,75 +1426,55 @@ object EventStream {
           round(col("value") * 100).cast("long").as("purchase_cents"))
         .withWatermark("purchase_ts", s"$spanDays days")
       attributionJoin(clicks, purchases)
-        .writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    })
 
   /** Native session-window aggregation on the stream — the built-in
     * twin of the `mapGroupsWithState` sessionizer (which remains the
     * template for NON-aggregate session state): Spark merges per-key
     * events into gap-bounded sessions inside the state store, with
-    * map-side partial merging before the shuffle. Complete mode for the
-    * bounded smoke run (the deterministic choice — every session
-    * including still-open ones); production streams run Append with a
-    * real watermark and emit sessions as the watermark closes them.
-    * Boundary semantics: windows are half-open, so an event exactly
-    * `gap` after the previous one starts a NEW session (`>=` in the
-    * oracle, unlike the batch CTE's strict `>`). */
-  /** Streaming session windows to an AT-REST parquet store. Complete
-    * mode (the oracle-parity watermark is > span, so Append would
-    * emit nothing) cannot use the file sink — each data batch lands
-    * its full result via a foreachBatch overwrite instead (one
-    * distributed write; the default source triggers ONE data batch
-    * for a static corpus, and drains re-trigger nothing). The memory
-    * sink this replaces held the ~corpus-sized session table on the
-    * driver and re-scanned it per drain — the r14 sf1→sf10 soak
-    * measured exp 1.21 solo (13 s), the q_stream_dedup defect class. */
+    * map-side partial merging before the shuffle. Boundary semantics:
+    * windows are half-open, so an event exactly `gap` after the
+    * previous one starts a NEW session (`>=` in the oracle, unlike the
+    * batch CTE's strict `>`).
+    *
+    * The sessions land in an AT-REST parquet store. Complete mode (the
+    * deterministic choice for a bounded run — every session including
+    * still-open ones; the oracle-parity watermark is > span, so Append
+    * would emit nothing) cannot use the file sink — each data batch
+    * lands its full result via a foreachBatch overwrite instead (one
+    * distributed write; the default source triggers ONE data batch for
+    * a static corpus, and drains re-trigger nothing). Production
+    * streams run Append with a real watermark and emit sessions as the
+    * watermark closes them. The memory sink this replaces held the
+    * ~corpus-sized session table on the driver and re-scanned it per
+    * drain — the r14 sf1→sf10 soak measured exp 1.21 solo (13 s), the
+    * q_stream_dedup defect class. */
   def runSessionizeToParquet(
-      spark: SparkSession, dir: String, root: String): String =
-    withStreamShuffle(spark) {
-      val key = liveKey(spark, s"sessionize_pq:$root", dir)
-      liveQueries.get(key).filter(_.isActive) match {
-        case Some(q) => q.processAllAvailable()
-        case None =>
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
-          val qName = "q_stream_sessionize_" +
-            java.lang.Integer.toHexString(root.hashCode & 0x7fffffff)
-          spark.streams.active
-            .filter(q => q.name != null && q.name == qName)
-            .foreach(_.stop())
-          val q = eventsStream(spark, dir)
-            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(round(col("value") * 100).cast("long")).as("value_cents"))
-            .select(col("user_id"),
-              unix_micros(col("session_window.start")).as("start_us"),
-              unix_micros(col("session_window.end")).as("end_us"),
-              col("n_events"), col("value_cents"))
-            .writeStream.outputMode(OutputMode.Complete)
-            .queryName(qName)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(s"$root/out")
-            }
-            .option("checkpointLocation", s"$root/checkpoint")
-            .start()
-          q.processAllAvailable()
-          liveQueries(key) = q
-      }
-      val rootFs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!rootFs.exists(new org.apache.hadoop.fs.Path(s"$root/out")))
-        graft.Tables.events(spark, dir).limit(0)
-          .select(col("user_id"), lit(0L).as("start_us"),
-            lit(0L).as("end_us"), lit(0L).as("n_events"),
-            lit(0L).as("value_cents"))
-          .write.mode("overwrite").parquet(s"$root/out")
-      root
+      spark: SparkSession, dir: String, root: String): String = {
+    runLive(spark, "q_stream_sessionize", dir, reset = Seq(root)) { (qName, ckpt) =>
+      eventsStream(spark, dir)
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(round(col("value") * 100).cast("long")).as("value_cents"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("start_us"),
+          unix_micros(col("session_window.end")).as("end_us"),
+          col("n_events"), col("value_cents"))
+        .writeStream.outputMode(OutputMode.Complete)
+        .queryName(qName)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("overwrite").parquet(s"$root/out")
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
     }
+    seedIfEmpty(spark, s"$root/out", s"$root/out") {
+      graft.Tables.events(spark, dir).limit(0)
+        .select(col("user_id"), lit(0L).as("start_us"), lit(0L).as("end_us"),
+          lit(0L).as("n_events"), lit(0L).as("value_cents"))
+    }
+    root
+  }
 
   /** The join core, side-injectable for tests: `clicks` needs columns
     * (click_id, click_user, click_ts·watermarked), `purchases`
@@ -1626,15 +1497,9 @@ object EventStream {
   def runWindowedToMemory(
       spark: SparkSession, dir: String, queryName: String,
       mode: OutputMode = OutputMode.Complete): String =
-    runLiveToMemory(spark, queryName, dir) { (table, ckpt) =>
-      val stream = eventsStream(spark, dir)
-      // Complete mode emits every window including still-open ones — the
-      // deterministic choice for a bounded smoke run; production streams
-      // use Append, where the watermark finalizes windows incrementally.
-      windowedAgg(stream)
-        .writeStream.outputMode(mode)
-        .format("memory").queryName(table)
-        .option("checkpointLocation", ckpt)
-        .start()
-    }
+    // Complete mode emits every window including still-open ones — the
+    // deterministic choice for a bounded smoke run; production streams
+    // use Append, where the watermark finalizes windows incrementally.
+    runLive(spark, queryName, dir)(
+      toMemory(windowedAgg(eventsStream(spark, dir)), mode))
 }

@@ -3,8 +3,9 @@ package graft.tools
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool (not part of the engine surface): the one per-op profiler.
   * Each op is warmed once at sf0.001 (the `sf0.001` sibling of
@@ -12,11 +13,14 @@ import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
   * materialised with the `noop` sink as the benchmark harness does.
   * Per op it prints the min and all run times, the last run's Spark
   * jobs, stages and tasks, and one line per job: its milliseconds and
-  * its call site (the name Spark gives the job's result stage, e.g.
-  * `isEmpty at GraphOps.scala:<line>` — one per connected-components
-  * round, so iteration rounds are read off the job lines). AQE submits
-  * its shuffle-stage jobs from a pool thread, so those read
-  * `… at CompletableFuture.java:<line>`.
+  * its call site, e.g. `isEmpty at GraphOps.scala:<line>` (the
+  * connected-components convergence probe, so iteration rounds are
+  * read off the job lines). A job that runs for a SQL execution is
+  * named by that execution's description, the short call site of the
+  * action that started it: AQE submits its shuffle-stage jobs from a
+  * pool thread, where the result stage's name would read
+  * `… at CompletableFuture.java:<line>`. Any other job is named by its
+  * result stage.
   *
   *   sbt -batch "runMain graft.tools.Profile <sfDir> <op> [op...]"
   */
@@ -36,17 +40,28 @@ object Profile {
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     private val starts = new ConcurrentHashMap[Int, (Long, String)]
+    private val executions = new ConcurrentHashMap[Long, String]
     val ended = new ConcurrentLinkedQueue[Job]
 
     def reset(): Unit = {
       started.set(0); stages.set(0); tasks.set(0)
-      starts.clear(); ended.clear()
+      starts.clear(); executions.clear(); ended.clear()
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart if s.description != null =>
+        executions.put(s.executionId, s.description): Unit
+      case _ => ()
     }
 
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       started.incrementAndGet()
+      val execution = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(executions.get(id.toLong)))
       // the result stage is created after its parents: the highest id
-      val site = j.stageInfos.maxByOption(_.stageId).fold("")(_.name)
+      val site = execution.getOrElse(
+        j.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       starts.put(j.jobId, (j.time, site))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
